@@ -172,8 +172,8 @@ object Bench {
         f"[bench] warm-up $name%-26s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     }
     // r19: the serial staging-first phase is gone — shared memos are now
-    // SINGLE-FLIGHT (graft.functions.SingleFlight), so N workers hitting
-    // the cold Warehouse memo no longer compute the ETL chain N times:
+    // SINGLE-FLIGHT (graft.AppCache), so N workers hitting the cold
+    // Warehouse memo no longer compute the ETL chain N times:
     // the first blocks the rest, and workers whose entries don't touch
     // the Warehouse (media, embeddings, events fixtures) fill the cores
     // the old serial phase left idle (~20 s of the warm-up wall, measured

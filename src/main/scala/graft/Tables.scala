@@ -80,12 +80,9 @@ object Tables {
     // paid on EVERY composition of every spread consumer. The answer is
     // stable within an application (fixture datasets are immutable), so
     // one probe per distinct probed plan suffices.
-    val parts = probeMemo.getOrElseUpdate(
-      (df.sparkSession.sparkContext.applicationId, p.semanticHash()),
-      p.rdd.getNumPartitions)
+    val parts = probes(df.sparkSession, p.semanticHash())(p.rdd.getNumPartitions)
     if (parts < target) df.repartition(target, key) else df
   }
 
-  private val probeMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Int]
+  private val probes = AppCache.namespace[Int, Int]("tables.spread_probes")
 }

@@ -144,7 +144,7 @@ object Transform {
   }
 
   private val roundtripDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+    graft.AppCache.namespace[String, String]("transform.roundtrip_dirs")
 
   /** The S4/S6 write path as an oracle-checked query: run the full
     * [[writeWarehouse]] (Overwrite + (year, month) partitioning), read
@@ -154,11 +154,11 @@ object Transform {
     * the write happens once per (session, sf-dir); later calls only
     * re-read. */
   def factRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = roundtripDirs.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    val out = roundtripDirs(spark, dir) {
       val d = graft.ext.Dfs.scratchDir(spark, "graft_wh_roundtrip")
       writeWarehouse(spark, dir, d)
       d
-    })
+    }
     spark.read.parquet(s"$out/fact_sales")
       .select("invoice_no", "product_key", "customer_key", "date_key",
         "invoice_date", "quantity", "unit_price", "total_amount")

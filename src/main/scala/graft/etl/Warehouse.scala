@@ -1,7 +1,5 @@
 package graft.etl
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -29,13 +27,16 @@ final case class Warehouse(
 
 object Warehouse {
 
-  private val cache = TrieMap.empty[(String, String), () => Warehouse]
+  /** Keyed by sf-dir; released stages are unpersisted (the
+    * [[graft.AppCache]] evict precondition applies). */
+  private val cache = graft.AppCache.namespace[String, Warehouse]("warehouse",
+    release = wh => Seq(wh.fact, wh.dimDate, wh.dimCustomer, wh.dimProduct,
+      wh.cleaned, wh.staging).foreach(_.unpersist(blocking = false)))
 
   def apply(spark: SparkSession, dir: String): Warehouse = {
     // single-flight: N warm-up workers hitting a cold memo must not each
-    // run the whole ETL build (graft.functions.SingleFlight doc)
-    val wh = graft.functions.SingleFlight(cache,
-      (spark.sparkContext.applicationId, dir))(build(spark, dir))
+    // run the whole ETL build
+    val wh = cache(spark, dir)(build(spark, dir))
     // The memo is APP-scoped but a DataFrame is bound to the session that
     // analyzed it: hand a sibling session (bench warm-up workers) frames
     // re-rooted onto ITS session, or temp views / SQL-function
@@ -47,33 +48,6 @@ object Warehouse {
     if (wh.staging.sparkSession eq spark) wh
     else Warehouse(rb(wh.staging), rb(wh.cleaned), rb(wh.dimProduct),
       rb(wh.dimCustomer), rb(wh.dimDate), rb(wh.fact))
-  }
-
-  /** Evict this session's cached warehouse stages (and the rank
-    * intermediates they pin) — the release path for long-lived sessions.
-    * Rebuilds transparently on next [[apply]].
-    *
-    * PRECONDITION: no still-unmaterialized consumer of a PRE-evict
-    * DataFrame may run afterwards. Eviction chains
-    * [[graft.functions.Keys.release]], and a stale ranked lineage that
-    * recomputes after its range-partitioned intermediate is unpersisted
-    * re-samples partition boundaries under a new RDD id — partition ids
-    * can then disagree with the already-collected rank offsets and
-    * silently corrupt surrogate keys. Call evict only at a quiescent
-    * point (outputs written or collected); AFTER evict, obtain fresh
-    * frames via [[apply]] — never re-run held references. The
-    * evict-then-reuse contract is exercised by TransformSpec. */
-  def evict(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    cache.keys.filter(_._1 == app).foreach { k =>
-      cache.remove(k).foreach { h =>
-        val wh = h()
-        Seq(wh.fact, wh.dimDate, wh.dimCustomer, wh.dimProduct, wh.cleaned, wh.staging)
-          .foreach(_.unpersist(blocking = false))
-      }
-    }
-    graft.functions.Keys.release(spark)
-    graft.functions.Memo.evict(spark)
   }
 
   private def build(spark: SparkSession, dir: String): Warehouse = {

@@ -266,11 +266,11 @@ object Dfs {
     * scale-factor roots ending in the same leaf, and a dataset
     * regenerated in place without a recompile would otherwise serve
     * stale fixtures to Bench (which, unlike Verify, has no oracle hash
-    * to catch it). Memoized per (process, dataset). */
+    * to catch it). Memoized per (application, dataset). */
   private val datasetKeys =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    graft.AppCache.namespace[String, String]("dfs.dataset_keys")
   def datasetKey(spark: SparkSession, d: String): String =
-    datasetKeys.computeIfAbsent(d, { d =>
+    datasetKeys(spark, d) {
       val q = qualified(spark, d)
       val fp = scala.util.Try {
         fs(spark, q).listStatus(new Path(q)).toSeq
@@ -280,7 +280,7 @@ object Dfs {
       java.security.MessageDigest.getInstance("SHA-256")
         .digest(s"$q|$fp".getBytes("UTF-8"))
         .take(6).map(b => f"$b%02x").mkString
-    })
+    }
 
   /** Build-once gate for a fixture shared ACROSS processes: the
     * `_done` marker means "built and immutable — read freely"; the

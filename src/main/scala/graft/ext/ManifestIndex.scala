@@ -941,8 +941,9 @@ object ManifestFileIndex {
   * unreachable on the append chain (a data file's tuples live in
   * exactly one segment of a version's list). */
 private[ext] object PurityCache {
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Map[String, Option[Seq[Any]]]]
+  private val cache = graft.AppCache.namespace[String,
+    Map[String, Option[Seq[Any]]]]("manifest_index.purity",
+    bound = SidecarCache.maxEntries)
 
   /** Test hooks: how many FULL sidecar folds vs incremental
     * (delta-only) folds this process has paid. */
@@ -957,17 +958,15 @@ private[ext] object PurityCache {
   def perFileTuples(spark: SparkSession, pcols: Seq[String],
       segs: Seq[String]): Option[Map[String, Option[Seq[Any]]]] = {
     if (segs.isEmpty) return Some(Map.empty)
-    if (cache.size > SidecarCache.maxEntries) cache.clear()
-    val app = spark.sparkContext.applicationId
-    val k = (app, key(pcols, segs))
-    cache.get(k).orElse {
+    val k = key(pcols, segs)
+    cache.peek(spark, k).orElse {
       // incremental: appends extend the parent's segment list by a
       // suffix — find the longest cached prefix within a few steps
       // (one per append between scans) and fold only the delta
       val fromPrefix = (1 to 4).iterator
         .filter(_ < segs.length)
         .flatMap { i =>
-          cache.get((app, key(pcols, segs.dropRight(i)))).map { bm =>
+          cache.peek(spark, key(pcols, segs.dropRight(i))).map { bm =>
             foldOf(spark, pcols, segs.takeRight(i)).map { dm =>
               incrementalFolds += 1
               (bm.keySet ++ dm.keySet).iterator.map { f =>
@@ -985,7 +984,7 @@ private[ext] object PurityCache {
         fullFolds += 1
         foldOf(spark, pcols, segs)
       }
-      result.foreach(cache.put(k, _))
+      result.foreach(cache.put(spark, k, _))
       result
     }
   }
@@ -1025,32 +1024,25 @@ private[ext] object PurityCache {
   * the memo clears itself past [[SidecarCache.maxEntries]] — a cache,
   * not a ledger; entries rebuild on next plan. */
 private[ext] object SidecarCache {
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (StructType, Array[org.apache.spark.sql.Row])]
-
   /** Evict-all safety valve: per-key bloom rows are ~bits/8 bytes per
     * file, so an unbounded memo on a many-table session could hold GBs.
     * 256 path-sets ≈ hundreds of planned (table, version) pairs. */
   val maxEntries = 256
 
+  private[ext] val cache = graft.AppCache.namespace[String,
+    (StructType, Array[org.apache.spark.sql.Row])]("manifest_index.sidecars",
+    bound = maxEntries)
+
   def localDf(spark: SparkSession,
       paths: Seq[String]): org.apache.spark.sql.DataFrame = {
-    if (cache.size > maxEntries) cache.clear()
-    val key = (spark.sparkContext.applicationId,
-      paths.map(Dfs.canonical).sorted.mkString("\n"))
-    val (sch, rows) = cache.getOrElseUpdate(key, {
+    val (sch, rows) = cache(spark, paths.map(Dfs.canonical).sorted.mkString("\n")) {
       // mergeSchema: sidecar SEGMENTS can straddle a stats-schema
       // widening (e.g. per-file sums added later) — the union schema
       // null-fills older segments deterministically instead of
       // whichever file the reader happens to sample
       val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
       (df.schema, df.collect())
-    })
+    }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), sch)
-  }
-
-  def evict(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    cache.keys.filter(_._1 == app).foreach(cache.remove)
   }
 }

@@ -125,28 +125,19 @@ object Manifests {
     * memo key only needs to survive the one mutation that can reuse a
     * (base, version) pair — DROP TABLE + recreate at the same location
     * — which the `_manifest` file's (mtime, length) disambiguates
-    * (an in-process drop additionally evicts via [[evictBase]]; the
+    * (an in-process drop additionally evicts `base`'s entries; the
     * marker alone can tie within the filesystem's mtime granularity).
     * A flatten rewrites `_manifest` and so changes the key — that's a
-    * harmless cache miss, never a stale hit. Bounded clear-all cache:
-    * entries rebuild on the next resolve. */
-  private val filesMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Long, Long), Seq[String]]
-
-  /** Drop every memoized resolution under `base` — called by DROP
-    * TABLE so a same-process recreate at the same location can never
-    * be served the dropped table's file list, whatever the
-    * filesystem's timestamp granularity. */
-  private[graft] def evictBase(base: String): Unit =
-    filesMemo.keysIterator.filter(_._2 == base)
-      .foreach(filesMemo.remove(_))
-
-  /** Test hook: model a FRESH process (crash-recovery readers start
-    * with an empty memo). */
-  private[graft] def evictResolvedManifests(): Unit = filesMemo.clear()
+    * harmless cache miss, never a stale hit. Bounded clear-all cache: past 4M resolved paths
+    * (a few 100TB-scale lists, ~100 B × 800k paths each) it clears long
+    * before it threatens the driver heap, while a session touching many
+    * SMALL tables never thrashes; entries rebuild on the next resolve. */
+  private[graft] val filesMemo = graft.AppCache
+    .namespace[(String, Int, Long, Long), Seq[String]]("manifests.files",
+      bound = 4000000L, weigh = _.size.toLong)
 
   private def filesMemoKey(spark: SparkSession, base: String,
-      n: Int): Option[(String, String, Int, Long, Long)] =
+      n: Int): Option[(String, Int, Long, Long)] =
     // ONE metadata RPC per probe: stat the manifest itself. Keying on
     // the manifest (not `_SUCCESS`) is safe — a memo entry only exists
     // after a successful resolve, and an uncached resolve still
@@ -154,7 +145,7 @@ object Manifests {
     // crash window `_manifest` may be momentarily absent (`.flat`
     // recovery serves reads) — the resolve just runs uncached.
     Dfs.statOf(spark, s"$base/v$n/_manifest").map { case (mt, len) =>
-      (spark.sparkContext.applicationId, base, n, mt, len)
+      (base, n, mt, len)
     }
 
   def files(spark: SparkSession, base: String, v: Int): Seq[String] = {
@@ -196,7 +187,8 @@ object Manifests {
         layers = cur.tail :: layers
         // an already-resolved ancestor short-circuits the walk: an
         // append-heavy chain re-resolves in O(new layers), not O(chain)
-        memoBase = filesMemoKey(spark, base, p).flatMap(filesMemo.get)
+        memoBase = filesMemoKey(spark, base, p)
+          .flatMap(filesMemo.peek(spark, _))
         if (memoBase.isEmpty) cur = lines(p)
       }
       val baseList = memoBase.getOrElse(cur)
@@ -213,16 +205,7 @@ object Manifests {
       }
     }
     filesMemoKey(spark, base, v) match {
-      case Some(key) =>
-        // byte-ish bound, not an entry count: a session touching many
-        // SMALL tables (the common case — every list here is a few
-        // dozen paths) must not thrash the memo into re-resolving
-        // every composition, while a few 100TB-scale lists (~100 B ×
-        // 800k paths each) still trip the clear long before the memo
-        // threatens the driver heap
-        if (filesMemo.valuesIterator.map(_.size.toLong).sum > 4000000L)
-          filesMemo.clear()
-        filesMemo.getOrElseUpdate(key, resolve(v))
+      case Some(key) => filesMemo(spark, key)(resolve(v))
       case None => resolve(v) // loud "never committed" from lines(v)
     }
   }
@@ -2083,8 +2066,9 @@ object Manifests {
     liveRead(spark, files(spark, base, v), dvFiles(spark, base, v),
       schemaOf(spark, base, v), renamesOf(spark, base, v), keepPos = true)
 
-  private val dvPosCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Map[String, Array[Long]]]
+  private val dvPosCache = graft.AppCache
+    .namespace[String, Map[String, Array[Long]]]("manifests.dv_positions",
+      bound = 16)
 
   /** Sidecar-recorded file spelling → recorded positions for an
     * (immutable) sidecar SET — same build-once-per-session rationale
@@ -2093,10 +2077,7 @@ object Manifests {
     * certify smallness (footer record counts) before asking. */
   private def dvPositions(spark: SparkSession, dvs: Seq[String])
       : Map[String, Array[Long]] = {
-    if (dvPosCache.size > 16) dvPosCache.clear()
-    val key = (spark.sparkContext.applicationId,
-      dvs.map(Dfs.canonical).sorted.mkString("\n"))
-    dvPosCache.getOrElseUpdate(key, {
+    dvPosCache(spark, dvs.map(Dfs.canonical).sorted.mkString("\n")) {
       val buf = scala.collection.mutable.HashMap
         .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
       spark.read.schema("__file STRING, __pos BIGINT").parquet(dvs: _*)
@@ -2105,11 +2086,12 @@ object Manifests {
             new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(1)
         }
       buf.iterator.map { case (f, b) => (f, b.result()) }.toMap
-    })
+    }
   }
 
-  private val dvScanIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Option[Map[String, Array[Long]]]]
+  private val dvScanIndexCache = graft.AppCache
+    .namespace[String, Option[Map[String, Array[Long]]]](
+      "manifests.dv_scan_index", bound = 16)
 
   /** The whole-version deletion-vector bitmap index for the COLUMNAR
     * catalog scan: canonical data-file path → deleted-position bitmap
@@ -2124,10 +2106,7 @@ object Manifests {
   private[graft] def dvScanIndex(spark: SparkSession,
       dvs: Seq[String]): Option[Map[String, Array[Long]]] = {
     if (dvs.isEmpty) return Some(Map.empty)
-    if (dvScanIndexCache.size > 16) dvScanIndexCache.clear()
-    val key = (spark.sparkContext.applicationId,
-      dvs.map(Dfs.canonical).sorted.mkString("\n"))
-    dvScanIndexCache.getOrElseUpdate(key, {
+    dvScanIndexCache(spark, dvs.map(Dfs.canonical).sorted.mkString("\n")) {
       val dv = spark.read.parquet(dvs: _*)
       val perFile = dv.groupBy("__file")
         .agg(max(col("__pos")).as("mx"), count(lit(1)).as("n")).collect()
@@ -2150,7 +2129,7 @@ object Manifests {
           }
         Some(m.iterator.map { case (k, bs) => (k, bs.toLongArray) }.toMap)
       }
-    })
+    }
   }
 
   def readLatest(spark: SparkSession, base: String): DataFrame =
@@ -3640,20 +3619,17 @@ object Manifests {
     * rewrite cost is ∝ the hot partition's small-file backlog. */
   /** Immutable-file size memo for the auto-compact census: data files
     * are never rewritten in place (every write lands a fresh path), so
-    * a (canonical path → length) entry is valid for the process
+    * a (canonical path → length) entry is valid for the application's
     * lifetime. Keeps the per-append census at O(new files) metadata
     * RPCs instead of O(table) — the doc'd "manifest/sidecar arithmetic
     * only" promise. Crudely bounded: a pathological many-table process
     * resets rather than growing without limit. */
-  private val fileSizeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val fileSizeCache = graft.AppCache
+    .namespace[String, Long]("manifests.file_sizes", bound = 262144)
 
   private def sizeOfCached(spark: SparkSession, f: String): Long = {
-    if (fileSizeCache.size > 262144) fileSizeCache.clear()
     val k = Dfs.canonical(f)
-    val hit = fileSizeCache.get(k)
-    if (hit != null) hit.longValue()
-    else Dfs.statOf(spark, f).map(_._2) match {
+    fileSizeCache.peek(spark, k).getOrElse(Dfs.statOf(spark, f).map(_._2) match {
       // a MISS (transient FS error, listing race) is never cached: a
       // permanent 0 would misclassify a large file as small in every
       // future census on this JVM and re-"compact" it pointlessly.
@@ -3661,8 +3637,8 @@ object Manifests {
       // which at worst includes it in one rewrite — bounded, and the
       // next census re-stats it.
       case None => 0L
-      case Some(v) => fileSizeCache.put(k, v); v
-    }
+      case Some(v) => fileSizeCache.put(spark, k, v); v
+    })
   }
 
   private def maybeAutoCompact(spark: SparkSession, base: String): Unit = {
@@ -3874,18 +3850,10 @@ object Manifests {
 
   def changesBetween(spark: SparkSession, base: String,
       from: Int, to: Int): DataFrame = {
-    val __t0 = System.nanoTime(); def __lap(tag: String, since: Long): Long = {
-      val n = System.nanoTime()
-      if (sys.env.contains("GRAFT_CB_PROF"))
-        System.err.println(f"[cbprof] $tag%-16s ${(n - since) / 1e6}%8.2f ms")
-      n
-    }
     val fa = files(spark, base, from).map(Dfs.canonical)
     val fb = files(spark, base, to).map(Dfs.canonical)
-    val __t1 = __lap("files", __t0)
     val dvA = dvFiles(spark, base, from)
     val dvB = dvFiles(spark, base, to)
-    val __t2 = __lap("dvFiles", __t1)
     val onlyA = fa.filterNot(fb.toSet)
     val onlyB = fb.filterNot(fa.toSet)
     val shared = fa.toSet.intersect(fb.toSet)
@@ -3910,7 +3878,6 @@ object Manifests {
             .filter(x => x.v == ev && x.from == f && x.to == t)
             .flatMap(_.preFiles)).distinct)
       }.sortBy(_.v)
-    val __t3 = __lap("renames", __t2)
     val renamedInRange = renames.exists(e => e.v > from && e.v <= to)
     // both sides read under the UNION schema so an evolution commit
     // diffs cleanly: an old row's null-filled image on one side equals
@@ -3925,7 +3892,6 @@ object Manifests {
       case (a, b) => a.orElse(b)
         .getOrElse(spark.read.parquet(fa.head).schema) // one footer read
     }
-    val __t4 = __lap("schema", __t3)
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     // each side's unique files read under ITS version's vectors, so a
@@ -3948,7 +3914,6 @@ object Manifests {
     // boundary files, not the rewrite's whole footprint.
     val (aOv, aDis, bOv, bDis) =
       overlapPartition(spark, base, from, to, onlyA, onlyB)
-    val __t5 = __lap("overlap", __t4)
     // the two directions of the content diff share one cancellation
     // structure: for each distinct row value with na copies on the
     // from-side and nb on the to-side, min(na, nb) cancel — deletes
@@ -4024,7 +3989,6 @@ object Manifests {
         // flip a sign either, so the one-sided shapes skip the netting
         // entirely (bitmap set() is idempotent, the semi-join is a set
         // probe); only the genuinely two-sided shape cancels.
-        val __d0 = System.nanoTime()
         val oneSided = dvAu.isEmpty || dvBu.isEmpty
         // SMALL churn — total delta-sidecar positions certified by
         // parquet footer metadata (exact row counts, no data read) to
@@ -4039,7 +4003,6 @@ object Manifests {
           (dvAu ++ dvBu).foldLeft(Option(0L)) { (acc, p) =>
             acc.flatMap(a => Dfs.parquetRecords(spark, p).map(a + _))
           }
-        val __df = __lap("dv:footers", __d0)
         val localNet: Option[Map[(Int, String), Seq[Long]]] =
           dvRecs.filter(r => r > 0L && r <= maxIdxBytes / 64).map { _ =>
             if (oneSided) {
@@ -4089,14 +4052,12 @@ object Manifests {
               .filter(col("__imb") =!= 0L)
               .persist()
         }
-        val __d1 = __lap("dv:compose", __df)
         try {
           // one stats pass + one collect build BOTH directions'
           // touched-file lists and bitmap probes (vs a per-direction
           // distinct collect plus dvMembershipColumn's two collects);
           // ZERO jobs when the driver-side cancellation ran
           val churn = dvChurnIndex(spark, imb, local = localNet)
-          val __d2 = __lap("dv:churnIdx", __d1)
           def rowsAt(dir: Int): DataFrame = churn.get(dir) match {
             case None => empty
             case Some((touchedAll, probe)) =>
@@ -4120,19 +4081,14 @@ object Manifests {
                 }
               }
           }
-          val __rr = (rowsAt(1), rowsAt(-1))
-          __lap("dv:rowsAt", __d2)
-          __rr
+          (rowsAt(1), rowsAt(-1))
         } finally { imb.unpersist(); () }
       }
-    val __t6 = __lap("sides+dv", __t5)
-    val __r = fileInserts.unionByName(dvInserts)
+    fileInserts.unionByName(dvInserts)
       .withColumn("_change_type", lit("insert"))
       .unionByName(
         fileDeletes.unionByName(dvDeletes)
           .withColumn("_change_type", lit("delete")))
-    __lap("union", __t6); __lap("TOTAL", __t0)
-    __r
   }
 
   /** [[changesBetween]] with provenance where attribution is
@@ -5827,7 +5783,7 @@ object Manifests {
         .exists(f => Dfs.qualified(spark, f).startsWith(prefix)))
     if (!referenced && Dfs.exists(spark, bb)) {
       Dfs.delete(spark, bb, recursive = true)
-      evictBase(bb)
+      filesMemo.evict(spark, _._1 == bb)
     }
     !referenced
   }

@@ -195,8 +195,13 @@ object Skipping {
     "pk" -> pmod(col("l_partkey"), lit(65536L)),
     "sk" -> pmod(col("l_suppkey"), lit(65536L)))
 
+  /** Clustered-copy/stats registrations per sf-dir. An evict
+    * ([[graft.AppCache.evictAll]]) makes the next call rebuild both under
+    * the CURRENT partitioning — DeterminismSpec uses this to prove the
+    * pruned answer doesn't depend on how the layout write was
+    * parallelized. */
   private val fixtures =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
+    graft.AppCache.namespace[String, (String, String)]("skipping.fixtures")
 
   /** Incremental stats maintenance — the zone-map index must not cost
     * a full-table scan per refresh on a table that only APPENDS: stats
@@ -228,26 +233,17 @@ object Skipping {
   private def dataFileNames(spark: SparkSession, path: String): Seq[String] =
     Dfs.dataFiles(spark, path).map(s => Dfs.canonical(s.getPath.toString))
 
-  /** [[graft.Caches]] hook: forget this session's clustered-copy/stats
-    * registration so the next call rebuilds both under the CURRENT
-    * partitioning — DeterminismSpec uses this to prove the pruned
-    * answer doesn't depend on how the layout write was parallelized. */
-  def evictFixtures(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    fixtures.keys.filter(_._1 == app).foreach(fixtures.remove)
-  }
-
   /** One-time per (session, sf-dir): write the z-clustered lineitem
     * copy and commit its zone maps as [[Snapshots]] version 0 of the
     * stats table. Returns (clustered dir, stats base). */
   private def clusteredWithStats(spark: SparkSession, dir: String): (String, String) =
-    fixtures.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    fixtures(spark, dir) {
       val data = Dfs.scratchDir(spark, "graft_skip_data")
       val stats = s"${Dfs.scratchDir(spark, "graft_skip_stats")}/zones"
       Layout.writeClustered(spark, dir, data)
       Snapshots.commit(buildStats(spark.read.parquet(data), zoneKeys), stats)
       (data, stats)
-    })
+    }
 
   /** Registered query: a grouped aggregate over the 2-D box predicate,
     * answered from the PRUNED read of the clustered copy. Every row of

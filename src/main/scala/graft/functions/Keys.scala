@@ -30,21 +30,16 @@ import org.apache.spark.storage.StorageLevel
 object Keys {
 
   /** Persisted range-partitioned intermediates, tracked per application so
-    * long-lived sessions have a release path ([[release]]). The persist
-    * itself is CORRECTNESS-load-bearing, not an optimization: a fresh
-    * evaluation of `repartitionByRange` re-samples boundaries under a new
-    * RDD id, so recomputed partition ids could disagree with the already
-    * collected offsets and silently corrupt ranks. Only release once every
-    * consumer of the ranked output is durably materialized (written to a
-    * sink, or its own cache fully built). */
-  private val tracked =
-    scala.collection.concurrent.TrieMap.empty[String, List[DataFrame]]
-
-  /** Unpersist all rank intermediates of this session. Safe only after
-    * downstream outputs are materialized — see [[tracked]]. */
-  def release(spark: org.apache.spark.sql.SparkSession): Unit =
-    tracked.remove(spark.sparkContext.applicationId)
-      .foreach(_.foreach(_.unpersist(blocking = false)))
+    * long-lived sessions have a release path ([[graft.AppCache.evictAll]]).
+    * The persist itself is CORRECTNESS-load-bearing, not an optimization:
+    * a fresh evaluation of `repartitionByRange` re-samples boundaries under
+    * a new RDD id, so recomputed partition ids could disagree with the
+    * already collected offsets and silently corrupt ranks. Hence the
+    * namespace is UNBOUNDED (it must never clear on a bound), and an evict
+    * is safe only once every consumer of the ranked output is durably
+    * materialized (written to a sink, or its own cache fully built). */
+  private val tracked = graft.AppCache.namespace[DataFrame, DataFrame](
+    "keys.ranked", release = _.unpersist(blocking = false))
 
   def withRank(df: DataFrame, out: String, keys: Seq[String]): DataFrame = {
     val keyCols: Seq[Column] = keys.map(col)
@@ -53,10 +48,7 @@ object Keys {
       .withColumn("_pid", spark_partition_id())
       // persist so the pid seen by the counts job and the main job agree
       .persist(StorageLevel.MEMORY_AND_DISK)
-    tracked.updateWith(df.sparkSession.sparkContext.applicationId) {
-      case Some(l) => Some(parted :: l)
-      case None => Some(parted :: Nil)
-    }
+    tracked.put(df.sparkSession, parted, parted)
     val counts: Array[(Int, Long)] = parted
       .groupBy("_pid").agg(count(lit(1)).as("_n"))
       .collect()

@@ -1,7 +1,5 @@
 package graft.functions
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -10,30 +8,34 @@ import org.apache.spark.storage.StorageLevel
   * analogue of [[graft.etl.Warehouse]]: several registered queries fan out
   * from the same intermediate, and recomputing a shingle explosion per
   * query is the batch-job equivalent of a cache miss on every call. The
-  * persisted plan spills to disk rather than OOMing, and the cache key is
-  * scoped to the SparkSession so tests and verify runs never cross-talk. */
+  * persisted plan spills to disk rather than OOMing, and the
+  * [[graft.AppCache]] key is scoped to the application so tests and
+  * verify runs never cross-talk. */
 object Memo {
 
-  private val cache = TrieMap.empty[(String, String, String), () => DataFrame]
+  private val cache = graft.AppCache.namespace[(String, String), DataFrame](
+    "memo", release = releaseFrame)
+
+  /** Frees a memoized frame's blocks: the frame's own persist AND every
+    * localCheckpoint'd leaf it reads (e.g.
+    * [[graft.operators.Dedup.connectedComponents]]' final-round labels).
+    * `DataFrame.unpersist` is a no-op for checkpoints (they never register
+    * with the CacheManager) — their blocks belong to the materialized RDD
+    * inside the LogicalRDD leaf, so unpersist THAT. */
+  private[graft] def releaseFrame(df: DataFrame): Unit = {
+    df.unpersist(blocking = false)
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+  }
 
   def apply(spark: SparkSession, dir: String, name: String)(build: => DataFrame): DataFrame =
     // rebind: the memo is app-scoped, the frame session-bound — a sibling
     // session (bench warm-up workers) gets the plan re-rooted onto its own
     // session; the app-shared cache manager still serves the persisted
     // blocks via canonicalized-plan match (SessionShim.rebind doc).
-    // Single-flight: concurrent warm-up workers on a cold key must not
-    // each run the build (SingleFlight doc).
     org.apache.spark.sql.graft.SessionShim.rebind(spark,
-      SingleFlight(cache, (spark.sparkContext.applicationId, dir, name))(
-        build.persist(StorageLevel.MEMORY_AND_DISK)))
-
-  /** Evict this session's memoized intermediates (long-lived sessions that
-    * cycle through many sf-dirs would otherwise accumulate storage without
-    * bound). Entries rebuild transparently on next use. */
-  def evict(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    cache.keys.filter(_._1 == app).foreach { k =>
-      cache.remove(k).foreach(h => h().unpersist(blocking = false))
-    }
-  }
+      cache(spark, (dir, name))(build.persist(StorageLevel.MEMORY_AND_DISK)))
 }

@@ -425,7 +425,7 @@ object Corpus {
       | WHERE bucket < rate_pct ORDER BY doc_id""".stripMargin
 
   private val indexDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+    graft.AppCache.namespace[String, String]("corpus.digest_index_dirs")
 
   /** Persisted DIGEST INDEX over the existing corpus — the state that
     * makes [[appendBatch]] genuinely incremental. Bootstrapped ONCE per
@@ -436,29 +436,23 @@ object Corpus {
     * with each admitted batch, so an append's cost is
     * O(batch + digest index), independent of accumulated corpus TEXT
     * bytes — at 100 TB the index is ~0.05% of the corpus (48 B vs ~100 KB
-    * per doc). */
+    * per doc).
+    *
+    * The index is deliberately frozen at first bootstrap per (session,
+    * dir) — the registered queries' determinism depends on that — so a
+    * fixture REWRITTEN in place mid-session needs an evict
+    * ([[graft.AppCache.evictAll]]) before its next append, or the stale
+    * index diverges from the oracle's live replay. The same holds for
+    * [[bandIndexDir]]; the temp parquet dirs themselves are
+    * OS-lifetime. */
   def digestIndexDir(spark: SparkSession, dir: String): String =
-    indexDirs.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    indexDirs(spark, dir) {
       val d = graft.ext.Dfs.scratchDir(spark, "graft_digest_index")
       Tables.documents(spark, dir)
         .select(md5(col("text")).as("digest"))
         .write.mode("overwrite").parquet(d)
       d
-    })
-
-  /** Drop this session's digest/band-index registrations (the Memo/
-    * Warehouse evict convention for long-lived sessions cycling sf-dirs;
-    * the temp parquet dirs themselves are OS-lifetime). NOTE the indexes
-    * are deliberately frozen at first bootstrap per (session, dir) — the
-    * registered queries' determinism depends on that — so a fixture
-    * REWRITTEN in place mid-session requires evictIndexes before its
-    * next append, or the stale index diverges from the oracle's live
-    * replay. */
-  def evictIndexes(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    indexDirs.keys.filter(_._1 == app).foreach(indexDirs.remove)
-    bandIndexDirs.keys.filter(_._1 == app).foreach(bandIndexDirs.remove)
-  }
+    }
 
   /** Incremental corpus ingestion — the append-only twin of the batch
     * dedup family: admit a new batch of documents only where the content
@@ -516,7 +510,7 @@ object Corpus {
   }
 
   private val bandIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+    graft.AppCache.namespace[String, String]("corpus.band_index_dirs")
 
   /** Persisted MinHash SIGNATURE + cluster-representative index over the
     * existing (planted-duplicate) corpus — the state that makes NEAR-dup
@@ -531,14 +525,14 @@ object Corpus {
     * (plan-asserted in PlanContractSpec). At 100 TB the index is ~0.3%
     * of the corpus (32×8 B + rep row vs ~100 KB per doc). */
   def bandIndexDir(spark: SparkSession, dir: String): String =
-    bandIndexDirs.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    bandIndexDirs(spark, dir) {
       val d = graft.ext.Dfs.scratchDir(spark, "graft_band_index")
       Dedup.minhashSignatures(Dedup.corpusWithDups(spark, dir))
         .write.mode("overwrite").parquet(s"$d/sigs")
       Dedup.dupClusters(spark, dir)
         .write.mode("overwrite").parquet(s"$d/reps")
       d
-    })
+    }
 
   /** Deterministic batch for the REGISTERED append-near-dup query: every
     * doc_id % 13 == 6 document arrives as a lightly-revised NEAR-duplicate

@@ -124,13 +124,13 @@ object CorpusPipeline {
         .select("doc_id", "source"))
   }
 
-  private case class Built(
+  private[graft] case class Built(
     metrics: Seq[(String, Long, Long, Long, Double)],
     train: DataFrame, interleaved: DataFrame, packs: DataFrame,
     allStages: Seq[DataFrame])
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), () => Built]
+  private[graft] val cache = graft.AppCache.namespace[String, Built]("corpus_pipeline",
+    release = _.allStages.foreach(graft.functions.Memo.releaseFrame))
 
   /** Run the chain once per (session, sf-dir): every stage boundary is
     * persisted, counted (the rows_in/rows_out metrics ARE the stage
@@ -140,8 +140,7 @@ object CorpusPipeline {
     * "caps engaged" from "few duplicates" (zero for every stage without a
     * load-shedding guard). */
   private def build(spark: SparkSession, dir: String): Built =
-    graft.functions.SingleFlight(cache,
-      (spark.sparkContext.applicationId, dir)) {
+    cache(spark, dir) {
       val metrics = Seq.newBuilder[(String, Long, Long, Long, Double)]
       def staged(name: String, rowsIn: Long, shed: Long = 0L)(
           body: => DataFrame): (DataFrame, Long) = {
@@ -178,17 +177,6 @@ object CorpusPipeline {
       Built(metrics.result(), s6, inter, packs,
         Seq(s1, s2, s3, s4, s5, s6, inter, packs))
     }
-
-  /** Release this session's persisted stage frames (the
-    * [[graft.etl.Warehouse.evict]] convention for long-lived sessions).
-    * Rebuilds transparently on next use; call at a quiescent point. */
-  def evict(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    cache.keys.filter(_._1 == app).foreach { k =>
-      cache.remove(k).foreach(h =>
-        h().allStages.foreach(_.unpersist(blocking = false)))
-    }
-  }
 
   /** Per-stage row metrics as a relation — the oracle-checked surface
     * (`corpus_run_summary`). Durations are deliberately excluded: the

@@ -364,23 +364,13 @@ object Dedup {
     * The caller owns the directory lifecycle: round files accumulate in
     * it and outlive the call (that durability is the point), so point it
     * at a per-job path and delete it when the labels are consumed.
+    * Superseded rounds free their checkpoint blocks as they go; the
+    * final round's labels stay live (the caller's result plan references
+    * them) and release with the session, or with the memo entry holding
+    * the result ([[graft.functions.Memo.releaseFrame]]).
     *
     * Output: `(doc_id, cluster_rep)` for every node that appears in an
     * edge, component representatives included (rep maps to itself). */
-  /** Frees a localCheckpoint'd frame's blocks: `DataFrame.unpersist` is a
-    * no-op for checkpoints (they never register with the CacheManager) —
-    * the blocks belong to the materialized RDD inside the LogicalRDD
-    * leaf, so unpersist THAT. Safe on non-checkpoint frames (no leaf
-    * matches). The final round's labels stay live: the caller's result
-    * plan references them and they release with the session (or Memo
-    * eviction). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.optimizedPlan.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 64,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
@@ -435,8 +425,8 @@ object Dedup {
         // materialized, and without this the loop accumulates
         // O(rounds × |edges|) block-manager storage until the
         // ContextCleaner gets to the dropped RDDs
-        releaseCheckpoint(ls)
-        releaseCheckpoint(edges)
+        graft.functions.Memo.releaseFrame(ls)
+        graft.functions.Memo.releaseFrame(edges)
         edges = ss
         prevCount = newCount
         iter += 1

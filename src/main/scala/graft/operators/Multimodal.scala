@@ -185,7 +185,7 @@ object Multimodal {
   }
 
   private val imageDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+    graft.AppCache.namespace[String, String]("multimodal.image_dirs")
 
   /** Hadoop `Configuration` is not `Serializable`; this minimal wrapper
     * ships it to executor tasks via its own Writable form so
@@ -211,7 +211,7 @@ object Multimodal {
     * local mode shares /tmp, a cluster points GRAFT_SCRATCH at shared
     * storage. */
   def imageFilesDir(spark: SparkSession, dir: String): String =
-    imageDirs.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    imageDirs(spark, dir) {
       val d = graft.ext.Dfs.scratchDir(spark, "graft_images")
       val serConf = new SerConf(spark.sessionState.newHadoopConf())
       syntheticImages(spark, dir).foreachPartition {
@@ -224,7 +224,7 @@ object Multimodal {
           }
       }
       d
-    })
+    }
 
   /** Real SOURCE operator for the media family (the round-5 gap: decode
     * lineages ran only on in-engine synthesized bytes): ingest a directory

@@ -337,23 +337,16 @@ object Similarity {
 
   /** Final (post-iteration) centroids — the index geometry both the
     * corpus assignment and query probing use. Cached per (session, dir):
-    * index metadata, <= 16 x 64 doubles. */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), () => Array[(Int, Seq[Double])]]
-
-  /** Drop this session's cached IVF centroids (index metadata; rebuilds
-    * deterministically on next use — the two-level fold guarantees the
-    * SAME centroids regardless of partitioning, which DeterminismSpec
-    * exercises through this hook). */
-  def evictCentroids(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    centroidCache.keys.filter(_._1 == app).foreach(centroidCache.remove)
-  }
+    * index metadata, <= 16 x 64 doubles. An evict
+    * ([[graft.AppCache.evictAll]]) rebuilds deterministically on next
+    * use — the two-level fold guarantees the SAME centroids regardless
+    * of partitioning, which DeterminismSpec exercises. */
+  private val centroidCache = graft.AppCache
+    .namespace[String, Array[(Int, Seq[Double])]]("similarity.ivf_centroids")
 
   private def centroidsFor(spark: SparkSession, dir: String,
       k: Int): Array[(Int, Seq[Double])] =
-    graft.functions.SingleFlight(centroidCache,
-      (spark.sparkContext.applicationId, s"$dir#k=$k")) {
+    centroidCache(spark, s"$dir#k=$k") {
       // cache the corpus for the duration of the build: every Lloyd
       // iteration scans it once for assignment + partial sums, and
       // re-reading parquet per iteration would multiply the scan cost by
@@ -578,11 +571,10 @@ object Similarity {
   /** Corpus vector count, cached per (session, dir): one count job feeds
     * every adaptive-width decision. */
   private val sizeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+    graft.AppCache.namespace[String, Long]("similarity.corpus_sizes")
 
   private def corpusSize(spark: SparkSession, dir: String): Long =
-    sizeCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      Tables.embeddings(spark, dir).select("vec_id").count())
+    sizeCache(spark, dir)(Tables.embeddings(spark, dir).select("vec_id").count())
 
   /** The code width the REGISTERED family runs at for this corpus. */
   def corpusBits(spark: SparkSession, dir: String): Int =
@@ -604,7 +596,7 @@ object Similarity {
     corpusCodes(spark, dir).groupBy("table", "code").agg(count(lit(1)).as("bucket_n"))
 
   private val codeIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+    graft.AppCache.namespace[String, String]("similarity.code_index_dirs")
 
   /** Persisted LSH CODE index over the existing embedding corpus — the
     * embedding-modality twin of [[graft.operators.Corpus.bandIndexDir]]:
@@ -615,21 +607,16 @@ object Similarity {
     * products per vector) and the candidate enumeration both become
     * O(batch + touched buckets). Vectors themselves are NOT in the index;
     * the exact-cosine verify joins the candidate ids back to the
-    * embeddings table, touching only candidate rows' vectors. */
+    * embeddings table, touching only candidate rows' vectors. Frozen
+    * at first bootstrap like [[graft.operators.Corpus.digestIndexDir]]
+    * (same evict contract). */
   def codeIndexDir(spark: SparkSession, dir: String): String =
-    codeIndexDirs.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    codeIndexDirs(spark, dir) {
       val d = graft.ext.Dfs.scratchDir(spark, "graft_code_index")
       corpusCodes(spark, dir).select("vec_id", "table", "code")
         .write.mode("overwrite").parquet(s"$d/codes")
       d
-    })
-
-  /** Drop this session's code-index registrations (same contract as
-    * [[graft.operators.Corpus.evictIndexes]]). */
-  def evictCodeIndexes(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    codeIndexDirs.keys.filter(_._1 == app).foreach(codeIndexDirs.remove)
-  }
+    }
 
   /** Deterministic vector batch for the REGISTERED embedding-append
     * query: every vec_id % 11 == 3 vector arrives as a lightly-perturbed
@@ -1357,15 +1344,10 @@ object Similarity {
   val pqK = 16
   val pqIters = 3
 
-  private val pqBookCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), () => Array[Array[(Int, Seq[Double])]]]
-
-  /** Drop this session's cached PQ codebooks (index metadata —
-    * deterministic rebuild, same contract as [[evictCentroids]]). */
-  def evictPqCodebooks(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    pqBookCache.keys.filter(_._1 == app).foreach(pqBookCache.remove)
-  }
+  /** Cached PQ codebooks (index metadata — deterministic rebuild after
+    * an evict, same contract as [[centroidCache]]). */
+  private val pqBookCache = graft.AppCache
+    .namespace[String, Array[Array[(Int, Seq[Double])]]]("similarity.pq_books")
 
   /** Sub-vector j of the embedding column (1-based slice). */
   private def subVec(j: Int, emb: Column = col("embedding")): Column =
@@ -1395,8 +1377,7 @@ object Similarity {
     * the CACHED corpus, so the build costs pqM × pqIters narrow passes
     * and nothing shuffles vectors anywhere. */
   private def pqCodebooks(spark: SparkSession, dir: String): Array[Array[(Int, Seq[Double])]] =
-    graft.functions.SingleFlight(pqBookCache,
-      (spark.sparkContext.applicationId, dir)) {
+    pqBookCache(spark, dir) {
       val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try trainSubspaceBooks(emb, "embedding")
@@ -1587,24 +1568,17 @@ object Similarity {
         .select("vec_id", "cluster", "residual")
     }
 
-  private val pqResidualBookCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), () => Array[Array[(Int, Seq[Double])]]]
+  private val pqResidualBookCache = graft.AppCache
+    .namespace[String, Array[Array[(Int, Seq[Double])]]]("similarity.pq_residual_books")
 
   /** Per-subspace codebooks over RESIDUAL sub-vectors — same
     * deterministic Lloyd fold and cache contract as [[pqCodebooks]]. */
   private def pqResidualCodebooks(spark: SparkSession,
       dir: String): Array[Array[(Int, Seq[Double])]] =
-    graft.functions.SingleFlight(pqResidualBookCache,
-      (spark.sparkContext.applicationId, dir)) {
+    pqResidualBookCache(spark, dir) {
       // residualFrame is already Memo-persisted; no second persist needed
       trainSubspaceBooks(residualFrame(spark, dir), "residual")
     }
-
-  /** [[graft.Caches]] hook, same contract as [[evictPqCodebooks]]. */
-  def evictResidualBooks(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    pqResidualBookCache.keys.filter(_._1 == app).foreach(pqResidualBookCache.remove)
-  }
 
   /** (vec_id, cluster, codes, rnorm) under residual encoding. The
     * reconstruction is `centroid_c + concat_j(book_j[code_j])`, so its

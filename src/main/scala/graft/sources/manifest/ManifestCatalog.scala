@@ -376,7 +376,7 @@ class ManifestCatalog extends TableCatalog with SupportsNamespaces
         // a recreate at the same location must never be served the
         // dropped table's memoized file lists (mtime alone can tie
         // within the filesystem's timestamp granularity)
-        graft.ext.Manifests.evictBase(base)
+        graft.ext.Manifests.filesMemo.evict(spark, _._1 == base)
         true
     }
 

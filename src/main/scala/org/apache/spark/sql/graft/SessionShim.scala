@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session-rebinding for frames that cross session boundaries.
   *
   * The library memoizes expensive shared lineages per APPLICATION
-  * ([[graft.etl.Warehouse]], [[graft.functions.Memo]]): any session of the
+  * ([[graft.AppCache]] namespaces such as [[graft.etl.Warehouse]] and
+  * [[graft.functions.Memo]]): any session of the
   * app gets the same DataFrame back, and the shared block-manager cache
   * makes that correct and cheap. But a `DataFrame` is bound to the session
   * that ANALYZED it — `createOrReplaceTempView` registers in the frame's

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Each representative query runs under a deliberately awkward partition
   * count (7) and the suite default (4), with every session-scoped cache
-  * evicted between runs (Warehouse/Memo/Keys via `Warehouse.evict`) so
+  * evicted between runs (every namespace via `AppCache.evictAll`) so
   * the second run genuinely rebuilds its lineage under the new
   * partitioning rather than reading the first run's persisted frames.
   * Covered shapes: float aggregation order (`similarity_topk`'s left-fold
@@ -38,9 +38,10 @@ class DeterminismSpec extends AnyFunSuite {
     spark.conf.set(confKey, parts)
     try {
       // quiescent point: all prior frames are collected; evictAll forces
-      // EVERY cache layer (warehouse, memo, keys, pipeline stages, digest
-      // indexes, IVF centroids) to rebuild under the new partitioning
-      Caches.evictAll(spark)
+      // EVERY cache namespace (warehouse, memo, keys, pipeline stages,
+      // digest indexes, IVF centroids, ...) to rebuild under the new
+      // partitioning
+      AppCache.evictAll(spark)
       queries.map { name =>
         name -> SparkEntry.queries(name)(spark, sf).collect()
           .map(_.mkString("|")).toSeq
@@ -51,7 +52,7 @@ class DeterminismSpec extends AnyFunSuite {
   test("results are identical under 7 vs 4 shuffle partitions (caches evicted between)") {
     val a = runAll("7")
     val b = runAll("4")
-    Caches.evictAll(spark) // leave no odd-partitioned frames for later suites
+    AppCache.evictAll(spark) // leave no odd-partitioned frames for later suites
     queries.foreach { name =>
       assert(a(name) == b(name),
         s"$name drifts with the shuffle partition count: " +

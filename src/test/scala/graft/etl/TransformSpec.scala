@@ -74,7 +74,7 @@ class TransformSpec extends AnyFunSuite {
     val before = wh.dimProduct.orderBy("product_key")
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val factBefore = wh.fact.count()
-    Warehouse.evict(spark)
+    graft.AppCache.evictAll(spark)
     // fresh frames via apply — the documented post-evict path
     val fresh = Warehouse(spark, TestSpark.sf)
     val after = fresh.dimProduct.orderBy("product_key")

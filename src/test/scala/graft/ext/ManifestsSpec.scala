@@ -1949,7 +1949,7 @@ class ManifestsSpec extends AnyFunSuite {
     // COLD resolve (fresh-process memo) reads the checkpoint, not an
     // O(table) text file, and lands under the 1 s budget
     def coldResolve(): (Long, Seq[String]) = {
-      Manifests.evictResolvedManifests()
+      Manifests.filesMemo.evict(spark)
       val t0 = System.nanoTime()
       val fs = Manifests.files(spark, b, 0)
       ((System.nanoTime() - t0) / 1000000L, fs)
@@ -2005,7 +2005,7 @@ class ManifestsSpec extends AnyFunSuite {
     Dfs.delete(spark, m)
     // the recovering reader is a FRESH process (the crashed writer is
     // gone) — its resolved-manifest memo starts empty
-    Manifests.evictResolvedManifests()
+    Manifests.filesMemo.evict(spark)
     assert(Manifests.readLatest(spark, b).count() === 205)
     assert(Dfs.exists(spark, m), "recovery completes the interrupted swap")
   }

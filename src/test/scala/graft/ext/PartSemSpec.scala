@@ -58,8 +58,8 @@ class PartSemSpec extends AnyFunSuite {
   private def markLegacy(b: String): Unit = {
     val v = Manifests.latestVersion(spark, b).get
     Dfs.delete(spark, s"$b/v$v/_partsem")
-    Manifests.evictBase(b)
-    SidecarCache.evict(spark)
+    Manifests.filesMemo.evict(spark, _._1 == b)
+    SidecarCache.cache.evict(spark)
   }
 
   private def finalNodes(df: org.apache.spark.sql.DataFrame)

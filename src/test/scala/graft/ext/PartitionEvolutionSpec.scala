@@ -405,8 +405,8 @@ class PartitionEvolutionSpec extends AnyFunSuite {
     // months group must keep its sidecar through both reclaim paths
     val (dropped, _) = Manifests.vacuum(spark, b, keepLast = 1)
     assert(dropped.nonEmpty)
-    Manifests.evictBase(b)
-    graft.ext.SidecarCache.evict(spark)
+    Manifests.filesMemo.evict(spark, _._1 == b)
+    graft.ext.SidecarCache.cache.evict(spark)
     val v = Manifests.latestVersion(spark, b).get
     val legacySegs = Manifests.partitionHistory(spark, b, v).flatMap(_._2)
     assert(legacySegs.nonEmpty &&

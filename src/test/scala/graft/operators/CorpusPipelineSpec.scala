@@ -73,7 +73,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   test("evict-then-reuse: a fresh build reproduces identical stage metrics") {
     val before = CorpusPipeline.runSummary(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    CorpusPipeline.evict(spark)
+    CorpusPipeline.cache.evict(spark)
     val after = CorpusPipeline.runSummary(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(after.sameElements(before), "rebuilt stage metrics differ from pre-evict")
