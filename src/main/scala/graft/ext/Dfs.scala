@@ -39,6 +39,11 @@ object Dfs {
     if (f.exists(p)) f.listStatus(p).toSeq else Seq.empty
   }
 
+  /** Child names of `path` in ONE listing RPC; empty when missing. */
+  def names(spark: SparkSession, path: String): Set[String] =
+    try fs(spark, path).listStatus(new Path(path)).map(_.getPath.getName).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+
   /** Visible data part-files under a directory (the reader's view:
     * dotfiles and `_`-prefixed metadata are not data). */
   def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] =

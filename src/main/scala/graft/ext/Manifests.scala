@@ -46,6 +46,14 @@ final class ConstraintViolationException(msg: String)
   *    commit flattens, full rewrites (compact/overwrite) always write
   *    flat, and vacuum flattens the retention-floor version before
   *    reclaiming the chain below it, so resolution never dangles;
+  *  - a version's TABLE METADATA (vectors, schema, zone/partition/bloom
+  *    sidecars, constraints, tombstones, renames, planner statistics,
+  *    bucket spec) is one [[VersionMeta]] record: [[meta]] reads it from
+  *    one listing of `v<i>/`, [[commit]] writes it whole before the
+  *    marker. One carry rule: a commit derived from version p starts
+  *    from `meta(p).carried` and overrides only what it changes; a
+  *    bootstrap or overwrite starts from the latest version's
+  *    `tableLevel` part;
   *  - version numbers are won via the same `_claims` CAS as
   *    [[Snapshots.commit]], so concurrent committers land as distinct
   *    versions;
@@ -321,11 +329,22 @@ object Manifests {
 
   /** Publish `dataFiles` as the next version; returns it. The version
     * number is won via the `_claims` CAS before anything is written;
-    * the `_SUCCESS` marker lands only after the manifest is fully
-    * written, so readers never resolve a partial manifest. An optional
-    * `tag` (e.g. a micro-batch id) is recorded beside the manifest and
-    * readable via [[latestTag]] — the hook idempotent writers key
-    * replay detection on.
+    * the `_SUCCESS` marker lands only after the manifest and every
+    * sidecar are fully written, so readers never resolve a partial
+    * version. An optional `tag` (e.g. a micro-batch id) is recorded
+    * beside the manifest and readable via [[latestTag]] — the hook
+    * idempotent writers key replay detection on.
+    *
+    * `meta` is the version's table metadata, written whole
+    * ([[VersionMeta]]). Callers build it by the ONE carry rule: a
+    * commit derived from version p passes `meta(p).carried` with only
+    * the fields it changes overridden; a bootstrap or overwrite passes
+    * the latest version's `tableLevel` part ([[overwriteMeta]]), and a
+    * first commit an empty record. Commit itself applies only the
+    * per-commit events: the `tag`, the transaction ledger (`txn`,
+    * `txnMergeFrom`), a new rename event (`addRename`), the change-feed
+    * classification (`cdcUpd`), and the pruning of tombstones and
+    * rename events against the new schema and file list.
     *
     * `parent` is the optimistic-concurrency contract: `Some(p)` means
     * "this content was DERIVED from version p" — the commit claims
@@ -339,27 +358,13 @@ object Manifests {
     * writers re-derive their metadata and retry on conflict
     * ([[appendBatch]]); rewriting writers surface the exception. */
   def commit(spark: SparkSession, base: String, dataFiles: Seq[String],
-      tag: Option[String] = None, dv: Seq[String] = Nil,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      stats: Option[(Seq[String], Seq[String])] = None,
-      parent: Option[Int] = None,
-      partValues: Option[(Seq[String], Seq[String])] = None,
-      partHistory: Option[Seq[(Seq[String], Seq[String])]] = None,
-      blooms: Option[(Seq[String], Seq[String])] = None,
-      constraints: Option[Seq[(String, String)]] = None,
-      dropped: Option[Seq[String]] = None,
-      renames: Option[Seq[RenameEvent]] = None,
-      addRename: Option[(String, String)] = None,
+      meta: VersionMeta, parent: Option[Int] = None,
+      tag: Option[String] = None,
       delta: Option[(Seq[String], Seq[String])] = None,
       txn: Option[(String, Long)] = None,
-      ndv: Option[Map[String, Long]] = None,
-      ndvKmv: Option[Map[String, Seq[Long]]] = None,
       txnMergeFrom: Option[(String, Int)] = None,
+      addRename: Option[(String, String)] = None,
       cdcUpd: Option[Seq[String]] = None,
-      hist: Option[Map[String, (Double, Seq[(Double, Double, Long)])]] =
-        None,
-      histRows: Option[Long] = None,
-      partSem: Option[Int] = None,
       preservesContent: Boolean = false): Int = {
     require(dataFiles.nonEmpty, "refusing to commit an empty manifest")
     // the compaction tags double as the change feed's dataChange=false
@@ -399,6 +404,9 @@ object Manifests {
         n
     }
     Dfs.mkdirs(spark, s"$base/v$v")
+    def write(name: String, text: String): Unit =
+      Dfs.writeBytes(spark, s"$base/v$v/$name", text.getBytes("UTF-8"))
+    def lines(ls: Seq[String]): String = ls.mkString("", "\n", "\n")
     // `delta` is a WRITE-FORMAT hint from callers that know their list
     // is parent's ± a small diff (appends, metadata-only DDL, surgical
     // rewrites): dataFiles stays the source of truth, the hint only
@@ -442,153 +450,82 @@ object Manifests {
       }
     deltaWrite match {
       case Some((p, adds, removes, _)) =>
-        Dfs.writeBytes(spark, s"$base/v$v/_manifest",
-          (s"@delta $p" +:
-            (removes.map(f => "-" + Dfs.canonical(f)) ++
-              adds.map(f => "+" + Dfs.canonical(f))))
-            .mkString("", "\n", "\n").getBytes("UTF-8"))
+        write("_manifest", lines(s"@delta $p" +:
+          (removes.map(f => "-" + Dfs.canonical(f)) ++
+            adds.map(f => "+" + Dfs.canonical(f)))))
       case None =>
         Dfs.writeBytes(spark, s"$base/v$v/_manifest",
           flatManifestBytes(spark, base, v, dataFiles.map(Dfs.canonical)))
     }
-    if (dv.nonEmpty)
-      Dfs.writeBytes(spark, s"$base/v$v/_deletes",
-        dv.map(Dfs.canonical).mkString("", "\n", "\n").getBytes("UTF-8"))
-    schema.foreach(s =>
-      Dfs.writeBytes(spark, s"$base/v$v/_schema", s.json.getBytes("UTF-8")))
-    stats.foreach { case (keys, segs) =>
-      Dfs.writeBytes(spark, s"$base/v$v/_statskeys",
-        keys.mkString("", "\n", "\n").getBytes("UTF-8"))
-      Dfs.writeBytes(spark, s"$base/v$v/_statsfile",
-        segs.map(Dfs.canonical).mkString("", "\n", "\n").getBytes("UTF-8"))
+    if (meta.dv.nonEmpty) write("_deletes", lines(meta.dv.map(Dfs.canonical)))
+    meta.schema.foreach(s => write("_schema", s.json))
+    meta.stats.foreach { case (keys, segs) =>
+      write("_statskeys", lines(keys))
+      write("_statsfile", lines(segs.map(Dfs.canonical)))
     }
-    partValues.foreach { case (cols, segs) =>
-      Dfs.writeBytes(spark, s"$base/v$v/_partcols",
-        cols.mkString("", "\n", "\n").getBytes("UTF-8"))
-      Dfs.writeBytes(spark, s"$base/v$v/_partvalues",
-        segs.map(Dfs.canonical).mkString("", "\n", "\n").getBytes("UTF-8"))
+    meta.partValues.foreach { case (cols, segs) =>
+      write("_partcols", lines(cols))
+      write("_partvalues", lines(segs.map(Dfs.canonical)))
+      // PARTITION-SPEC HISTORY (Iceberg's partition evolution): after an
+      // [[evolvePartitions]] commit, files written under a PREVIOUS spec
+      // keep planning under the tuples that spec recorded — each legacy
+      // group is `spec1,spec2|seg1,seg2` (specs are comma-free by
+      // grammar), pruning intersects the per-group survivor sets, and
+      // SPJ/metadata proofs degrade to the CURRENT group's coverage
+      // (restored by OPTIMIZE, whose full rewrite re-derives every file
+      // under the current spec). Dropped when the commit records no
+      // partitioning at all.
+      if (meta.partHistory.nonEmpty)
+        write("_parthistory", lines(meta.partHistory.map { case (cs, ss) =>
+          s"${cs.mkString(",")}|${ss.map(Dfs.canonical).mkString(",")}" }))
+      // TUPLE-SEMANTICS version (`_partsem`): which derivation rules the
+      // version's recorded partition tuples were computed under. 1 = the
+      // pre-UTC era (time transforms derived in the writer's SESSION
+      // zone — builds before the UTC re-pin); 2 = UTC-pinned (Iceberg
+      // semantics, current). A commit that carries ANY prior segments or
+      // history groups forward keeps its ancestor's version (tuples of
+      // both eras coexist in its sidecars), so only full re-derivations
+      // (commitDataPartitioned, compact/OPTIMIZE) set an upgrade.
+      // Consumers treat sem < current as UNTRUSTED for TZ-sensitive
+      // fields: pruning and exact-DML lowering refuse those conjuncts
+      // and SPJ reports unknown — conservative plans, never wrong rows;
+      // OPTIMIZE restores full speed (the ADVICE-r17 wrong-results class).
+      write("_partsem", meta.partSem.toString)
     }
-    // the inheritance anchor every table-metadata tier below shares:
-    // the parent when one is declared, else the superseded latest
-    // (constraints, NDV, histograms, partition history all ride it)
-    lazy val inheritBase: Option[Int] =
-      parent.filter(_ >= 0).orElse(latestVersion(spark, base).filter(_ < v))
-    // PARTITION-SPEC HISTORY (Iceberg's partition evolution): after an
-    // [[evolvePartitions]] commit, files written under a PREVIOUS spec
-    // keep planning under the tuples that spec recorded — each legacy
-    // group is `spec1,spec2|seg1,seg2` (specs are comma-free by
-    // grammar), pruning intersects the per-group survivor sets, and
-    // SPJ/metadata proofs degrade to the CURRENT group's coverage
-    // (restored by OPTIMIZE, whose full rewrite re-derives every file
-    // under the current spec). Inherited like constraints; dropped
-    // when the commit records no partitioning at all.
-    lazy val inheritedHistory: Seq[(Seq[String], Seq[String])] =
-      partHistory.getOrElse(inheritBase
-        .map(partitionHistory(spark, base, _)).getOrElse(Seq.empty))
-    if (partValues.isDefined && inheritedHistory.nonEmpty)
-      Dfs.writeBytes(spark, s"$base/v$v/_parthistory",
-        inheritedHistory.map { case (cols, segs) =>
-          s"${cols.mkString(",")}|${segs.map(Dfs.canonical).mkString(",")}"
-        }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    // TUPLE-SEMANTICS version (`_partsem`): which derivation rules the
-    // version's recorded partition tuples were computed under. 1 = the
-    // pre-UTC era (time transforms derived in the writer's SESSION
-    // zone — builds before the UTC re-pin); 2 = UTC-pinned (Iceberg
-    // semantics, current). Inherited like constraints — a commit that
-    // carries ANY prior segments or history groups forward stays at
-    // its ancestor's version (tuples of both eras coexist in its
-    // sidecars), so only full re-derivations (commitDataPartitioned,
-    // compact/OPTIMIZE) pass an explicit upgrade. Consumers treat
-    // sem < current as UNTRUSTED for TZ-sensitive fields: pruning and
-    // exact-DML lowering refuse those conjuncts and SPJ reports
-    // unknown — conservative plans, never wrong rows; OPTIMIZE
-    // restores full speed (the ADVICE-r17 wrong-results class).
-    if (partValues.isDefined) {
-      val effSem = partSem.getOrElse(
-        inheritBase.map(partSemOf(spark, base, _))
-          .getOrElse(PartSemCurrent))
-      Dfs.writeBytes(spark, s"$base/v$v/_partsem",
-        effSem.toString.getBytes("UTF-8"))
+    meta.blooms.foreach { case (cols, segs) =>
+      write("_bloomkeys", lines(cols))
+      write("_bloomfile", lines(segs.map(Dfs.canonical)))
     }
-    blooms.foreach { case (cols, segs) =>
-      Dfs.writeBytes(spark, s"$base/v$v/_bloomkeys",
-        cols.mkString("", "\n", "\n").getBytes("UTF-8"))
-      Dfs.writeBytes(spark, s"$base/v$v/_bloomfile",
-        segs.map(Dfs.canonical).mkString("", "\n", "\n").getBytes("UTF-8"))
+    // CHECK constraints are TABLE metadata that rides every version —
+    // an overwrite landing on a live table keeps them too
+    // ([[VersionMeta.tableLevel]]), so it cannot silently shed the
+    // table's invariants (Delta's behavior)
+    if (meta.constraints.nonEmpty)
+      write("_constraints",
+        lines(meta.constraints.map { case (n, p) => s"$n\t$p" }))
+    // planner statistics, one `col \t value` line per column, sorted:
+    // NDV estimates (ANALYZE-time approx_count_distinct, like Spark's
+    // own ANALYZE TABLE column stats — tolerated stale across commits,
+    // refreshed by the next ANALYZE, never consulted for correctness),
+    // the mergeable k-minimum-values sketches an APPEND folds its batch
+    // into ([[appendWrittenFiles]]), and equi-height HISTOGRAMS
+    // (`col \t height \t lo:hi:ndv;…`, refreshed by ANALYZE FOR
+    // HISTOGRAM) with the live row count they were built over — the
+    // freshness anchor serving damps stale selectivity with
+    def statLines[A](m: Map[String, A])(render: A => String): String =
+      lines(m.toSeq.sortBy(_._1)
+        .filterNot { case (c, _) =>
+          c.exists(ch => ch == '\t' || ch == '\n' || ch == '\r') }
+        .map { case (c, a) => s"$c\t${render(a)}" })
+    if (meta.ndv.nonEmpty) write("_ndv", statLines(meta.ndv)(_.toString))
+    if (meta.ndvKmv.nonEmpty)
+      write("_ndvkmv", statLines(meta.ndvKmv)(_.mkString(",")))
+    if (meta.hist.nonEmpty) {
+      write("_hist", statLines(meta.hist) { case (h, bins) =>
+        s"$h\t${bins.map { case (lo, hi, n) => s"$lo:$hi:$n" }.mkString(";")}"
+      })
+      meta.histRows.foreach(n => write("_histrows", n.toString))
     }
-    // CHECK constraints are TABLE metadata that rides every version:
-    // unless the caller sets them explicitly (add/drop), a commit
-    // inherits its parent's — or, for a bootstrap/overwrite landing on
-    // a live table, the superseded latest's — so an overwrite cannot
-    // silently shed the table's invariants (Delta's behavior)
-    val effConstraints: Seq[(String, String)] = constraints.getOrElse {
-      inheritBase.map(constraintsOf(spark, base, _)).getOrElse(Seq.empty)
-    }
-    if (effConstraints.nonEmpty)
-      Dfs.writeBytes(spark, s"$base/v$v/_constraints",
-        effConstraints.map { case (n, p) => s"$n\t$p" }
-          .mkString("", "\n", "\n").getBytes("UTF-8"))
-    // per-column NDV estimates (ANALYZE-time approx_count_distinct) —
-    // planner-quality metadata like Spark's own ANALYZE TABLE column
-    // stats: inherited across commits (estimates tolerate append drift
-    // exactly as catalog stats go stale) and refreshed by the next
-    // ANALYZE. Never consulted for correctness — only reported to the
-    // optimizer through the DSv2 statistics face.
-    val effNdv: Map[String, Long] = ndv.getOrElse {
-      inheritBase.map(ndvOf(spark, base, _)).getOrElse(Map.empty)
-    }
-    if (effNdv.nonEmpty)
-      Dfs.writeBytes(spark, s"$base/v$v/_ndv",
-        effNdv.toSeq.sortBy(_._1)
-          .filterNot { case (c, _) =>
-            c.exists(ch => ch == '\t' || ch == '\n' || ch == '\r') }
-          .map { case (c, n) => s"$c\t$n" }
-          .mkString("", "\n", "\n").getBytes("UTF-8"))
-    // the NDV sketch sidecar rides with `_ndv`: k-minimum-values per
-    // analyzed column, the mergeable state that lets an APPEND fold its
-    // batch in and keep the estimate honest without re-ANALYZE
-    // ([[appendWrittenFiles]]). Inherited like `_ndv`; refreshed by
-    // ANALYZE; a rewrite inherits verbatim (NDV can only shrink under
-    // deletes — the stale sketch is conservative in the direction CBO
-    // tolerates, exactly like Spark's own stale catalog stats).
-    val effKmv: Map[String, Seq[Long]] = ndvKmv.getOrElse {
-      inheritBase.map(ndvKmvOf(spark, base, _)).getOrElse(Map.empty)
-    }
-    if (effKmv.nonEmpty)
-      Dfs.writeBytes(spark, s"$base/v$v/_ndvkmv",
-        effKmv.toSeq.sortBy(_._1)
-          .filterNot { case (c, _) =>
-            c.exists(ch => ch == '\t' || ch == '\n' || ch == '\r') }
-          .map { case (c, hs) => s"$c\t${hs.mkString(",")}" }
-          .mkString("", "\n", "\n").getBytes("UTF-8"))
-    // equi-height HISTOGRAMS ride like `_ndv`: planner-quality
-    // estimates, inherited across commits (tolerated stale exactly
-    // like catalog histograms), refreshed by ANALYZE FOR HISTOGRAM.
-    // One line per column: `col \t height \t lo:hi:ndv;lo:hi:ndv;…`.
-    val effHist: Map[String, (Double, Seq[(Double, Double, Long)])] =
-      hist.getOrElse {
-        inheritBase.map(histOf(spark, base, _)).getOrElse(Map.empty)
-      }
-    if (effHist.nonEmpty)
-      Dfs.writeBytes(spark, s"$base/v$v/_hist",
-        effHist.toSeq.sortBy(_._1)
-          .filterNot { case (c, _) =>
-            c.exists(ch => ch == '\t' || ch == '\n' || ch == '\r') }
-          .map { case (c, (h, bins)) =>
-            s"$c\t$h\t${bins.map { case (lo, hi, n) => s"$lo:$hi:$n" }
-              .mkString(";")}" }
-          .mkString("", "\n", "\n").getBytes("UTF-8"))
-    // the live row count the histograms were built over — the
-    // FRESHNESS anchor: serving compares it to the scan's current live
-    // rows and damps histogram selectivity toward 1 as they diverge
-    // (a histogram built at 1M rows must not price a hot key's
-    // frequency after appends doubled the table). Inherited like
-    // `_hist`; refreshed by the next ANALYZE … FOR HISTOGRAM.
-    val effHistRows: Option[Long] = histRows.orElse(
-      inheritBase.flatMap(histRowsOf(spark, base, _)))
-    if (effHist.nonEmpty)
-      effHistRows.foreach(n => Dfs.writeBytes(spark,
-        s"$base/v$v/_histrows", n.toString.getBytes("UTF-8")))
     // CDF update classification (graft.cdf.updateImages): `P\t<file>`
     // postimage data files, `D\t<file>` update-rowId sidecars. NOT
     // inherited — per-version event data like the tag; PRESENCE (even
@@ -596,14 +533,12 @@ object Manifests {
     // is what lets the per-version feed branch tag its residue as
     // plain delete/insert. Written before `_SUCCESS` like every
     // sibling, so no reader ever sees the version without it.
-    cdcUpd.foreach(lines =>
-      Dfs.writeBytes(spark, s"$base/v$v/_cdcupd",
-        lines.mkString("", "\n", "\n").getBytes("UTF-8")))
+    cdcUpd.foreach(ls => write("_cdcupd", lines(ls)))
     // the transaction ledger (Delta's `txn` action): appId -> highest
     // batch/epoch id whose append COMMITTED — one line per writer app,
-    // inherited by every commit (an overwrite inherits from the
-    // superseded latest like constraints do, so a streaming sink's
-    // replay detection survives a concurrent table rewrite). Idempotent
+    // inherited by every commit from the parent, or for a bootstrap or
+    // overwrite from the superseded latest, so a streaming sink's
+    // replay detection survives a concurrent table rewrite. Idempotent
     // writers consult this instead of scanning the file list for their
     // path marker, which is O(files) — and silently WRONG once a later
     // DML rewrites the batch's files away (the paths vanish, the scan
@@ -624,7 +559,8 @@ object Manifests {
     val retention = spark.conf.getOption("graft.txn.retentionMillis")
       .map(_.toLong)
     val (effTxns, effDead): (Map[String, (Long, Long)], Map[String, Long]) = {
-      val (live0, dead0) = inheritBase
+      val (live0, dead0) = parent.filter(_ >= 0)
+        .orElse(latestVersion(spark, base).filter(_ < v))
         .map(txnEntriesOf(spark, base, _))
         .getOrElse((Map.empty[String, (Long, Long)], Map.empty[String, Long]))
       // legacy two-field lines carry no stamp: stamp them NOW (the
@@ -677,32 +613,23 @@ object Manifests {
       require(!a.exists(c => c == '\t' || c == '\n' || c == '\r'),
         s"ledger appId may not contain tab/newline: '$a'"))
     if (effTxns.nonEmpty || effDead.nonEmpty)
-      Dfs.writeBytes(spark, s"$base/v$v/_txns",
-        (effTxns.toSeq.sortBy(_._1).map { case (a, (i, ts)) =>
+      write("_txns", lines(
+        effTxns.toSeq.sortBy(_._1).map { case (a, (i, ts)) =>
           s"$a\t$i\t$ts" } ++
-          effDead.toSeq.sortBy(_._1).map { case (a, t) => s"!$a\t$t" })
-          .mkString("", "\n", "\n").getBytes("UTF-8"))
-    // drop-column tombstones inherit through the PARENT chain only: a
-    // full bootstrap/overwrite replaces every physical file, so the
-    // resurrect-on-re-add hazard the tombstones guard against is gone
-    val rawDropped: Seq[String] = dropped.getOrElse(
-      parent.filter(_ >= 0).map(droppedOf(spark, base, _))
-        .getOrElse(Seq.empty))
+          effDead.toSeq.sortBy(_._1).map { case (a, t) => s"!$a\t$t" }))
     // a tombstone only guards a name ABSENT from the recorded schema;
     // if this commit's schema carries the name live (a restore to a
     // pre-drop version), the stale tombstone would refuse legitimate
     // appends of a column every reader already sees — prune it
-    val effDropped: Seq[String] = schema match {
-      case Some(s) => rawDropped.filterNot(s.fieldNames.contains)
-      case None => rawDropped
+    val effDropped: Seq[String] = meta.schema match {
+      case Some(s) => meta.dropped.filterNot(s.fieldNames.contains)
+      case None => meta.dropped
     }
-    if (effDropped.nonEmpty)
-      Dfs.writeBytes(spark, s"$base/v$v/_dropped",
-        effDropped.mkString("", "\n", "\n").getBytes("UTF-8"))
-    // rename events inherit like tombstones, but SELF-PRUNE: an event's
-    // pre-file list keeps only its intersection with the new manifest,
-    // so a full rewrite (compact/overwrite-region chain) empties it and
-    // every physical-name detour (era grouping, the V1-scan refusals)
+    if (effDropped.nonEmpty) write("_dropped", lines(effDropped))
+    // rename events SELF-PRUNE: an event's pre-file list keeps only its
+    // intersection with the new manifest, so a full rewrite
+    // (compact/overwrite-region chain) empties it and every
+    // physical-name detour (era grouping, the V1-scan refusals)
     // switches itself back off. The EMPTIED event is kept as a one-line
     // name-history record — a change-feed catch-up over pre-rename
     // versions still needs the old→new mapping to align its rows to a
@@ -710,10 +637,7 @@ object Manifests {
     // recorded schema (drop, or a restore to a pre-rename version) IS
     // dropped whole: no reader can request the column it maps.
     lazy val canonFiles = dataFiles.map(Dfs.canonical).toSet
-    val rawRenames: Seq[RenameEvent] = renames.getOrElse(
-      parent.filter(_ >= 0).map(renamesOf(spark, base, _))
-        .getOrElse(Seq.empty))
-    val candidates = rawRenames.map(e =>
+    val candidates = meta.renames.map(e =>
       e.copy(preFiles = e.preFiles.filter(canonFiles.contains))) ++
       addRename.map { case (from, to) =>
         RenameEvent(v, from, to, dataFiles.map(Dfs.canonical)) }.toSeq
@@ -723,19 +647,20 @@ object Manifests {
         // very commit adds: a→b→c keeps the (a,b) event alive through
         // `c`; only when the column's FINAL name left the schema is
         // the whole chain dead
-        schema.forall { s =>
+        meta.schema.forall { s =>
           var n = e.to
           candidates.drop(i + 1).foreach(l => if (l.from == n) n = l.to)
           s.fieldNames.contains(n)
         }
       }.map(_._1)
     if (effRenames.nonEmpty)
-      Dfs.writeBytes(spark, s"$base/v$v/_renames",
-        effRenames.map(e =>
-          (s"=${e.v}\t${e.from}\t${e.to}" +: e.preFiles).mkString("\n"))
-          .mkString("", "\n", "\n").getBytes("UTF-8"))
-    tag.foreach(t =>
-      Dfs.writeBytes(spark, s"$base/v$v/_tag", t.getBytes("UTF-8")))
+      write("_renames", lines(effRenames.flatMap(e =>
+        s"=${e.v}\t${e.from}\t${e.to}" +: e.preFiles)))
+    meta.bucketSpec.foreach { case (n, keys, sortBy) =>
+      write("_bucketspec",
+        lines(Seq(n.toString, keys.mkString(","), sortBy.mkString(","))))
+    }
+    tag.foreach(write("_tag", _))
     // summary counts land BEFORE the marker, so they exist for every
     // committed version: DESCRIBE HISTORY reads this tiny file, not the
     // manifest itself. Line 3 is the version's ADDED bytes (files not in
@@ -763,13 +688,50 @@ object Manifests {
     // TIMESTAMP (epoch millis, stamped by the committing writer, not
     // filesystem mtime) — `_commit_timestamp` provenance for the
     // change feed and the authoritative instant for TIMESTAMP AS OF
-    Dfs.writeBytes(spark, s"$base/v$v/_counts",
-      s"${dataFiles.size}\n${dv.size}\n$addedBytes\n${
-        deltaWrite.map(_._4).getOrElse(0)}\n$nowMs\n".getBytes("UTF-8"))
+    write("_counts", s"${dataFiles.size}\n${meta.dv.size}\n$addedBytes\n${
+      deltaWrite.map(_._4).getOrElse(0)}\n$nowMs\n")
     Dfs.touch(spark, s"$base/v$v/_SUCCESS")
     advanceHint(spark, base, v)
     v
   }
+
+  /** Version `v`'s whole [[VersionMeta]] record. Which sidecars exist
+    * comes from ONE listing of `v<N>/`, not one existence probe per
+    * sidecar; each present one is then read once through the decoder
+    * its single-sidecar reader ([[schemaOf]], [[dvFiles]], …) uses.
+    * Throws, like [[dvFiles]], on a version that was never committed. */
+  def meta(spark: SparkSession, base: String, v: Int): VersionMeta = {
+    val sc = new Sidecars(spark, base, v, Some(Dfs.names(spark, s"$base/v$v")))
+    VersionMeta(dvFiles(sc), schemaOf(sc), statsOf(sc), partitionedBy(sc),
+      partitionHistory(sc), partSemOf(sc), bloomOf(sc), constraintsOf(sc),
+      droppedOf(sc), renamesOf(sc), ndvOf(sc), ndvKmvOf(sc), histOf(sc),
+      histRowsOf(sc), bucketSpecOf(sc))
+  }
+
+  /** The record a bootstrap or whole-table overwrite starts from: the
+    * `latest` version's [[VersionMeta.tableLevel]] part, empty on a
+    * table with no committed version. */
+  private def overwriteMeta(spark: SparkSession, base: String,
+      latest: Option[Int]): VersionMeta =
+    latest.fold(VersionMeta())(meta(spark, base, _).tableLevel)
+
+  /** The sidecar files of one version, by name — what every
+    * single-sidecar reader decodes from. Without a listing each `has`
+    * is one existence probe, so a lone reader pays exactly one probe
+    * per file it asks about; [[meta]] lists the version dir once and
+    * answers every `has` from that listing. */
+  private final class Sidecars(spark: SparkSession, val base: String,
+      val v: Int, listed: Option[Set[String]] = None) {
+    def has(n: String): Boolean =
+      listed.fold(Dfs.exists(spark, s"$base/v$v/$n"))(_.contains(n))
+    def text(n: String): String =
+      new String(Dfs.readBytes(spark, s"$base/v$v/$n"), "UTF-8")
+    def lines(n: String): Seq[String] =
+      text(n).split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
+  }
+
+  private def probe(spark: SparkSession, base: String, v: Int): Sidecars =
+    new Sidecars(spark, base, v)
 
   /** The table schema version `v` was committed with, if recorded.
     * Schema lives in the MANIFEST, not the files — a reader never
@@ -778,9 +740,11 @@ object Manifests {
     * the explicit reader schema, per parquet's own contract. */
   def schemaOf(spark: SparkSession, base: String,
       v: Int): Option[org.apache.spark.sql.types.StructType] =
-    if (!Dfs.exists(spark, s"$base/v$v/_schema")) None
-    else Some(org.apache.spark.sql.types.DataType.fromJson(
-      new String(Dfs.readBytes(spark, s"$base/v$v/_schema"), "UTF-8"))
+    schemaOf(probe(spark, base, v))
+  private def schemaOf(
+      sc: Sidecars): Option[org.apache.spark.sql.types.StructType] =
+    if (!sc.has("_schema")) None
+    else Some(org.apache.spark.sql.types.DataType.fromJson(sc.text("_schema"))
       .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Zone-map file statistics recorded in the manifest — the
@@ -800,12 +764,10 @@ object Manifests {
     * of O(table files); rewrites and ANALYZE compact back to one. */
   def statsOf(spark: SparkSession, base: String,
       v: Int): Option[(Seq[String], Seq[String])] =
-    if (!Dfs.exists(spark, s"$base/v$v/_statsfile")) None
-    else Some((
-      new String(Dfs.readBytes(spark, s"$base/v$v/_statskeys"), "UTF-8")
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq,
-      new String(Dfs.readBytes(spark, s"$base/v$v/_statsfile"), "UTF-8")
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq))
+    statsOf(probe(spark, base, v))
+  private def statsOf(sc: Sidecars): Option[(Seq[String], Seq[String])] =
+    if (!sc.has("_statsfile")) None
+    else Some((sc.lines("_statskeys"), sc.lines("_statsfile")))
 
   /** Per-column approximate distinct counts recorded by the last
     * ANALYZE (HyperLogLog++, rsd 2%) — the NDV half of the version's
@@ -815,9 +777,10 @@ object Manifests {
     * correctness path — only reported through the DSv2
     * `SupportsReportStatistics` face for CBO join estimation. */
   def ndvOf(spark: SparkSession, base: String, v: Int): Map[String, Long] =
-    if (!Dfs.exists(spark, s"$base/v$v/_ndv")) Map.empty
-    else new String(Dfs.readBytes(spark, s"$base/v$v/_ndv"), "UTF-8")
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+    ndvOf(probe(spark, base, v))
+  private def ndvOf(sc: Sidecars): Map[String, Long] =
+    if (!sc.has("_ndv")) Map.empty
+    else sc.lines("_ndv")
       .flatMap(_.split("\t") match {
         case Array(c, n) => scala.util.Try(c -> n.toLong).toOption
         case _ => None
@@ -839,9 +802,10 @@ object Manifests {
     * predating the sidecar. */
   def ndvKmvOf(spark: SparkSession, base: String,
       v: Int): Map[String, Seq[Long]] =
-    if (!Dfs.exists(spark, s"$base/v$v/_ndvkmv")) Map.empty
-    else new String(Dfs.readBytes(spark, s"$base/v$v/_ndvkmv"), "UTF-8")
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+    ndvKmvOf(probe(spark, base, v))
+  private def ndvKmvOf(sc: Sidecars): Map[String, Seq[Long]] =
+    if (!sc.has("_ndvkmv")) Map.empty
+    else sc.lines("_ndvkmv")
       .flatMap(_.split("\t") match {
         case Array(c, hs) => scala.util.Try(
           c -> hs.split(",").iterator.filter(_.nonEmpty)
@@ -939,11 +903,12 @@ object Manifests {
     * re-stat only the rewritten ones. Metadata-sized throughout;
     * rewrites already pay data I/O, so the segment list compacts back
     * to one here. */
-  private def statsAfterRewrite(spark: SparkSession, base: String, v: Int,
+  private def statsAfterRewrite(spark: SparkSession, base: String,
+      cur: Option[(Seq[String], Seq[String])],
       untouched: Seq[String], rewritten: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType])
       : Option[(Seq[String], Seq[String])] =
-    statsOf(spark, base, v).map { case (keys, segs) =>
+    cur.map { case (keys, segs) =>
       val st = spark.read.parquet(segs: _*)
       val unt = untouched.map(Dfs.canonical).toSet
       val keepRaw = st.select("file").collect().map(_.getString(0))
@@ -970,13 +935,13 @@ object Manifests {
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
     val fs = files(spark, base, v)
+    val m = meta(spark, base, v).carried
     val dir = writeStats(spark, base,
-      statsFor(spark, fs, keys, schemaOf(spark, base, v),
-        renamesOf(spark, base, v)))
+      statsFor(spark, fs, keys, m.schema, m.renames))
     val ndvs: Map[String, Long] =
       if (keys.isEmpty) Map.empty
       else {
-        val row = readAt(spark, base, v).agg(
+        val row = readAt(spark, base, v, m).agg(
           approx_count_distinct(col(s"`${keys.head}`"), 0.02),
           keys.tail.map(k => approx_count_distinct(col(s"`$k`"), 0.02)): _*)
           .head
@@ -998,16 +963,12 @@ object Manifests {
           k -> (if (n <= 32L * ndvKmvK) Long.MaxValue
           else (math.pow(2, 60) * 32.0 * ndvKmvK / n).toLong)
         }
-        kmvSketchOf(readAt(spark, base, v), keys, ts,
+        kmvSketchOf(readAt(spark, base, v, m), keys, ts,
           exactWhenShort = true)
       }
-    commit(spark, base, fs, None, dvFiles(spark, base, v),
-      schemaOf(spark, base, v), Some((keys, Seq(dir))), parent = Some(v),
-      partValues = partitionedBy(spark, base, v),
-      blooms = bloomOf(spark, base, v),
-      delta = Some((Seq.empty, Seq.empty)),
-      ndv = Some(ndvOf(spark, base, v) ++ ndvs),
-      ndvKmv = Some(ndvKmvOf(spark, base, v) ++ sketches))
+    commit(spark, base, fs, m.copy(stats = Some((keys, Seq(dir))),
+        ndv = m.ndv ++ ndvs, ndvKmv = m.ndvKmv ++ sketches),
+      parent = Some(v), delta = Some((Seq.empty, Seq.empty)))
   }
 
   /** Per-append NDV sketch maintenance switch (default on): ANALYZE
@@ -1032,16 +993,18 @@ object Manifests {
     * selectivity with. None on pre-freshness tables (served as
     * "fresh", today's behavior). */
   def histRowsOf(spark: SparkSession, base: String, v: Int): Option[Long] =
-    if (!Dfs.exists(spark, s"$base/v$v/_histrows")) None
-    else scala.util.Try(new String(
-      Dfs.readBytes(spark, s"$base/v$v/_histrows"), "UTF-8").trim.toLong)
-      .toOption
+    histRowsOf(probe(spark, base, v))
+  private def histRowsOf(sc: Sidecars): Option[Long] =
+    if (!sc.has("_histrows")) None
+    else scala.util.Try(sc.text("_histrows").trim.toLong).toOption
 
   def histOf(spark: SparkSession, base: String, v: Int)
       : Map[String, (Double, Seq[(Double, Double, Long)])] =
-    if (!Dfs.exists(spark, s"$base/v$v/_hist")) Map.empty
-    else new String(Dfs.readBytes(spark, s"$base/v$v/_hist"), "UTF-8")
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+    histOf(probe(spark, base, v))
+  private def histOf(
+      sc: Sidecars): Map[String, (Double, Seq[(Double, Double, Long)])] =
+    if (!sc.has("_hist")) Map.empty
+    else sc.lines("_hist")
       .flatMap { line =>
         line.split("\t") match {
           case Array(c, h, bins) => scala.util.Try((c, (h.toDouble,
@@ -1078,16 +1041,12 @@ object Manifests {
     require(numBins >= 2 && numBins <= 4096, s"bad numBins $numBins")
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
-    val live = readAt(spark, base, v)
-    val (hists, liveRows) = histogramsOf(spark, live, keys, numBins)
-    commit(spark, base, files(spark, base, v), None,
-      dvFiles(spark, base, v), schemaOf(spark, base, v),
-      statsOf(spark, base, v), parent = Some(v),
-      partValues = partitionedBy(spark, base, v),
-      blooms = bloomOf(spark, base, v),
-      delta = Some((Seq.empty, Seq.empty)),
-      hist = Some(histOf(spark, base, v) ++ hists),
-      histRows = liveRows)
+    val m = meta(spark, base, v).carried
+    val (hists, liveRows) =
+      histogramsOf(spark, readAt(spark, base, v, m), keys, numBins)
+    commit(spark, base, files(spark, base, v),
+      m.copy(hist = m.hist ++ hists, histRows = liveRows.orElse(m.histRows)),
+      parent = Some(v), delta = Some((Seq.empty, Seq.empty)))
   }
 
   /** The histogram computation under [[analyzeHistograms]] over an
@@ -1245,12 +1204,12 @@ object Manifests {
     * empty when the version carries none. Each sidecar is a tiny
     * parquet of `(__file, __pos)` rows marking deleted positions in
     * otherwise-untouched data files (see [[deleteWhereMor]]). */
-  def dvFiles(spark: SparkSession, base: String, v: Int): Seq[String] = {
-    require(Dfs.exists(spark, s"$base/v$v/_SUCCESS"),
-      s"version $v was never committed under $base")
-    if (!Dfs.exists(spark, s"$base/v$v/_deletes")) Seq.empty
-    else new String(Dfs.readBytes(spark, s"$base/v$v/_deletes"), "UTF-8")
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
+  def dvFiles(spark: SparkSession, base: String, v: Int): Seq[String] =
+    dvFiles(probe(spark, base, v))
+  private def dvFiles(sc: Sidecars): Seq[String] = {
+    require(sc.has("_SUCCESS"),
+      s"version ${sc.v} was never committed under ${sc.base}")
+    if (!sc.has("_deletes")) Seq.empty else sc.lines("_deletes")
   }
 
   /** The version's CDF update classification, when its write recorded
@@ -1347,10 +1306,11 @@ object Manifests {
     df.write.mode("errorifexists").parquet(dir)
     val fs = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
     // an overwrite on a live table must still honor its constraints
-    enforceConstraints(spark, base, latestVersion(spark, base), fs,
-      Some(df.schema), overwrite = true)
-    commit(spark, base, fs,
-      schema = Some(recordSchema.getOrElse(df.schema)))
+    val latest = latestVersion(spark, base)
+    enforceConstraints(spark, base, latest, fs, Some(df.schema),
+      overwrite = true)
+    commit(spark, base, fs, overwriteMeta(spark, base, latest)
+      .copy(schema = Some(recordSchema.getOrElse(df.schema))))
   }
 
   /** Bootstrap a BUCKETED table: rows are hash-partitioned on `keys`
@@ -1405,23 +1365,26 @@ object Manifests {
     // re-list for the manifest: listing paths are filesystem-qualified,
     // the spelling every other write path's set arithmetic compares by
     val renamed = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
-    enforceConstraints(spark, base, latestVersion(spark, base), renamed,
-      Some(df.schema), overwrite = true)
-    val v = commit(spark, base, renamed, schema = Some(df.schema))
-    Dfs.writeBytes(spark, s"$base/v$v/_bucketspec",
-      s"$numBuckets\n${keys.mkString(",")}\n${sortBy.mkString(",")}\n"
-        .getBytes("UTF-8"))
-    v
+    val latest = latestVersion(spark, base)
+    enforceConstraints(spark, base, latest, renamed, Some(df.schema),
+      overwrite = true)
+    // the spec is part of the record, so it lands before `_SUCCESS`:
+    // a failed write leaves no visible version missing its layout
+    commit(spark, base, renamed, overwriteMeta(spark, base, latest).copy(
+      schema = Some(df.schema),
+      bucketSpec = Some((numBuckets, keys, sortBy))))
   }
 
   /** The recorded bucket layout of version `v`, if that version was
     * written by [[commitDataBucketed]]: (numBuckets, keys, sortCols). */
   def bucketSpecOf(spark: SparkSession, base: String,
       v: Int): Option[(Int, Seq[String], Seq[String])] =
-    if (!Dfs.exists(spark, s"$base/v$v/_bucketspec")) None
+    bucketSpecOf(probe(spark, base, v))
+  private def bucketSpecOf(
+      sc: Sidecars): Option[(Int, Seq[String], Seq[String])] =
+    if (!sc.has("_bucketspec")) None
     else {
-      val lines = new String(
-        Dfs.readBytes(spark, s"$base/v$v/_bucketspec"), "UTF-8").split("\n")
+      val lines = sc.text("_bucketspec").split("\n")
       def cols(i: Int) =
         if (lines.length <= i) Seq.empty
         else lines(i).split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -1433,12 +1396,11 @@ object Manifests {
     * one row per (file, distinct partition tuple) the file contains). */
   def partitionedBy(spark: SparkSession, base: String,
       v: Int): Option[(Seq[String], Seq[String])] =
-    if (!Dfs.exists(spark, s"$base/v$v/_partcols")) None
-    else Some((
-      new String(Dfs.readBytes(spark, s"$base/v$v/_partcols"), "UTF-8")
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq,
-      new String(Dfs.readBytes(spark, s"$base/v$v/_partvalues"), "UTF-8")
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq))
+    partitionedBy(probe(spark, base, v))
+  private def partitionedBy(
+      sc: Sidecars): Option[(Seq[String], Seq[String])] =
+    if (!sc.has("_partcols")) None
+    else Some((sc.lines("_partcols"), sc.lines("_partvalues")))
 
   /** The CURRENT partition-tuple semantics version: 2 = time
     * transforms UTC-pinned (Iceberg's TZ-free definition). Version 1
@@ -1453,10 +1415,10 @@ object Manifests {
     * current. Consumers refuse TZ-sensitive lowering/SPJ below
     * [[PartSemCurrent]] ([[PartField.tzSensitive]]). */
   def partSemOf(spark: SparkSession, base: String, v: Int): Int =
-    if (Dfs.exists(spark, s"$base/v$v/_partsem"))
-      new String(Dfs.readBytes(spark, s"$base/v$v/_partsem"), "UTF-8")
-        .trim.toInt
-    else if (Dfs.exists(spark, s"$base/v$v/_partcols")) 1
+    partSemOf(probe(spark, base, v))
+  private def partSemOf(sc: Sidecars): Int =
+    if (sc.has("_partsem")) sc.text("_partsem").trim.toInt
+    else if (sc.has("_partcols")) 1
     else PartSemCurrent
 
   /** False when `v`'s recorded tuples predate UTC semantics AND the
@@ -1484,9 +1446,11 @@ object Manifests {
     * that never evolved — the pre-evolution world, byte-identical. */
   def partitionHistory(spark: SparkSession, base: String,
       v: Int): Seq[(Seq[String], Seq[String])] =
-    if (!Dfs.exists(spark, s"$base/v$v/_parthistory")) Seq.empty
-    else new String(Dfs.readBytes(spark, s"$base/v$v/_parthistory"),
-      "UTF-8").split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+    partitionHistory(probe(spark, base, v))
+  private def partitionHistory(
+      sc: Sidecars): Seq[(Seq[String], Seq[String])] =
+    if (!sc.has("_parthistory")) Seq.empty
+    else sc.lines("_parthistory")
       .flatMap { line =>
         line.split("\\|") match {
           case Array(cols, segs) => Some((
@@ -1524,11 +1488,12 @@ object Manifests {
         "no un-partition evolution (compact() under no spec instead)")
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
-    val sch = schemaOf(spark, base, v).getOrElse(
+    val m = meta(spark, base, v).carried
+    val sch = m.schema.getOrElse(
       spark.read.parquet(files(spark, base, v).head).schema)
     PartitionTransforms.validateAll(newSpecs, sch,
       spark.sessionState.analyzer.resolver)
-    val old = partitionedBy(spark, base, v)
+    val old = m.partValues
     // same-spec short-circuit on the PARSED fields, not raw strings: a
     // semantically identical spec re-spelled (spacing, case of a bare
     // column vs the resolver's) must not burn a version whose empty
@@ -1542,7 +1507,6 @@ object Manifests {
       val nf = PartitionTransforms.parseAll(newSpecs)
       of.size == nf.size && of.zip(nf).forall((sameField _).tupled)
     }) return v
-    val history = partitionHistory(spark, base, v) ++ old.toSeq
     // the new current group starts EMPTY: a zero-row sidecar carrying
     // the new tuple schema, so every downstream consumer (pruning,
     // purity folds, rewrites) reads it unchanged — existing files are
@@ -1550,14 +1514,9 @@ object Manifests {
     // the exactness proofs) until appends/OPTIMIZE populate it
     val seg = writeEmptyPartValues(spark, base, newSpecs, sch)
     commit(spark, base, files(spark, base, v),
-      tag = Some("evolve-partitions"),
-      dv = dvFiles(spark, base, v),
-      schema = schemaOf(spark, base, v),
-      stats = statsOf(spark, base, v),
-      parent = Some(v),
-      partValues = Some((newSpecs, Seq(seg))),
-      partHistory = Some(history),
-      blooms = bloomOf(spark, base, v),
+      m.copy(partValues = Some((newSpecs, Seq(seg))),
+        partHistory = m.partHistory ++ old.toSeq),
+      parent = Some(v), tag = Some("evolve-partitions"),
       delta = Some((Seq.empty, Seq.empty)))
   }
 
@@ -1626,10 +1585,11 @@ object Manifests {
     * untouched files, re-derive only the rewritten ones — the same
     * incremental contract as [[statsAfterRewrite]]. */
   private def partValuesAfterRewrite(spark: SparkSession, base: String,
-      v: Int, untouched: Seq[String], rewritten: Seq[String],
+      cur: Option[(Seq[String], Seq[String])],
+      untouched: Seq[String], rewritten: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType])
       : Option[(Seq[String], Seq[String])] =
-    partitionedBy(spark, base, v).map { case (cols, segs) =>
+    cur.map { case (cols, segs) =>
       val pv = spark.read.parquet(segs: _*)
       val unt = untouched.map(Dfs.canonical).toSet
       val keepRaw = pv.select("file").distinct().collect()
@@ -1664,12 +1624,10 @@ object Manifests {
     * appears in exactly one segment of a version's list). */
   def bloomOf(spark: SparkSession, base: String,
       v: Int): Option[(Seq[String], Seq[String])] =
-    if (!Dfs.exists(spark, s"$base/v$v/_bloomfile")) None
-    else Some((
-      new String(Dfs.readBytes(spark, s"$base/v$v/_bloomkeys"), "UTF-8")
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq,
-      new String(Dfs.readBytes(spark, s"$base/v$v/_bloomfile"), "UTF-8")
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq))
+    bloomOf(probe(spark, base, v))
+  private def bloomOf(sc: Sidecars): Option[(Seq[String], Seq[String])] =
+    if (!sc.has("_bloomfile")) None
+    else Some((sc.lines("_bloomkeys"), sc.lines("_bloomfile")))
 
   /** One bloom filter per (data file, key): one column-pruned scan,
     * map-side-merged by bitwise OR (Spark's own BloomFilterAggregate —
@@ -1713,10 +1671,11 @@ object Manifests {
     * incremental contract. Rewrites already pay data I/O, so this is
     * also where the segment list COMPACTS back to one. */
   private def bloomsAfterRewrite(spark: SparkSession, base: String,
-      v: Int, untouched: Seq[String], rewritten: Seq[String],
+      cur: Option[(Seq[String], Seq[String])],
+      untouched: Seq[String], rewritten: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType])
       : Option[(Seq[String], Seq[String])] =
-    bloomOf(spark, base, v).map { case (keys, segs) =>
+    cur.map { case (keys, segs) =>
       val bl = spark.read.parquet(segs: _*)
       val unt = untouched.map(Dfs.canonical).toSet
       val keepRaw = bl.select("file").collect()
@@ -1735,6 +1694,42 @@ object Manifests {
       (keys, Seq(writeBlooms(spark, base, merged)))
     }
 
+  /** `m` carried across a copy-on-write rewrite read under `schema`:
+    * zone stats, partition tuples and blooms keep their `untouched`
+    * rows and re-derive only the `rewritten` files (each compacting to
+    * one segment), and the version publishes no vectors — the rewrite
+    * paths either refuse vectored input or materialize it. */
+  private def afterRewrite(spark: SparkSession, base: String,
+      m: VersionMeta, untouched: Seq[String], rewritten: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType]): VersionMeta =
+    m.copy(dv = Nil, schema = schema,
+      stats = statsAfterRewrite(spark, base, m.stats, untouched, rewritten,
+        schema),
+      partValues = partValuesAfterRewrite(spark, base, m.partValues,
+        untouched, rewritten, schema),
+      blooms = bloomsAfterRewrite(spark, base, m.blooms, untouched,
+        rewritten, schema))
+
+  /** `m` extended by freshly appended `newFiles` read under `schema`:
+    * existing zone-stat, partition-tuple and bloom SEGMENTS carry by
+    * reference and each tier gains one segment covering only the new
+    * files, so per-append sidecar writes are ∝ appended files, never
+    * the table (a merged sidecar would be O(files) per append, O(n²)
+    * cumulative at ~128 KB per file per bloom key). */
+  private def withAppended(spark: SparkSession, base: String,
+      m: VersionMeta, newFiles: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType]): VersionMeta =
+    if (newFiles.isEmpty) m
+    else m.copy(
+      stats = m.stats.map { case (keys, segs) =>
+        (keys, segs :+ writeStats(spark, base,
+          statsFor(spark, newFiles, keys, schema))) },
+      partValues = m.partValues.map { case (cols, segs) =>
+        (cols, segs :+ writePartValues(spark, base, newFiles, cols, schema)) },
+      blooms = m.blooms.map { case (keys, segs) =>
+        (keys, segs :+ writeBlooms(spark, base,
+          buildBlooms(spark, newFiles, keys, schema))) })
+
   /** ANALYZE ... FOR BLOOM: build the per-file bloom index for `keys`
     * over the latest version and publish it as the next version (data,
     * vectors, schema, zone stats, partition metadata all carried BY
@@ -1750,14 +1745,11 @@ object Manifests {
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
     val fs = files(spark, base, v)
+    val m = meta(spark, base, v).carried
     val dir = writeBlooms(spark, base,
-      buildBlooms(spark, fs, keys, schemaOf(spark, base, v),
-        renamesOf(spark, base, v)))
-    commit(spark, base, fs, None, dvFiles(spark, base, v),
-      schemaOf(spark, base, v), statsOf(spark, base, v), parent = Some(v),
-      partValues = partitionedBy(spark, base, v),
-      blooms = Some((keys, Seq(dir))),
-      delta = Some((Seq.empty, Seq.empty)))
+      buildBlooms(spark, fs, keys, m.schema, m.renames))
+    commit(spark, base, fs, m.copy(blooms = Some((keys, Seq(dir)))),
+      parent = Some(v), delta = Some((Seq.empty, Seq.empty)))
   }
 
   /** Bootstrap a PARTITIONED table — the manifest twin of Hive/Delta
@@ -1865,17 +1857,17 @@ object Manifests {
         .write.mode("errorifexists").parquet(dir)
     }
     val files = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
-    enforceConstraints(spark, base, latestVersion(spark, base), files,
-      Some(df.schema), overwrite = true)
-    commit(spark, base, files,
+    val latest = latestVersion(spark, base)
+    enforceConstraints(spark, base, latest, files, Some(df.schema),
+      overwrite = true)
+    commit(spark, base, files, overwriteMeta(spark, base, latest).copy(
       schema = Some(recordSchema.getOrElse(df.schema)),
       partValues = Some((partCols,
         Seq(writePartValues(spark, base, files, partCols, Some(df.schema))))),
       // a whole-table re-partition derives EVERY file under the new
       // spec: any evolution history of the superseded table is moot —
       // and every tuple is current-semantics by construction
-      partHistory = Some(Seq.empty),
-      partSem = Some(PartSemCurrent))
+      partHistory = Nil, partSem = PartSemCurrent))
   }
 
   /** Data rows tagged with their physical address: parquet's hidden
@@ -2054,6 +2046,11 @@ object Manifests {
   def readAt(spark: SparkSession, base: String, v: Int): DataFrame =
     liveRead(spark, files(spark, base, v), dvFiles(spark, base, v),
       schemaOf(spark, base, v), renamesOf(spark, base, v))
+
+  /** [[readAt]] through `v`'s already-read record `m`. */
+  private def readAt(spark: SparkSession, base: String, v: Int,
+      m: VersionMeta): DataFrame =
+    liveRead(spark, files(spark, base, v), m.dv, m.schema, m.renames)
 
   /** [[readAt]] with the row-identity columns kept: every live row
     * carries `__file` (the data file's `_metadata.file_path` spelling)
@@ -2272,9 +2269,9 @@ object Manifests {
     // reads through the version's deletion vectors, so compaction is
     // also the MATERIALIZE step: the rewritten files carry no deleted
     // rows and the new version carries no vectors
-    val live = readAt(spark, base, v)
-    val partSpecs = partitionedBy(spark, base, v).map(_._1)
-    (clusterBy, partSpecs) match {
+    val m = meta(spark, base, v).carried
+    val live = readAt(spark, base, v, m)
+    (clusterBy, m.partValues.map(_._1)) match {
       // a PARTITIONED table compacts at tuple boundaries by default
       // (Delta/Iceberg OPTIMIZE never merges across partitions): each
       // output file holds exactly one partition tuple, so compaction
@@ -2299,22 +2296,15 @@ object Manifests {
     // materialize rows that were already logically deleted in earlier
     // versions), so the change feed serves this step EMPTY instead of
     // paying a whole-table content diff that provably nets to zero
-    val nv = commit(spark, base, rewritten, tag = Some("compact"),
-      preservesContent = true,
-      schema = Some(live.schema),
-      stats = statsAfterRewrite(spark, base, v, Seq.empty, rewritten,
-        Some(live.schema)), parent = Some(v),
-      partValues = partValuesAfterRewrite(spark, base, v, Seq.empty,
-        rewritten, Some(live.schema)),
-      // the full rewrite re-derived EVERY file under the current spec:
-      // evolution history is spent — dropping it is what RESTORES the
-      // SPJ purity proof and the metadata-only tiers after an evolve,
-      // and every tuple is current-semantics again (the OPTIMIZE that
-      // upgrades a pre-UTC table)
-      partHistory = Some(Seq.empty),
-      partSem = Some(PartSemCurrent),
-      blooms = bloomsAfterRewrite(spark, base, v, Seq.empty, rewritten,
-        Some(live.schema)))
+    val nv = commit(spark, base, rewritten,
+      afterRewrite(spark, base, m, Seq.empty, rewritten, Some(live.schema))
+        // the full rewrite re-derived EVERY file under the current spec:
+        // evolution history is spent — dropping it is what RESTORES the
+        // SPJ purity proof and the metadata-only tiers after an evolve,
+        // and every tuple is current-semantics again (the OPTIMIZE that
+        // upgrades a pre-UTC table)
+        .copy(partHistory = Nil, partSem = PartSemCurrent),
+      parent = Some(v), tag = Some("compact"), preservesContent = true)
     (cur.size, rewritten.size, nv)
   }
 
@@ -2432,14 +2422,9 @@ object Manifests {
       parent =>
         val (retired, kept) = files(spark, base, parent)
           .partition(f => fullSet.contains(Dfs.canonical(f)))
-        commit(spark, base, kept,
-          None,
-          dvFiles(spark, base, parent) ++ written,
-          schemaOf(spark, base, parent), statsOf(spark, base, parent),
-          parent = Some(parent),
-          partValues = partitionedBy(spark, base, parent),
-          blooms = bloomOf(spark, base, parent),
-          delta = Some((Seq.empty, retired)))
+        val m = lr.carriedAt(parent)
+        commit(spark, base, kept, m.copy(dv = m.dv ++ written),
+          parent = Some(parent), delta = Some((Seq.empty, retired)))
     })
   }
 
@@ -2454,18 +2439,20 @@ object Manifests {
   private final class LiveReader(spark: SparkSession, base: String,
       v: Int) {
     val cur: Seq[String] = files(spark, base, v)
-    val prevDvs: Seq[String] = dvFiles(spark, base, v)
-    val sch: Option[org.apache.spark.sql.types.StructType] =
-      schemaOf(spark, base, v)
-    private val ren = renamesOf(spark, base, v)
+    private val m = meta(spark, base, v)
+    val sch: Option[org.apache.spark.sql.types.StructType] = m.schema
     def rd(fs: Seq[String], pos: Boolean = false): DataFrame =
-      eraRead(spark, ren, fs, sch, withPositions = pos)
+      eraRead(spark, m.renames, fs, sch, withPositions = pos)
     def liveOf(fs: Seq[String]): DataFrame = {
       val r = rd(fs, pos = true)
-      if (prevDvs.isEmpty) r
-      else r.join(spark.read.parquet(prevDvs: _*),
+      if (m.dv.isEmpty) r
+      else r.join(spark.read.parquet(m.dv: _*),
         Seq("__file", "__pos"), "left_anti")
     }
+    /** The record a commit derived from `parent` starts from — the
+      * snapshot's own, already read, unless a rebase moved past it. */
+    def carriedAt(parent: Int): VersionMeta =
+      (if (parent == v) m else meta(spark, base, parent)).carried
     def liveTotals(fs: Seq[String]): Map[String, Long] =
       if (fs.isEmpty) Map.empty
       else liveOf(fs).groupBy("__file").count()
@@ -2569,22 +2556,11 @@ object Manifests {
       added => rd(added).filter(hit).limit(1).count() > 0) { parent =>
       val (retired, kept) = files(spark, base, parent)
         .partition(f => fullSet.contains(Dfs.canonical(f)))
-      val stats = statsOf(spark, base, parent).map { case (keys, segs) =>
-        (keys, segs :+ writeStats(spark, base,
-          statsFor(spark, newFiles, keys, sch)))
-      }
-      val pv = partitionedBy(spark, base, parent).map { case (cols, segs) =>
-        (cols, segs :+ writePartValues(spark, base, newFiles, cols, sch))
-      }
-      val bl = bloomOf(spark, base, parent).map { case (keys, segs) =>
-        (keys, segs :+ writeBlooms(spark, base,
-          buildBlooms(spark, newFiles, keys, sch)))
-      }
-      commit(spark, base, kept ++ newFiles, None,
-        dvFiles(spark, base, parent) ++ written,
-        sch, stats, parent = Some(parent),
-        partValues = pv, blooms = bl,
-        delta = Some((newFiles, retired)))
+      val m = lr.carriedAt(parent)
+      commit(spark, base, kept ++ newFiles,
+        withAppended(spark, base, m, newFiles, sch)
+          .copy(dv = m.dv ++ written),
+        parent = Some(parent), delta = Some((newFiles, retired)))
     }
     (fullSet.size + partialSet.size, updated, nv)
   }
@@ -2679,23 +2655,12 @@ object Manifests {
         .join(keys, keyCols, "left_semi").limit(1).count() > 0) { parent =>
       val (retired, kept) = files(spark, base, parent)
         .partition(f => fullSet.contains(Dfs.canonical(f)))
-      val stats = statsOf(spark, base, parent).map { case (ks, segs) =>
-        (ks, segs :+ writeStats(spark, base,
-          statsFor(spark, newFiles, ks, sch)))
-      }
-      val pv = partitionedBy(spark, base, parent).map { case (cols, segs) =>
-        (cols, segs :+ writePartValues(spark, base, newFiles, cols, sch))
-      }
-      val bl = bloomOf(spark, base, parent).map { case (ks, segs) =>
-        (ks, segs :+ writeBlooms(spark, base,
-          buildBlooms(spark, newFiles, ks, sch)))
-      }
-      commit(spark, base, kept ++ newFiles, tag,
-        dvFiles(spark, base, parent) ++ written,
-        sch, stats, parent = Some(parent),
-        partValues = pv, blooms = bl,
-        delta = Some((newFiles, retired)),
-        txn = txn)
+      val m = lr.carriedAt(parent)
+      commit(spark, base, kept ++ newFiles,
+        withAppended(spark, base, m, newFiles, sch)
+          .copy(dv = m.dv ++ written),
+        parent = Some(parent), tag = tag,
+        delta = Some((newFiles, retired)), txn = txn)
     }
     (fullSet.size + partialSet.size, batchRows, nv)
   }
@@ -2766,25 +2731,11 @@ object Manifests {
         .getOrElse(true)) { parent =>
       val (retired, kept) = files(spark, base, parent)
         .partition(f => fullSet.contains(Dfs.canonical(f)))
-      val stats = statsOf(spark, base, parent).map { case (keys, segs) =>
-        if (dataWritten.isEmpty) (keys, segs)
-        else (keys, segs :+ writeStats(spark, base,
-          statsFor(spark, dataWritten, keys, sch)))
-      }
-      val pv = partitionedBy(spark, base, parent).map { case (cols, segs) =>
-        if (dataWritten.isEmpty) (cols, segs)
-        else (cols, segs :+ writePartValues(spark, base, dataWritten,
-          cols, sch))
-      }
-      val bl = bloomOf(spark, base, parent).map { case (keys, segs) =>
-        if (dataWritten.isEmpty) (keys, segs)
-        else (keys, segs :+ writeBlooms(spark, base,
-          buildBlooms(spark, dataWritten, keys, sch)))
-      }
-      commit(spark, base, kept ++ dataWritten, tag,
-        dvFiles(spark, base, parent) ++ addDvs,
-        sch, stats, parent = Some(parent),
-        partValues = pv, blooms = bl,
+      val m = lr.carriedAt(parent)
+      commit(spark, base, kept ++ dataWritten,
+        withAppended(spark, base, m, dataWritten, sch)
+          .copy(dv = m.dv ++ addDvs),
+        parent = Some(parent), tag = tag,
         delta = Some((dataWritten, retired)),
         cdcUpd = cdc.map { case (post, updDv) =>
           post.map(f => s"P\t${Dfs.canonical(f)}") ++
@@ -2993,21 +2944,16 @@ object Manifests {
       tag: Option[String],
       conflictsWith: Seq[String] => Boolean,
       txn: Option[(String, Long)] = None): Int = {
-    val sch = schemaOf(spark, base, snapshot)
     rebaseLoop(spark, base, snapshot, conflictsWith) { parent =>
       val (replaced, untouched) = files(spark, base, parent)
         .map(Dfs.canonical).partition(touched)
-      commit(spark, base, untouched ++ rewritten, tag,
-        schema = sch,
-        stats = statsAfterRewrite(spark, base, parent, untouched,
-          rewritten, sch),
-        parent = Some(parent),
-        partValues = partValuesAfterRewrite(spark, base, parent, untouched,
-          rewritten, sch),
-        blooms = bloomsAfterRewrite(spark, base, parent, untouched,
-          rewritten, sch),
-        delta = Some((rewritten, replaced)),
-        txn = txn)
+      // a rebased parent differs from the snapshot by pure appends
+      // only, so its recorded schema is the snapshot's byte for byte
+      val m = meta(spark, base, parent).carried
+      commit(spark, base, untouched ++ rewritten,
+        afterRewrite(spark, base, m, untouched, rewritten, m.schema),
+        parent = Some(parent), tag = tag,
+        delta = Some((rewritten, replaced)), txn = txn)
     }
   }
 
@@ -3263,9 +3209,9 @@ object Manifests {
         val dir = s"$base/data_batch_$batchId"
         batch.write.mode("overwrite").parquet(dir)
         try Some(commit(spark, base,
-          Dfs.dataFiles(spark, dir).map(_.getPath.toString), Some(tag),
-          schema = Some(batch.schema), parent = Some(-1),
-          txn = Some(("cdc", batchId))))
+          Dfs.dataFiles(spark, dir).map(_.getPath.toString),
+          VersionMeta(schema = Some(batch.schema)), parent = Some(-1),
+          tag = Some(tag), txn = Some(("cdc", batchId))))
         catch {
           // lost the bootstrap race: the table exists now — merge instead
           case _: ConcurrentCommitException =>
@@ -3441,58 +3387,33 @@ object Manifests {
       val replayed = prev.exists(v =>
         replayedIn(spark, base, v, txn, replayMarker))
       if (replayed) return None
+      // the record this append extends: the latest version's — or, for
+      // a BOOTSTRAP (no previous version) of a table whose CREATE
+      // declared partition columns, an empty one carrying that spec,
+      // without which a streaming-first table would silently lose
+      // metadata-only partition DML and pruning forever
+      val m = prev.fold(VersionMeta(partValues =
+          Some((bootstrapPartCols, Seq.empty[String])).filter(_._1.nonEmpty)))(
+        meta(spark, base, _).carried)
       // additive schema evolution: a batch may bring new columns; the
       // union schema is recorded in the manifest so readers null-fill
       // the old files without a footer sweep (a type conflict REFUSES)
-      val tableSchema = prev.flatMap(schemaOf(spark, base, _)) match {
+      val tableSchema = m.schema match {
         case None => batchSchema
         case Some(old) => evolveSchema(old, batchSchema)
       }
       // a tombstoned (dropped) column must not come back through
       // additive evolution: the retained files still hold its old
       // physical bytes, and re-adding the name would resurrect them
-      prev.map(droppedOf(spark, base, _)).getOrElse(Seq.empty)
-        .foreach(d => require(!batchSchema.fieldNames.contains(d),
-          s"column '$d' was dropped from $base and its bytes remain in " +
-            "retained files — re-adding it would resurrect old values; " +
-            "use a new name or overwrite the table"))
+      m.dropped.foreach(d => require(!batchSchema.fieldNames.contains(d),
+        s"column '$d' was dropped from $base and its bytes remain in " +
+          "retained files — re-adding it would resurrect old values; " +
+          "use a new name or overwrite the table"))
       // CHECK constraints validate the new rows ONCE, when they land
       // (retries re-derive metadata only; the data never changes)
       if (!validated) enforceConstraints(spark, base, prev, newFiles,
         Some(tableSchema))
       val cur = prev.map(files(spark, base, _)).getOrElse(Seq.empty)
-      // stats: existing SEGMENTS carry by reference, only the new files
-      // are statted into one new segment — per-append sidecar writes are
-      // ∝ appended files, never the table (same shape as the blooms)
-      val stats = prev.flatMap(v => statsOf(spark, base, v)).map {
-        case (keys, segs) =>
-          (keys, segs :+ writeStats(spark, base,
-            statsFor(spark, newFiles, keys, Some(tableSchema))))
-      }
-      // partition metadata: same segmented carry, tuples derived for the
-      // new files only. A BOOTSTRAP (no previous version) of a table
-      // whose CREATE declared partition columns records its spec here —
-      // otherwise a streaming-first table would silently lose
-      // metadata-only partition DML and pruning forever.
-      val pvMeta = prev.flatMap(pv => partitionedBy(spark, base, pv))
-        .orElse(
-          if (prev.isEmpty && bootstrapPartCols.nonEmpty)
-            Some((bootstrapPartCols, Seq.empty[String]))
-          else None)
-        .map { case (cols, segs) =>
-          (cols, segs :+ writePartValues(spark, base, newFiles, cols,
-            Some(tableSchema)))
-        }
-      // bloom index: existing SEGMENTS carry by reference — an append
-      // writes one new segment covering only its new files, so the bloom
-      // bytes written are ∝ appended files, not the table (the merged-
-      // sidecar alternative is O(files) per append, O(n²) cumulative at
-      // ~128 KB per file per key). Rewrites and ANALYZE compact the list.
-      val blMeta = prev.flatMap(bv => bloomOf(spark, base, bv)).map {
-        case (keys, segs) =>
-          (keys, segs :+ writeBlooms(spark, base,
-            buildBlooms(spark, newFiles, keys, Some(tableSchema))))
-      }
       // NDV maintenance: when the table carries a KMV sketch (ANALYZE
       // under graft.ndv.incremental), fold the BATCH's sketch in — one
       // TakeOrdered job per analyzed column over the appended files
@@ -3500,7 +3421,7 @@ object Manifests {
       // per column; without this the inherited point estimate drifts
       // arbitrarily far below truth as appends accumulate.
       val ndvMeta: Option[(Map[String, Long], Map[String, Seq[Long]])] =
-        prev.map(ndvKmvOf(spark, base, _)).filter(_.nonEmpty)
+        Some(m.ndvKmv).filter(_.nonEmpty)
           .filter(_ => ndvIncremental(spark)).map { parentKmv =>
             val batchDf = eraRead(spark, Nil, newFiles, Some(tableSchema))
             // a FULL parent sketch rejects any hash above its k-th
@@ -3515,13 +3436,12 @@ object Manifests {
               exactWhenShort = false)
             val merged = parentKmv.map { case (c, old) =>
               c -> kmvMerge(old, fresh.getOrElse(c, Seq.empty)) }
-            val prevNdv = prev.map(ndvOf(spark, base, _)).getOrElse(Map.empty)
             // a not-yet-full sketch is EXACT; a full one estimates —
             // never report less than the pre-append estimate (appends
             // cannot shrink NDV)
             val est = merged.map { case (c, hs) =>
-              c -> math.max(kmvEstimate(hs), prevNdv.getOrElse(c, 0L)) }
-            (prevNdv ++ est, merged)
+              c -> math.max(kmvEstimate(hs), m.ndv.getOrElse(c, 0L)) }
+            (m.ndv ++ est, merged)
           }
       // HISTOGRAM maintenance (the `_hist` twin of the KMV fold): when
       // the table carries histograms, compute the BATCH's own
@@ -3537,39 +3457,33 @@ object Manifests {
       // claiming a freshness they no longer have.
       val histMeta: Option[(Map[String, (Double, Seq[(Double, Double,
           Long)])], Long)] =
-        prev.flatMap { pv =>
-          val parentHist = histOf(spark, base, pv)
-          val anchor = histRowsOf(spark, base, pv)
-          if (parentHist.isEmpty || anchor.isEmpty ||
-              !histIncremental(spark)) None
-          else {
-            val batchDf = eraRead(spark, Nil, newFiles, Some(tableSchema))
-            val byBins = parentHist.groupBy(_._2._2.size)
-            val folded = byBins.toSeq.map { case (nb, cols) =>
-              histogramsOf(spark, batchDf, cols.keys.toSeq, nb)
-            }
-            val batchHists = folded.flatMap(_._1).toMap
-            val batchRows = folded.flatMap(_._2).reduceOption(_ max _)
-            if (batchRows.isEmpty ||
-                !parentHist.keys.forall(batchHists.contains)) None
-            else Some((parentHist.map { case (c, h) =>
-              c -> HistogramMerge.merge(h, batchHists(c)) },
-              anchor.get + batchRows.get))
+        if (m.hist.isEmpty || m.histRows.isEmpty ||
+            !histIncremental(spark)) None
+        else {
+          val batchDf = eraRead(spark, Nil, newFiles, Some(tableSchema))
+          val byBins = m.hist.groupBy(_._2._2.size)
+          val folded = byBins.toSeq.map { case (nb, cols) =>
+            histogramsOf(spark, batchDf, cols.keys.toSeq, nb)
           }
+          val batchHists = folded.flatMap(_._1).toMap
+          val batchRows = folded.flatMap(_._2).reduceOption(_ max _)
+          if (batchRows.isEmpty ||
+              !m.hist.keys.forall(batchHists.contains)) None
+          else Some((m.hist.map { case (c, h) =>
+            c -> HistogramMerge.merge(h, batchHists(c)) },
+            m.histRows.get + batchRows.get))
         }
       // deletion vectors stay valid across an append (they address
-      // existing files only) — carry them by reference like the data
-      try Some(commit(spark, base, cur ++ newFiles, None,
-        prev.map(dvFiles(spark, base, _)).getOrElse(Seq.empty),
-        Some(tableSchema), stats, parent = Some(prev.getOrElse(-1)),
-        partValues = pvMeta,
-        blooms = blMeta,
-        delta = Some((newFiles, Seq.empty)),
-        txn = txn,
-        ndv = ndvMeta.map(_._1),
-        ndvKmv = ndvMeta.map(_._2),
-        hist = histMeta.map(_._1),
-        histRows = histMeta.map(_._2)))
+      // existing files only) — carried by reference like the data
+      try Some(commit(spark, base, cur ++ newFiles,
+        withAppended(spark, base, m, newFiles, Some(tableSchema)).copy(
+          schema = Some(tableSchema),
+          ndv = ndvMeta.fold(m.ndv)(_._1),
+          ndvKmv = ndvMeta.fold(m.ndvKmv)(_._2),
+          hist = histMeta.fold(m.hist)(_._1),
+          histRows = histMeta.map(_._2).orElse(m.histRows)),
+        parent = Some(prev.getOrElse(-1)),
+        delta = Some((newFiles, Seq.empty)), txn = txn))
       catch {
         case e: ConcurrentCommitException =>
           if (remaining == 0) throw e
@@ -3682,7 +3596,7 @@ object Manifests {
           val nOut = math.max(1, math.ceil(
             small.map(f => sized(Dfs.canonical(f))).sum.toDouble /
               targetBytes).toInt)
-          val sch = schemaOf(spark, base, snap)
+          val m = meta(spark, base, snap).carried
           val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
           // a single-tuple group rewrites to single-tuple outputs, so
           // the SPJ purity proof survives the policy pass — and when
@@ -3691,8 +3605,8 @@ object Manifests {
           // splits its outputs at tuple boundaries, so the policy
           // CREATES purity for every file it touches instead of
           // cementing the mixed layout
-          val rd0 = eraRead(spark, renamesOf(spark, base, snap), small, sch)
-          partitionedBy(spark, base, snap).map(_._1) match {
+          val rd0 = eraRead(spark, m.renames, small, m.schema)
+          m.partValues.map(_._1) match {
             case Some(specs) if groups.lengthCompare(1) == 0 =>
               writeSplitByTuple(rd0, dir, specs, math.max(nOut, 1))
             case _ =>
@@ -3704,16 +3618,9 @@ object Manifests {
           val untouched = curFiles.filterNot(f =>
             smallSet.contains(Dfs.canonical(f)))
           val nv = commit(spark, base, untouched ++ rewritten,
-            tag = Some("autocompact"), preservesContent = true,
-            schema = sch,
-            stats = statsAfterRewrite(spark, base, snap, untouched,
-              rewritten, sch),
-            parent = Some(snap),
-            partValues = partValuesAfterRewrite(spark, base, snap,
-              untouched, rewritten, sch),
-            blooms = bloomsAfterRewrite(spark, base, snap, untouched,
-              rewritten, sch),
-            delta = Some((rewritten, small)))
+            afterRewrite(spark, base, m, untouched, rewritten, m.schema),
+            parent = Some(snap), tag = Some("autocompact"),
+            preservesContent = true, delta = Some((rewritten, small)))
           snap = nv
           curFiles = untouched ++ rewritten
         }
@@ -4775,45 +4682,26 @@ object Manifests {
     require(Dfs.exists(spark, s"$base/v$v/_SUCCESS"),
       s"version $v of $base was never committed or is vacuumed")
     // the restored version's WHOLE metadata story comes back with its
-    // data — constraints and drop-column tombstones included (Delta's
-    // RESTORE semantics). Inheriting the CURRENT latest's constraint
-    // set instead would resurrect pre-constraint rows in violation of a
-    // live CHECK without any validation pass, silently breaking the
-    // inductive invariant every other write path maintains; inheriting
-    // the current tombstones would refuse appends of a column the
-    // restored schema legitimately carries live.
+    // data (Delta's RESTORE semantics), not the superseded latest's:
+    // its constraint set (the latest's would resurrect pre-constraint
+    // rows in violation of a live CHECK without any validation pass),
+    // tombstones and rename events (the latest's would refuse appends
+    // of a column the restored schema carries live, or lose an era
+    // mapping), spec history and tuple-semantics stamp (the latest's
+    // could mark pre-UTC tuples trusted after a rollback across an
+    // OPTIMIZE upgrade), and its planner statistics
     commit(spark, base, files(spark, base, v),
-      tag = Some(s"restore:v$v"),
-      dv = dvFiles(spark, base, v),
-      schema = schemaOf(spark, base, v),
-      stats = statsOf(spark, base, v),
-      parent = Some(latest),
-      partValues = partitionedBy(spark, base, v),
-      // the restored version's OWN spec history must come back with it
-      // (the inherit default would carry the superseded latest's) —
-      // and its tuple-semantics stamp likewise: inheriting the
-      // latest's could mark pre-UTC tuples trusted after a rollback
-      // across an OPTIMIZE upgrade
-      partHistory = Some(partitionHistory(spark, base, v)),
-      partSem = Some(partSemOf(spark, base, v)),
-      blooms = bloomOf(spark, base, v),
-      constraints = Some(constraintsOf(spark, base, v)),
-      dropped = Some(droppedOf(spark, base, v)),
-      // ...and the restored version's RENAME story with it: inheriting
-      // the current latest's events instead would lose an era mapping
-      // across an intervening overwrite and null-fill pre-rename files
-      renames = Some(renamesOf(spark, base, v)),
-      ndv = Some(ndvOf(spark, base, v)),
-      ndvKmv = Some(ndvKmvOf(spark, base, v)))
+      meta(spark, base, v).carried, parent = Some(latest),
+      tag = Some(s"restore:v$v"))
   }
 
   /** Column names logically dropped on or before version `v` whose
     * physical bytes may still live in the version's files (the
     * [[dropColumn]] tombstone list). Empty when none. */
   def droppedOf(spark: SparkSession, base: String, v: Int): Seq[String] =
-    if (!Dfs.exists(spark, s"$base/v$v/_dropped")) Seq.empty
-    else new String(Dfs.readBytes(spark, s"$base/v$v/_dropped"), "UTF-8")
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
+    droppedOf(probe(spark, base, v))
+  private def droppedOf(sc: Sidecars): Seq[String] =
+    if (!sc.has("_dropped")) Seq.empty else sc.lines("_dropped")
 
   /** One RENAME COLUMN event: files in `preFiles` (canonical paths)
     * were written before the rename and physically hold the column
@@ -4843,21 +4731,22 @@ object Manifests {
     * one existence probe, the price every other sidecar lookup pays. */
   def renamesOf(spark: SparkSession, base: String,
       v: Int): Seq[RenameEvent] =
-    if (!Dfs.exists(spark, s"$base/v$v/_renames")) Seq.empty
+    renamesOf(probe(spark, base, v))
+  private def renamesOf(sc: Sidecars): Seq[RenameEvent] =
+    if (!sc.has("_renames")) Seq.empty
     else {
       val out = scala.collection.mutable.ArrayBuffer.empty[RenameEvent]
-      new String(Dfs.readBytes(spark, s"$base/v$v/_renames"), "UTF-8")
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+      sc.lines("_renames")
         .foreach { line =>
           if (line.startsWith("=")) {
             val parts = line.substring(1).split("\t", 3)
             require(parts.length == 3, s"malformed rename record in " +
-              s"$base/v$v/_renames: '$line' (expected =v<TAB>from<TAB>to)")
+              s"${sc.base}/v${sc.v}/_renames: '$line' (expected =v<TAB>from<TAB>to)")
             out += RenameEvent(parts(0).toInt, parts(1), parts(2),
               Vector.empty)
           } else {
             require(out.nonEmpty, s"malformed rename record in " +
-              s"$base/v$v/_renames: file line before any event header")
+              s"${sc.base}/v${sc.v}/_renames: file line before any event header")
             val last = out.last
             out(out.length - 1) = last.copy(preFiles = last.preFiles :+ line)
           }
@@ -4920,6 +4809,18 @@ object Manifests {
     }.reduce(_.unionByName(_))
   }
 
+  /** `m` with the zone-stat and bloom KEY LISTS narrowed by `retired`:
+    * a dropped, renamed or widened column's per-file sidecar columns
+    * were recorded under the old name or type, so skipping on it pauses
+    * until the next ANALYZE; a tier left with no key is dropped whole. */
+  private def withoutKey(m: VersionMeta,
+      retired: String => Boolean): VersionMeta = {
+    def narrow(t: Option[(Seq[String], Seq[String])]) =
+      t.map { case (keys, segs) => (keys.filterNot(retired), segs) }
+        .filter(_._1.nonEmpty)
+    m.copy(stats = narrow(m.stats), blooms = narrow(m.blooms))
+  }
+
   /** ALTER TABLE ... DROP COLUMN — METADATA-ONLY: the next version
     * carries the same files with a narrowed recorded schema, so every
     * reader (relation, readAt, DML) stops seeing the column instantly
@@ -4941,19 +4842,20 @@ object Manifests {
   def dropColumn(spark: SparkSession, base: String, name: String): Int = {
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
-    val sch = schemaOf(spark, base, v).getOrElse(
+    val m = meta(spark, base, v).carried
+    val sch = m.schema.getOrElse(
       sys.error(s"$base records no schema — dropColumn needs one"))
     require(sch.fieldNames.contains(name),
       s"no column '$name' in the recorded schema of $base")
     require(sch.fields.length > 1,
       s"cannot drop the last remaining column '$name'")
-    partitionedBy(spark, base, v).foreach { case (pcols, _) =>
+    m.partValues.foreach { case (pcols, _) =>
       require(!PartitionTransforms.sources(pcols).contains(name),
         s"'$name' is a partition (source) column of $base — " +
           "re-partition (commitDataPartitioned overwrite) before " +
           "dropping it")
     }
-    constraintsOf(spark, base, v).foreach { case (cn, p) =>
+    m.constraints.foreach { case (cn, p) =>
       val refs = spark.sessionState.sqlParser.parseExpression(p).collect {
         case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
           a.name
@@ -4965,16 +4867,9 @@ object Manifests {
     val narrowed = org.apache.spark.sql.types.StructType(
       sch.fields.filterNot(_.name == name))
     commit(spark, base, files(spark, base, v),
-      tag = Some(s"drop-column:$name"),
-      dv = dvFiles(spark, base, v),
-      schema = Some(narrowed),
-      stats = statsOf(spark, base, v).map { case (keys, segs) =>
-        (keys.filterNot(_ == name), segs) }.filter(_._1.nonEmpty),
-      parent = Some(v),
-      partValues = partitionedBy(spark, base, v),
-      blooms = bloomOf(spark, base, v).map { case (keys, segs) =>
-        (keys.filterNot(_ == name), segs) }.filter(_._1.nonEmpty),
-      dropped = Some(droppedOf(spark, base, v) :+ name),
+      withoutKey(m, _ == name).copy(schema = Some(narrowed),
+        dropped = m.dropped :+ name),
+      parent = Some(v), tag = Some(s"drop-column:$name"),
       delta = Some((Seq.empty, Seq.empty)))
   }
 
@@ -4998,12 +4893,13 @@ object Manifests {
       comment: Option[String] = None): Int = {
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
-    val sch = schemaOf(spark, base, v).getOrElse(
+    val m = meta(spark, base, v).carried
+    val sch = m.schema.getOrElse(
       sys.error(s"$base records no schema — addColumn needs one"))
     val resolver = spark.sessionState.analyzer.resolver
     require(!sch.fieldNames.exists(resolver(_, name)),
       s"column '$name' already exists in $base")
-    require(!droppedOf(spark, base, v).exists(resolver(_, name)),
+    require(!m.dropped.exists(resolver(_, name)),
       s"column '$name' was previously dropped from $base and its " +
         "physical bytes may survive in old files — re-adding the name " +
         "would resurrect them instead of null-filling; overwrite the " +
@@ -5011,15 +4907,9 @@ object Manifests {
     val f = org.apache.spark.sql.types.StructField(name, dataType,
       nullable = true)
     commit(spark, base, files(spark, base, v),
-      tag = Some(s"add-column:$name"),
-      dv = dvFiles(spark, base, v),
-      schema = Some(org.apache.spark.sql.types.StructType(
-        sch.fields :+ comment.fold(f)(f.withComment))),
-      stats = statsOf(spark, base, v),
-      parent = Some(v),
-      partValues = partitionedBy(spark, base, v),
-      blooms = bloomOf(spark, base, v),
-      dropped = Some(droppedOf(spark, base, v)),
+      m.copy(schema = Some(org.apache.spark.sql.types.StructType(
+        sch.fields :+ comment.fold(f)(f.withComment)))),
+      parent = Some(v), tag = Some(s"add-column:$name"),
       delta = Some((Seq.empty, Seq.empty)))
   }
 
@@ -5074,7 +4964,8 @@ object Manifests {
       newType: org.apache.spark.sql.types.DataType): Int = {
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
-    val sch = schemaOf(spark, base, v).getOrElse(
+    val m = meta(spark, base, v).carried
+    val sch = m.schema.getOrElse(
       sys.error(s"$base records no schema — widenColumn needs one"))
     val resolver = spark.sessionState.analyzer.resolver
     val field = sch.fields.find(f => resolver(f.name, name)).getOrElse(
@@ -5084,7 +4975,7 @@ object Manifests {
         s"widening of ${field.dataType.simpleString} — only conversions " +
         "the parquet reader performs natively are metadata-only; " +
         "anything else needs an explicit rewrite")
-    partitionedBy(spark, base, v).foreach { case (pcols, _) =>
+    m.partValues.foreach { case (pcols, _) =>
       require(!PartitionTransforms.sources(pcols)
           .exists(resolver(_, name)),
         s"'$name' is a partition (source) column of $base — " +
@@ -5095,16 +4986,10 @@ object Manifests {
       sch.fields.map(f => if (resolver(f.name, name))
         f.copy(dataType = newType) else f))
     commit(spark, base, files(spark, base, v),
-      tag = Some(s"widen-column:$name:${newType.simpleString}"),
-      dv = dvFiles(spark, base, v),
-      schema = Some(widened),
-      stats = statsOf(spark, base, v).map { case (keys, segs) =>
-        (keys.filterNot(resolver(_, name)), segs) }.filter(_._1.nonEmpty),
+      withoutKey(m, resolver(_, name)).copy(schema = Some(widened)),
       parent = Some(v),
-      partValues = partitionedBy(spark, base, v),
-      blooms = bloomOf(spark, base, v).map { case (keys, segs) =>
-        (keys.filterNot(resolver(_, name)), segs) }.filter(_._1.nonEmpty),
-      dropped = Some(droppedOf(spark, base, v)))
+      tag = Some(s"widen-column:$name:${newType.simpleString}"),
+      delta = Some((Seq.empty, Seq.empty)))
   }
 
   /** ALTER TABLE ... ALTER COLUMN ... SET NOT NULL / DROP NOT NULL —
@@ -5126,7 +5011,8 @@ object Manifests {
       name: String, nullable: Boolean): Int = {
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
-    val sch = schemaOf(spark, base, v).getOrElse(
+    val m = meta(spark, base, v).carried
+    val sch = m.schema.getOrElse(
       sys.error(s"$base records no schema — ALTER COLUMN needs one"))
     val resolver = spark.sessionState.analyzer.resolver
     val field = sch.fields.find(f => resolver(f.name, name)).getOrElse(
@@ -5136,7 +5022,7 @@ object Manifests {
         (if (nullable) "nullable" else "NOT NULL"))
     if (!nullable) {
       val fs = files(spark, base, v).map(Dfs.canonical).toSet
-      val byStats = statsOf(spark, base, v).exists { case (keys, segs) =>
+      val byStats = m.stats.exists { case (keys, segs) =>
         keys.find(resolver(_, name)).exists { k =>
           val st = spark.read.option("mergeSchema", "true")
             .parquet(segs: _*)
@@ -5150,23 +5036,18 @@ object Manifests {
         }
       }
       if (!byStats)
-        require(readAt(spark, base, v)
+        require(readAt(spark, base, v, m)
           .filter(col(s"`$name`").isNull).limit(1).count() == 0,
           s"column '$name' holds NULLs — SET NOT NULL refused " +
             "(delete or fill them first)")
     }
     commit(spark, base, files(spark, base, v),
+      m.copy(schema = Some(org.apache.spark.sql.types.StructType(
+        sch.fields.map(f => if (resolver(f.name, name))
+          f.copy(nullable = nullable) else f)))),
+      parent = Some(v),
       tag = Some(s"set-nullability:$name:" +
         (if (nullable) "nullable" else "notnull")),
-      dv = dvFiles(spark, base, v),
-      schema = Some(org.apache.spark.sql.types.StructType(
-        sch.fields.map(f => if (resolver(f.name, name))
-          f.copy(nullable = nullable) else f))),
-      stats = statsOf(spark, base, v),
-      parent = Some(v),
-      partValues = partitionedBy(spark, base, v),
-      blooms = bloomOf(spark, base, v),
-      dropped = Some(droppedOf(spark, base, v)),
       delta = Some((Seq.empty, Seq.empty)))
   }
 
@@ -5176,22 +5057,17 @@ object Manifests {
       comment: String): Int = {
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
-    val sch = schemaOf(spark, base, v).getOrElse(
+    val m = meta(spark, base, v).carried
+    val sch = m.schema.getOrElse(
       sys.error(s"$base records no schema — ALTER COLUMN needs one"))
     val resolver = spark.sessionState.analyzer.resolver
     require(sch.fieldNames.exists(resolver(_, name)),
       s"no column '$name' in the recorded schema of $base")
     commit(spark, base, files(spark, base, v),
-      tag = Some(s"comment-column:$name"),
-      dv = dvFiles(spark, base, v),
-      schema = Some(org.apache.spark.sql.types.StructType(
+      m.copy(schema = Some(org.apache.spark.sql.types.StructType(
         sch.fields.map(f => if (resolver(f.name, name))
-          f.withComment(comment) else f))),
-      stats = statsOf(spark, base, v),
-      parent = Some(v),
-      partValues = partitionedBy(spark, base, v),
-      blooms = bloomOf(spark, base, v),
-      dropped = Some(droppedOf(spark, base, v)),
+          f.withComment(comment) else f)))),
+      parent = Some(v), tag = Some(s"comment-column:$name"),
       delta = Some((Seq.empty, Seq.empty)))
   }
 
@@ -5222,7 +5098,8 @@ object Manifests {
       to: String): Int = {
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
-    val sch = schemaOf(spark, base, v).getOrElse(
+    val m = meta(spark, base, v).carried
+    val sch = m.schema.getOrElse(
       sys.error(s"$base records no schema — renameColumn needs one"))
     val resolver = spark.sessionState.analyzer.resolver
     require(sch.fieldNames.exists(resolver(_, from)),
@@ -5230,12 +5107,12 @@ object Manifests {
     require(!sch.fieldNames.exists(resolver(_, to)),
       s"column '$to' already exists in $base")
     require(!resolver(from, to), s"RENAME COLUMN $from TO $to is a no-op")
-    require(!droppedOf(spark, base, v).exists(resolver(_, to)),
+    require(!m.dropped.exists(resolver(_, to)),
       s"column '$to' was previously dropped from $base and its " +
         "physical bytes may survive in old files — renaming onto the " +
         "name would resurrect them; overwrite the table to clear the " +
         "tombstone")
-    constraintsOf(spark, base, v).foreach { case (cn, p) =>
+    m.constraints.foreach { case (cn, p) =>
       val refs = spark.sessionState.sqlParser.parseExpression(p).collect {
         case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
           a.name
@@ -5256,25 +5133,15 @@ object Manifests {
     // O(data)). Pruning, SPJ and aligned DML keep working under the
     // new name; a 100 TB table renames its partition source without a
     // re-partition rewrite.
-    val pvRenamed = partitionedBy(spark, base, v).map { case (pc, segs) =>
-      renamePartValueSegs(spark, base, pc, segs, from, to, resolver) }
-    val histRenamed = partitionHistory(spark, base, v).map {
-      case (pc, segs) =>
-        renamePartValueSegs(spark, base, pc, segs, from, to, resolver) }
+    def renameGroup(g: (Seq[String], Seq[String])) =
+      renamePartValueSegs(spark, base, g._1, g._2, from, to, resolver)
     commit(spark, base, files(spark, base, v),
-      tag = Some(s"rename-column:$from:$to"),
-      dv = dvFiles(spark, base, v),
-      schema = Some(renamed),
-      stats = statsOf(spark, base, v).map { case (keys, segs) =>
-        (keys.filterNot(resolver(_, from)), segs) }.filter(_._1.nonEmpty),
-      parent = Some(v),
-      partValues = pvRenamed,
-      partHistory = Some(histRenamed),
-      blooms = bloomOf(spark, base, v).map { case (keys, segs) =>
-        (keys.filterNot(resolver(_, from)), segs) }.filter(_._1.nonEmpty),
-      dropped = Some(droppedOf(spark, base, v) :+ from),
-      addRename = Some((from, to)),
-      delta = Some((Seq.empty, Seq.empty)))
+      withoutKey(m, resolver(_, from)).copy(schema = Some(renamed),
+        partValues = m.partValues.map(renameGroup),
+        partHistory = m.partHistory.map(renameGroup),
+        dropped = m.dropped :+ from),
+      parent = Some(v), tag = Some(s"rename-column:$from:$to"),
+      addRename = Some((from, to)), delta = Some((Seq.empty, Seq.empty)))
   }
 
   /** One spec group's `from`→`to` source rename: rewrite the specs'
@@ -5315,16 +5182,17 @@ object Manifests {
     * metadata-sized. */
   def constraintsOf(spark: SparkSession, base: String,
       v: Int): Seq[(String, String)] =
-    if (!Dfs.exists(spark, s"$base/v$v/_constraints")) Seq.empty
-    else new String(Dfs.readBytes(spark, s"$base/v$v/_constraints"), "UTF-8")
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+    constraintsOf(probe(spark, base, v))
+  private def constraintsOf(sc: Sidecars): Seq[(String, String)] =
+    if (!sc.has("_constraints")) Seq.empty
+    else sc.lines("_constraints")
       .map { line =>
         val i = line.indexOf('\t')
         // a malformed line must fail LOUDLY and diagnosably here, not
         // as a StringIndexOutOfBounds deep inside some later write —
         // every commit reads this file (inheritance + enforcement)
         require(i > 0,
-          s"malformed constraint record in $base/v$v/_constraints: " +
+          s"malformed constraint record in ${sc.base}/v${sc.v}/_constraints: " +
             s"'$line' (expected name<TAB>predicate)")
         (line.substring(0, i), line.substring(i + 1))
       }.toSeq
@@ -5352,10 +5220,10 @@ object Manifests {
     require(predicateSqlNorm.nonEmpty, "constraint predicate must be non-empty")
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
-    val existing = constraintsOf(spark, base, v)
-    require(!existing.exists(_._1 == name),
+    val m = meta(spark, base, v).carried
+    require(!m.constraints.exists(_._1 == name),
       s"constraint '$name' already exists on $base")
-    val bad = readAt(spark, base, v)
+    val bad = readAt(spark, base, v, m)
       .filter(not(coalesce(expr(predicateSqlNorm), lit(true))))
       .limit(1).count()
     if (bad > 0)
@@ -5363,14 +5231,8 @@ object Manifests {
         s"cannot add constraint '$name' CHECK ($predicateSqlNorm) to $base — " +
           "existing rows violate it")
     commit(spark, base, files(spark, base, v),
-      tag = Some(s"constraint:add:$name"),
-      dv = dvFiles(spark, base, v),
-      schema = schemaOf(spark, base, v),
-      stats = statsOf(spark, base, v),
-      parent = Some(v),
-      partValues = partitionedBy(spark, base, v),
-      blooms = bloomOf(spark, base, v),
-      constraints = Some(existing :+ (name -> predicateSqlNorm)),
+      m.copy(constraints = m.constraints :+ (name -> predicateSqlNorm)),
+      parent = Some(v), tag = Some(s"constraint:add:$name"),
       delta = Some((Seq.empty, Seq.empty)))
   }
 
@@ -5381,18 +5243,12 @@ object Manifests {
       name: String): Int = {
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
-    val existing = constraintsOf(spark, base, v)
-    require(existing.exists(_._1 == name),
+    val m = meta(spark, base, v).carried
+    require(m.constraints.exists(_._1 == name),
       s"no constraint '$name' on $base")
     commit(spark, base, files(spark, base, v),
-      tag = Some(s"constraint:drop:$name"),
-      dv = dvFiles(spark, base, v),
-      schema = schemaOf(spark, base, v),
-      stats = statsOf(spark, base, v),
-      parent = Some(v),
-      partValues = partitionedBy(spark, base, v),
-      blooms = bloomOf(spark, base, v),
-      constraints = Some(existing.filterNot(_._1 == name)),
+      m.copy(constraints = m.constraints.filterNot(_._1 == name)),
+      parent = Some(v), tag = Some(s"constraint:drop:$name"),
       delta = Some((Seq.empty, Seq.empty)))
   }
 
@@ -5473,31 +5329,14 @@ object Manifests {
       s"clone target $dst already has committed versions")
     require(Dfs.exists(spark, s"$src/v$v/_SUCCESS"),
       s"version $v of $src was never committed or is vacuumed")
-    commit(spark, dst, files(spark, src, v),
-      tag = Some(s"clone:$src@v$v"),
-      dv = dvFiles(spark, src, v),
-      schema = schemaOf(spark, src, v),
-      stats = statsOf(spark, src, v),
-      partValues = partitionedBy(spark, src, v),
-      // a shallow clone references the source's data files, so the
-      // source's legacy spec groups (sidecars included) stay valid —
-      // without them, pre-evolve files in the clone would lose pruning
-      partHistory = Some(partitionHistory(spark, src, v)),
-      partSem = Some(partSemOf(spark, src, v)),
-      blooms = bloomOf(spark, src, v),
-      constraints = Some(constraintsOf(spark, src, v)),
-      // the clone's v0 has no parent to inherit through, yet it
-      // references source files that still hold dropped columns'
-      // physical bytes — without the tombstones, an append re-adding
-      // the name would resurrect the old values (the exact hazard the
-      // tombstones exist to prevent)
-      dropped = Some(droppedOf(spark, src, v)),
-      // rename events are self-contained (they carry their own
-      // pre-file lists), so the clone copies them verbatim and era
-      // reads keep working with zero reference to the source's history
-      renames = Some(renamesOf(spark, src, v)),
-      ndv = Some(ndvOf(spark, src, v)),
-      ndvKmv = Some(ndvKmvOf(spark, src, v)))
+    // the clone's v0 has no parent, yet it references the source's
+    // files, so the source version's whole record comes along: legacy
+    // spec groups (pre-evolve files keep pruning), tombstones (those
+    // files still hold dropped columns' bytes — an append re-adding
+    // the name would resurrect them), self-contained rename events
+    // (era reads work with zero reference to the source's history)
+    commit(spark, dst, files(spark, src, v), meta(spark, src, v).carried,
+      tag = Some(s"clone:$src@v$v"))
   }
 
   // ---- named refs: tags, branches, write-audit-publish -------------
@@ -5704,52 +5543,25 @@ object Manifests {
     // constraint, rename, tombstone, re-ANALYZE) would otherwise be
     // silently swallowed by a "successful" retry that published
     // nothing.
-    if (recovered) {
-      val bvNow = latestVersion(spark, bb).getOrElse(
-        sys.error(s"branch '$name' has no committed version"))
-      def canon(fs: Seq[String]) = fs.map(Dfs.canonical).toSet
-      val same =
-        canon(files(spark, base, mainLatest)) ==
-          canon(files(spark, bb, bvNow)) &&
-        canon(dvFiles(spark, base, mainLatest)) ==
-          canon(dvFiles(spark, bb, bvNow)) &&
-        schemaOf(spark, base, mainLatest).map(_.json) ==
-          schemaOf(spark, bb, bvNow).map(_.json) &&
-        constraintsOf(spark, base, mainLatest).toSet ==
-          constraintsOf(spark, bb, bvNow).toSet &&
-        droppedOf(spark, base, mainLatest).toSet ==
-          droppedOf(spark, bb, bvNow).toSet &&
-        renamesOf(spark, base, mainLatest) ==
-          renamesOf(spark, bb, bvNow) &&
-        ndvOf(spark, base, mainLatest) == ndvOf(spark, bb, bvNow) &&
-        statsOf(spark, base, mainLatest).map(s => (s._1, canon(s._2))) ==
-          statsOf(spark, bb, bvNow).map(s => (s._1, canon(s._2))) &&
-        partitionedBy(spark, base, mainLatest)
-          .map(s => (s._1, canon(s._2))) ==
-          partitionedBy(spark, bb, bvNow).map(s => (s._1, canon(s._2))) &&
-        bloomOf(spark, base, mainLatest).map(s => (s._1, canon(s._2))) ==
-          bloomOf(spark, bb, bvNow).map(s => (s._1, canon(s._2)))
-      if (same) return mainLatest
-    }
     val bv = latestVersion(spark, bb).getOrElse(
       sys.error(s"branch '$name' has no committed version"))
-    val nv = commit(spark, base, files(spark, bb, bv),
-      tag = Some(s"wap:$name"),
-      dv = dvFiles(spark, bb, bv),
-      schema = schemaOf(spark, bb, bv),
-      stats = statsOf(spark, bb, bv),
-      parent = Some(mainLatest),
-      partValues = partitionedBy(spark, bb, bv),
-      // fast-forward publishes the BRANCH's state wholesale — its spec
-      // history must ride along, not main's (the inherit default)
-      partHistory = Some(partitionHistory(spark, bb, bv)),
-      partSem = Some(partSemOf(spark, bb, bv)),
-      blooms = bloomOf(spark, bb, bv),
-      constraints = Some(constraintsOf(spark, bb, bv)),
-      dropped = Some(droppedOf(spark, bb, bv)),
-      renames = Some(renamesOf(spark, bb, bv)),
-      ndv = Some(ndvOf(spark, bb, bv)),
-      ndvKmv = Some(ndvKmvOf(spark, bb, bv)),
+    // fast-forward publishes the BRANCH head's whole record, not main's
+    val bm = meta(spark, bb, bv).carried
+    if (recovered) {
+      def canon(fs: Seq[String]) = fs.map(Dfs.canonical).toSet
+      def canonMeta(m: VersionMeta) = {
+        def segs(t: Option[(Seq[String], Seq[String])]) =
+          t.map { case (k, s) => (k, canon(s)) }
+        (canon(m.dv), m.schema.map(_.json), m.constraints.toSet,
+          m.dropped.toSet, m.renames, m.ndv, segs(m.stats),
+          segs(m.partValues), segs(m.blooms))
+      }
+      if (canon(files(spark, base, mainLatest)) == canon(files(spark, bb, bv)) &&
+          canonMeta(meta(spark, base, mainLatest)) == canonMeta(bm))
+        return mainLatest
+    }
+    val nv = commit(spark, base, files(spark, bb, bv), bm,
+      parent = Some(mainLatest), tag = Some(s"wap:$name"),
       // the branch's TRANSACTION LEDGER publishes too: an idempotent
       // writer that streamed epochs into the branch must find its
       // high-water marks on main after the publish, or its next
@@ -5858,26 +5670,20 @@ object Manifests {
       .getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)
     val (small, big) = sized.partition(_._2 < smallBytes)
     if (small.size < 2) return (0, 0, v)
-    val schema = schemaOf(spark, base, v)
+    val m = meta(spark, base, v).carried
     val nOut = math.max(1,
       math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
     val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-    eraRead(spark, renamesOf(spark, base, v), small.map(_._1), schema)
+    eraRead(spark, m.renames, small.map(_._1), m.schema)
       .repartition(nOut)
       .write.mode("errorifexists").parquet(dir)
     val rewritten = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
     val untouched = big.map(_._1)
     // content-preserving like compact(): same rows, fewer files
     val nv = commit(spark, base, untouched ++ rewritten,
-      tag = Some("compact-small"), preservesContent = true,
-      schema = schema,
-      stats = statsAfterRewrite(spark, base, v, untouched, rewritten,
-        schema), parent = Some(v),
-      partValues = partValuesAfterRewrite(spark, base, v, untouched,
-        rewritten, schema),
-      blooms = bloomsAfterRewrite(spark, base, v, untouched, rewritten,
-        schema),
-      delta = Some((rewritten, small.map(_._1))))
+      afterRewrite(spark, base, m, untouched, rewritten, m.schema),
+      parent = Some(v), tag = Some("compact-small"),
+      preservesContent = true, delta = Some((rewritten, small.map(_._1))))
     (small.size, rewritten.size, nv)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources.manifest
 
-import graft.ext.{Dfs, Manifests}
+import graft.ext.{Dfs, Manifests, VersionMeta}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
@@ -216,9 +216,9 @@ private[manifest] class ManifestDeltaWrite(
               "delta write emitted deletes against a table with no " +
                 "committed version — unreachable rewrite shape")
             if (dataQ.nonEmpty) {
-              Manifests.commit(spark, base, dataQ, tag,
-                schema = Some(rowSchema), parent = Some(-1),
-                cdcUpd = cdc.map(c => c._1.map(f =>
+              Manifests.commit(spark, base, dataQ,
+                VersionMeta(schema = Some(rowSchema)), parent = Some(-1),
+                tag = tag, cdcUpd = cdc.map(c => c._1.map(f =>
                   s"P\t${Dfs.canonical(f)}")))
               ()
             }

@@ -2,7 +2,7 @@ package graft.sources.manifest
 
 import java.util
 
-import graft.ext.{Dfs, Manifests}
+import graft.ext.{Dfs, Manifests, VersionMeta}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDeleteV2, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
@@ -566,8 +566,9 @@ private[manifest] class ManifestRowLevelOperation(spark: SparkSession,
               // that wrote nothing against an empty table burns nothing.
               if (written.nonEmpty) {
                 Manifests.commit(spark, base, written,
-                  tag = Some(s"sql:${cmd.toString.toLowerCase}"),
-                  schema = Some(info.schema()), parent = Some(-1))
+                  VersionMeta(schema = Some(info.schema())),
+                  parent = Some(-1),
+                  tag = Some(s"sql:${cmd.toString.toLowerCase}"))
                 ()
               }
           }

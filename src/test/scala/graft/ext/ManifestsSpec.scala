@@ -19,6 +19,12 @@ class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
     if (!inListing.get()) ops.incrementAndGet()
     super.getFileStatus(p)
   }
+  // RawLocalFileSystem answers exists() from java.io.File, bypassing
+  // getFileStatus; on a namenode or object store it is a status RPC
+  override def exists(p: org.apache.hadoop.fs.Path): Boolean = {
+    if (!inListing.get()) ops.incrementAndGet()
+    super.exists(p)
+  }
   override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
     ops.incrementAndGet()
     inListing.set(true)
@@ -45,6 +51,13 @@ class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
     ops.incrementAndGet()
     super.create(p, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
+  // the overload Dfs.writeBytes and createExclusive actually reach
+  override def create(p: org.apache.hadoop.fs.Path, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    ops.incrementAndGet()
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
   override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
     ops.incrementAndGet(); super.rename(src, dst)
   }
@@ -62,6 +75,23 @@ object CountingFileSystem {
   val dataReads = new java.util.concurrent.atomic.AtomicLong(0)
   val inListing: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
+}
+
+/** Fails every create of a `_bucketspec` sidecar while armed — the
+  * crash point between a version's data/manifest and its commit
+  * marker. Overrides the overload [[Dfs.writeBytes]] reaches. */
+class FailingBucketSpecFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftbkt:///")
+  override def create(p: org.apache.hadoop.fs.Path, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    if (FailingBucketSpecFileSystem.armed.get() && p.getName == "_bucketspec")
+      throw new java.io.IOException(s"injected create failure: $p")
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+object FailingBucketSpecFileSystem {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
 
 class ManifestsSpec extends AnyFunSuite {
@@ -619,9 +649,9 @@ class ManifestsSpec extends AnyFunSuite {
     val fs = Manifests.files(spark, b, 0)
     // two writers derive from v0; the second to commit must refuse —
     // its content cannot have seen the first's changes
-    assert(Manifests.commit(spark, b, fs, parent = Some(0)) === 1)
+    assert(Manifests.commit(spark, b, fs, VersionMeta(), parent = Some(0)) === 1)
     intercept[ConcurrentCommitException](
-      Manifests.commit(spark, b, fs, parent = Some(0)))
+      Manifests.commit(spark, b, fs, VersionMeta(), parent = Some(0)))
     // appends commute: raced, both must land (retry re-derives
     // metadata). Identity-FREE appends race here: batch-id appends are
     // a sequential-per-writer protocol by contract (the txn ledger
@@ -1088,7 +1118,7 @@ class ManifestsSpec extends AnyFunSuite {
     // thousand-commit table shape, built in seconds
     val fs0 = Manifests.files(spark, b, 0)
     (1 to 119).foreach(i =>
-      Manifests.commit(spark, b, fs0, parent = Some(i - 1)))
+      Manifests.commit(spark, b, fs0, VersionMeta(), parent = Some(i - 1)))
     def rpcs(f: => Unit): Long = {
       val s = CountingFileSystem.ops.get(); f
       CountingFileSystem.ops.get() - s
@@ -1117,7 +1147,7 @@ class ManifestsSpec extends AnyFunSuite {
     Dfs.writeBytes(spark, s"$b/_latest", "999\n".getBytes("UTF-8"))
     assert(Manifests.latestVersion(spark, b) === Some(119))
     // the next commit heals the pointer
-    val v120 = Manifests.commit(spark, b, fs0, parent = Some(119))
+    val v120 = Manifests.commit(spark, b, fs0, VersionMeta(), parent = Some(119))
     assert(v120 === 120)
     assert(rpcs(assert(Manifests.latestVersion(spark, b) === Some(120))) <= 12)
   }
@@ -1181,13 +1211,13 @@ class ManifestsSpec extends AnyFunSuite {
     val b = base("graft_man_staleclaim")
     Manifests.commitData((1 to 50).map(i => (i.toLong, i % 5)).toDF("id", "k"), b)
     val fs0 = Manifests.files(spark, b, 0)
-    Manifests.commit(spark, b, fs0, parent = Some(0)) // v1
-    Manifests.commit(spark, b, fs0, parent = Some(1)) // v2
+    Manifests.commit(spark, b, fs0, VersionMeta(), parent = Some(0)) // v1
+    Manifests.commit(spark, b, fs0, VersionMeta(), parent = Some(1)) // v2
     // simulate vacuum's claim reclamation without dropping the versions:
     // the guard must hold even when only the CLAIM was recycled
     Dfs.delete(spark, s"$b/_claims/v1")
     intercept[ConcurrentCommitException](
-      Manifests.commit(spark, b, fs0, parent = Some(0)))
+      Manifests.commit(spark, b, fs0, VersionMeta(), parent = Some(0)))
     assert(Manifests.latestVersion(spark, b) === Some(2))
   }
 
@@ -1734,6 +1764,37 @@ class ManifestsSpec extends AnyFunSuite {
     Manifests.append(Seq((2L, 7)).toDF("id", "qty"), b3)
     intercept[ConstraintViolationException](
       Manifests.append(Seq((3L, 0)).toDF("id", "qty"), b3))
+
+    // (5) planner statistics are version-accurate too: a restore brings
+    // back the target's histograms (none at v0), and a clone, a branch
+    // and a fast-forward carry the source's histograms with its NDV
+    val b4 = base("graft_man_resthist")
+    Manifests.commitData(
+      (1 to 40).map(i => (i.toLong, i % 17)).toDF("id", "k"), b4)
+    Manifests.analyze(spark, b4, Seq("k"))
+    val hv = Manifests.analyzeHistograms(spark, b4, Seq("k"))
+    val hist = Manifests.histOf(spark, b4, hv)
+    assert(hist.nonEmpty && Manifests.ndvOf(spark, b4, hv) === Map("k" -> 17L))
+    val r4 = Manifests.restore(spark, b4, 0)
+    assert(Manifests.histOf(spark, b4, r4).isEmpty)
+    assert(Manifests.histRowsOf(spark, b4, r4).isEmpty)
+    assert(Manifests.ndvOf(spark, b4, r4).isEmpty)
+    val back = Manifests.restore(spark, b4, hv)
+    assert(Manifests.histOf(spark, b4, back) === hist)
+    val d4 = base("graft_man_clonehist_d") + "/t"
+    Manifests.shallowClone(spark, b4, d4, hv)
+    assert(Manifests.histOf(spark, d4, 0) === hist)
+    assert(Manifests.histRowsOf(spark, d4, 0) ===
+      Manifests.histRowsOf(spark, b4, hv))
+    assert(Manifests.ndvOf(spark, d4, 0) === Map("k" -> 17L))
+    Manifests.createBranch(spark, b4, "audit")
+    val bb = Manifests.branchBaseOf(b4, "audit")
+    assert(Manifests.histOf(spark, bb, 0) === hist)
+    assert(Manifests.ndvOf(spark, bb, 0) === Map("k" -> 17L))
+    val bh = Manifests.analyzeHistograms(spark, bb, Seq("k"), numBins = 4)
+    val ff = Manifests.fastForward(spark, b4, "audit")
+    assert(Manifests.histOf(spark, b4, ff) === Manifests.histOf(spark, bb, bh))
+    assert(Manifests.histOf(spark, b4, ff) !== hist)
   }
 
   private def manifestText(b: String, v: Int): String =
@@ -1771,6 +1832,24 @@ class ManifestsSpec extends AnyFunSuite {
     val vAdd = Manifests.addColumn(spark, b, "note",
       org.apache.spark.sql.types.StringType)
     assert(manifestText(b, vAdd).trim === s"@delta ${vAdd - 1}")
+    // ...and so is every other metadata-only DDL
+    Seq[(String, () => Int)](
+      "widen" -> (() => Manifests.widenColumn(spark, b, "k",
+        org.apache.spark.sql.types.LongType)),
+      "drop not null" -> (() =>
+        Manifests.setColumnNullability(spark, b, "id", nullable = true)),
+      "comment" -> (() => Manifests.commentColumn(spark, b, "note", "memo")),
+      "rename" -> (() => Manifests.renameColumn(spark, b, "note", "memo")),
+      "drop" -> (() => Manifests.dropColumn(spark, b, "memo")),
+      "add constraint" -> (() =>
+        Manifests.addConstraint(spark, b, "k_nonneg", "k >= 0")),
+      "drop constraint" -> (() =>
+        Manifests.dropConstraint(spark, b, "k_nonneg"))
+    ).foreach { case (ddl, run) =>
+      val v = run()
+      assert(manifestText(b, v).trim === s"@delta ${v - 1}",
+        s"$ddl must write a zero-line delta")
+    }
     // resolution: every version reads its exact row set through the chain
     assert(Manifests.readAt(spark, b, 0).count() === 800)
     (1 to 3).foreach(i =>
@@ -1935,7 +2014,7 @@ class ManifestsSpec extends AnyFunSuite {
     // shape at test scale
     val fake = (1 to 100000).map(i =>
       f"graftcnt:$tmp/t/data_seed/part-$i%06d-feedface.snappy.parquet")
-    Manifests.commit(spark, b, fake)
+    Manifests.commit(spark, b, fake, VersionMeta())
     // the text manifest is a one-line proxy; the list is PARQUET
     val proxy = new String(Dfs.readBytes(spark, s"$b/v0/_manifest"), "UTF-8")
     assert(proxy.startsWith("@parquet "), proxy.take(80))
@@ -1968,7 +2047,7 @@ class ManifestsSpec extends AnyFunSuite {
     // a delta commit on the checkpointed base stays O(diff) WRITE and
     // resolves through the checkpoint
     val extra = s"graftcnt:$tmp/t/data_seed/part-extra-feedface.snappy.parquet"
-    val v1 = Manifests.commit(spark, b, fake :+ extra,
+    val v1 = Manifests.commit(spark, b, fake :+ extra, VersionMeta(),
       parent = Some(0), delta = Some((Seq(extra), Seq.empty)))
     val m1 = new String(Dfs.readBytes(spark, s"$b/v$v1/_manifest"), "UTF-8")
     assert(m1.startsWith("@delta 0"), m1.take(60))
@@ -2282,7 +2361,7 @@ class ManifestsSpec extends AnyFunSuite {
     // this DATA-CHANGING commit as an empty feed step — refused
     Seq("compact", "compact-small", "autocompact").foreach { t =>
       val e = intercept[Exception] {
-        Manifests.commit(spark, b, files, tag = Some(t),
+        Manifests.commit(spark, b, files, VersionMeta(), tag = Some(t),
           parent = Some(Manifests.latestVersion(spark, b).get))
       }
       assert(e.getMessage.contains("reserved"), s"$t: ${e.getMessage}")
@@ -2292,5 +2371,78 @@ class ManifestsSpec extends AnyFunSuite {
     Manifests.append((11 to 20).map(i => (i, s"r$i")).toDF("id", "v"), b)
     val (_, _, cv) = Manifests.compact(spark, b, 1)
     assert(Manifests.tagOf(spark, b, cv) === Some("compact"))
+  }
+
+  test("a bucketed bootstrap whose bucket-spec write fails leaves no committed version") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftbkt.impl", classOf[FailingBucketSpecFileSystem].getName)
+    val b = "graftbkt:" + java.nio.file.Files
+      .createTempDirectory("graft_man_bktfail").toString + "/t"
+    val df = (1 to 40).map(i => (i.toLong, i % 4)).toDF("id", "k")
+    FailingBucketSpecFileSystem.armed.set(true)
+    try intercept[java.io.IOException](
+      Manifests.commitDataBucketed(df, b, Seq("k"), 4))
+    finally FailingBucketSpecFileSystem.armed.set(false)
+    // the spec is part of the record, written before `_SUCCESS`: the
+    // failed call published nothing a reader could see unbucketed
+    assert(Manifests.latestVersion(spark, b).isEmpty)
+    val v = Manifests.commitDataBucketed(df, b, Seq("k"), 4)
+    assert(Manifests.latestVersion(spark, b) === Some(v))
+    assert(Manifests.bucketSpecOf(spark, b, v) === Some((4, Seq("k"), Nil)))
+    assert(Manifests.meta(spark, b, v).bucketSpec ===
+      Manifests.bucketSpecOf(spark, b, v))
+  }
+
+  test("meta round-trips every sidecar: re-committing a version's record as a metadata-only carry reads back equal") {
+    import spark.implicits._
+    val b = base("graft_man_metart")
+    Manifests.commitDataPartitioned(
+      (1 to 60).map(i => (i.toLong, i % 3, i % 7, s"s$i", s"t$i", i * 1.5))
+        .toDF("id", "p", "k", "s", "t", "x"), b, Seq("p"), filesPerWrite = 3)
+    Manifests.analyze(spark, b, Seq("id", "k"))
+    Manifests.analyzeBloom(spark, b, Seq("k"))
+    Manifests.analyzeHistograms(spark, b, Seq("x"))
+    Manifests.evolvePartitions(spark, b, Seq("p", "k"))
+    Manifests.addConstraint(spark, b, "id_pos", "id > 0")
+    Manifests.dropColumn(spark, b, "s")
+    Manifests.renameColumn(spark, b, "t", "label")
+    Manifests.deleteWhereMor(spark, b, col("id") === 5L)
+    Manifests.appendBatch(
+      Seq((100L, 1, 3, "t100", 7.5)).toDF("id", "p", "k", "label", "x"),
+      b, 0L)
+    val v = Manifests.latestVersion(spark, b).get
+    val m = Manifests.meta(spark, b, v)
+    assert(m.dv.nonEmpty && m.schema.isDefined && m.stats.isDefined &&
+      m.partValues.isDefined && m.partHistory.nonEmpty &&
+      m.blooms.isDefined && m.constraints.nonEmpty && m.dropped.nonEmpty &&
+      m.renames.nonEmpty && m.ndv.nonEmpty && m.ndvKmv.nonEmpty &&
+      m.hist.nonEmpty && m.histRows.isDefined,
+      s"the source version must carry every sidecar kind: $m")
+    assert(Manifests.txnsOf(spark, b, v).nonEmpty)
+    val nv = Manifests.commit(spark, b, Manifests.files(spark, b, v), m,
+      parent = Some(v), tag = Some("carry"),
+      delta = Some((Seq.empty, Seq.empty)))
+    assert(Manifests.meta(spark, b, nv) === m)
+    // the record composes the single-sidecar readers' own decoding
+    assert(Manifests.dvFiles(spark, b, nv) === m.dv)
+    assert(Manifests.schemaOf(spark, b, nv) === m.schema)
+    assert(Manifests.statsOf(spark, b, nv) === m.stats)
+    assert(Manifests.partitionedBy(spark, b, nv) === m.partValues)
+    assert(Manifests.partitionHistory(spark, b, nv) === m.partHistory)
+    assert(Manifests.partSemOf(spark, b, nv) === m.partSem)
+    assert(Manifests.bloomOf(spark, b, nv) === m.blooms)
+    assert(Manifests.constraintsOf(spark, b, nv) === m.constraints)
+    assert(Manifests.droppedOf(spark, b, nv) === m.dropped)
+    assert(Manifests.renamesOf(spark, b, nv) === m.renames)
+    assert(Manifests.ndvOf(spark, b, nv) === m.ndv)
+    assert(Manifests.ndvKmvOf(spark, b, nv) === m.ndvKmv)
+    assert(Manifests.histOf(spark, b, nv) === m.hist)
+    assert(Manifests.histRowsOf(spark, b, nv) === m.histRows)
+    assert(Manifests.txnsOf(spark, b, nv) === Manifests.txnsOf(spark, b, v))
+    assert(Manifests.readAt(spark, b, nv).count() ===
+      Manifests.readAt(spark, b, v).count())
+    // a version that was never committed fails loudly
+    intercept[IllegalArgumentException](Manifests.meta(spark, b, nv + 5))
   }
 }
