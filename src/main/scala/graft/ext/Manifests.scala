@@ -1879,11 +1879,14 @@ object Manifests {
       col("_metadata.row_index").as("__pos"))
 
   /** Read `data` with deletion vectors `dvs` applied — file-pruned:
-    * only files a vector actually touches pay the anti-join; every
-    * other file streams through scan-only, exactly as if no delete had
-    * happened. The touched-file list is DV metadata (one collect of
-    * distinct file names, bounded by the delete footprint — the same
-    * scale as the manifest itself). */
+    * only files a vector actually touches pay the filter; every other
+    * file streams through scan-only, exactly as if no delete had
+    * happened. The touched-file list and the membership probe both
+    * come from the version's [[dvIndex]] (cached per sidecar, read on
+    * the driver: no Spark job). Past the index budget, or with an
+    * unreadable sidecar footer, the distributed fallback runs: one
+    * collect of the distinct touched files, then a `(__file, __pos)`
+    * anti-join, always correct and never memory-bound. */
   private def liveRead(spark: SparkSession, data: Seq[String],
       dvs: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType] = None,
@@ -1893,84 +1896,149 @@ object Manifests {
     def rd(fs: Seq[String], pos: Boolean = keepPos) =
       eraRead(spark, renames, fs, schema, withPositions = pos)
     if (dvs.isEmpty) return rd(data)
-    val dv = spark.read.parquet(dvs: _*)
-    val dvRawFiles = dv.select("__file").distinct().collect()
-      .map(_.getString(0))
-    val touched = dvRawFiles.map(Dfs.canonical).toSet
-    val (hit, clean) = data.partition(f => touched.contains(Dfs.canonical(f)))
-    val applied =
-      if (hit.isEmpty) None
-      else {
-        // index only the files THIS scan carries: sidecars legitimately
-        // hold rows for retired or pruned-away files, and paying bitmap
-        // bytes (or the budget) for files the scan never opens would be
-        // footprint the query didn't ask for
-        val hitCanon = hit.map(Dfs.canonical).toSet
-        val dvHitRaw = dvRawFiles.filter(r => hitCanon.contains(Dfs.canonical(r)))
-        val dvHit =
-          if (dvHitRaw.length == dvRawFiles.length) dv
-          else dv.filter(col("__file").isin(dvHitRaw.toIndexedSeq: _*))
-        def shed(df: DataFrame) =
-          if (keepPos) df else df.drop("__file", "__pos")
-        dvMembershipColumn(spark, dvHit) match {
-          case Some(deleted) =>
-            Some(shed(rd(hit, pos = true).filter(!deleted)))
-          case None =>
-            Some(shed(rd(hit, pos = true)
-              .join(dvHit, Seq("__file", "__pos"), "left_anti")))
-        }
+    def shed(df: DataFrame) =
+      if (keepPos) df else df.drop("__file", "__pos")
+    // index only the files THIS scan carries: sidecars legitimately
+    // hold rows for retired or pruned-away files, and paying bitmap
+    // bytes for files the scan never opens would be footprint the
+    // query didn't ask for
+    val (touched, applyTo): (Set[String], Seq[String] => DataFrame) =
+      dvIndex(spark, dvs, Some(data.map(Dfs.canonical).toSet)) match {
+        case Some(bits) => (bits.keySet.map(Dfs.canonical),
+          hit => rd(hit, pos = true).filter(!dvProbe(bits)))
+        case None =>
+          val dv = spark.read.schema(DvSchema).parquet(dvs: _*)
+          val dvRawFiles = dv.select("__file").distinct().collect()
+            .map(_.getString(0))
+          (dvRawFiles.map(Dfs.canonical).toSet, { hit =>
+            val hitCanon = hit.map(Dfs.canonical).toSet
+            val dvHitRaw = dvRawFiles.filter(r => hitCanon.contains(Dfs.canonical(r)))
+            val dvHit =
+              if (dvHitRaw.length == dvRawFiles.length) dv
+              else dv.filter(col("__file").isin(dvHitRaw.toIndexedSeq: _*))
+            antiJoin(rd(hit, pos = true), dvHit)
+          })
       }
-    val plain = if (clean.isEmpty) None else Some(rd(clean))
-    (applied, plain) match {
-      case (Some(a), Some(p)) => a.unionByName(p)
-      case (Some(a), None) => a
-      case (None, Some(p)) => p
-      case (None, None) => rd(data)
+    val (hit, clean) = data.partition(f => touched.contains(Dfs.canonical(f)))
+    if (hit.isEmpty) rd(data)
+    else {
+      val applied = shed(applyTo(hit))
+      if (clean.isEmpty) applied else applied.unionByName(rd(clean))
     }
   }
 
-  /** The scan-speed face of a `(__file, __pos)` frame (the
-    * Delta/Iceberg shape: a DV is a bitmap the SCAN consults, not a
-    * join the query pays): per-file position BITMAPS built driver-side
-    * (bounded by the frame, never the table) and returned as a
-    * codegen'd membership column — one bit probe per row, no join, no
-    * shuffle. Negated it filters live rows ([[liveRead]]); positive it
-    * selects churned rows (the change feed). None past the byte budget
-    * (`graft.dv.indexMaxBytes`, default 64 MB) or a >2³¹ position —
-    * callers fall back to the distributed (file, pos) join, which is
-    * always correct and never memory-bound. */
-  private[graft] def dvMembershipColumn(spark: SparkSession,
-      pos: DataFrame): Option[Column] = {
-    val perFile = pos.groupBy("__file")
-      .agg(max(col("__pos")).as("mx"), count(lit(1)).as("n")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val estBytes = perFile.map(_._2 / 8 + 64).sum
-    val maxBytes = spark.conf.getOption("graft.dv.indexMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    // the budget must bound BOTH costs: the shipped bitmap bytes
-    // (max-position span) and the DRIVER build — collect_list
-    // materializes every position as a boxed long, so a dense frame
-    // that fits the bitmap budget could still OOM the collect. 8
-    // bytes/position against the same budget keeps the build bounded.
-    if (estBytes > maxBytes || perFile.map(_._3).sum > maxBytes / 8 ||
-        perFile.exists(_._2 >= Int.MaxValue)) None
-    else {
-      val m = new java.util.HashMap[
-        org.apache.spark.unsafe.types.UTF8String, java.util.BitSet]
-      pos.groupBy("__file")
-        .agg(collect_list(col("__pos")).as("ps")).collect()
-        .foreach { r =>
-          val bs = new java.util.BitSet()
-          r.getSeq[Long](1).foreach(p => bs.set(p.toInt))
-          m.put(org.apache.spark.unsafe.types.UTF8String
-            .fromString(r.getString(0)), bs)
-        }
-      import org.apache.spark.sql.graft.ColumnShim
-      Some(ColumnShim.column(graft.functions.DvContains(
-        ColumnShim.expression(col("__file")),
-        ColumnShim.expression(col("__pos")),
-        new graft.functions.DvIndex(m))))
+  /** `rows` (carrying `__file`, `__pos`) less the positions `dv`
+    * records, in `rows`' own column order — the index path's shape. */
+  private def antiJoin(rows: DataFrame, dv: DataFrame): DataFrame =
+    rows.join(dv, Seq("__file", "__pos"), "left_anti")
+      .select(rows.columns.map(c => col(s"`$c`")).toSeq: _*)
+
+  /** The schema the write path gives every deletion-vector sidecar —
+    * stating it skips a footer read for schema inference. */
+  private val DvSchema = "__file STRING, __pos BIGINT"
+
+  /** One deletion-vector sidecar as the driver holds it: its footer
+    * record count, and — read on first use, with parquet-hadoop on the
+    * driver, no Spark job — its positions per raw `__file` spelling. A
+    * sidecar is immutable and UUID-named, so the entry never goes
+    * stale; a version over the index budget reads footers only. */
+  private final class DvSidecar(val records: Long, read: () => Map[String, Array[Long]]) {
+    lazy val positions: Map[String, Array[Long]] = read()
+  }
+
+  /** Per-sidecar entries, weighed by position count: a cleared
+    * namespace just re-reads footers and positions on next use. */
+  private val dvSidecars = graft.AppCache.namespace[String, DvSidecar](
+    "manifests.dv_sidecars", bound = 16L << 20, weigh = _.records + 1)
+
+  /** The entries of `dvs`, or None when any footer is unreadable. A
+    * cached entry opens no file; a miss reads the footer only. */
+  private def dvEntries(spark: SparkSession, dvs: Seq[String])
+      : Option[Seq[DvSidecar]] = {
+    val es = dvs.map { p =>
+      val k = Dfs.canonical(p)
+      dvSidecars.peek(spark, k).orElse(Dfs.parquetRecords(spark, p).map { n =>
+        val conf = spark.sessionState.newHadoopConf()
+        val e = new DvSidecar(n, () => readDvSidecar(conf, p))
+        dvSidecars.put(spark, k, e)
+        e
+      })
     }
+    if (es.forall(_.isDefined)) Some(es.flatten) else None
+  }
+
+  private def readDvSidecar(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Map[String, Array[Long]] = {
+    val r = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport,
+        new org.apache.hadoop.fs.Path(path))
+      .withConf(conf).build()
+    val buf = scala.collection.mutable.HashMap
+      .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+    try {
+      var g = r.read()
+      while (g != null) {
+        buf.getOrElseUpdate(g.getString("__file", 0),
+          new scala.collection.mutable.ArrayBuilder.ofLong) += g.getLong("__pos", 0)
+        g = r.read()
+      }
+    } finally r.close()
+    buf.iterator.map { case (f, b) => (f, b.result()) }.toMap
+  }
+
+  /** Raw `__file` spelling → every position the sidecars record for it
+    * (a multiset: the same position in two sidecars appears twice). */
+  private def positionsOf(es: Seq[DvSidecar]): Map[String, Array[Long]] =
+    es.flatMap(_.positions).groupBy(_._1).map { case (f, ps) =>
+      f -> ps.flatMap(_._2).toArray }
+
+  private def dvIndexMaxBytes(spark: SparkSession): Long =
+    spark.conf.getOption("graft.dv.indexMaxBytes")
+      .map(_.toLong).getOrElse(64L << 20)
+
+  /** The deletion-vector index of a sidecar set: raw `__file` spelling
+    * → deleted-position bitmap, the OR-merge of the per-sidecar
+    * entries, restricted to `scope`'s files (canonical paths) when
+    * given. None past the `graft.dv.indexMaxBytes` budget (default
+    * 64 MB) or when a footer is unreadable, and the caller takes its
+    * distributed fallback. The budget bounds both costs: the driver
+    * build (8 bytes a position, every sidecar's footer count, checked
+    * before any position is read) and the shipped bitmap bytes (the
+    * max-position span of each kept file); a position past 2³¹ also
+    * falls back. */
+  private[graft] def dvIndex(spark: SparkSession, dvs: Seq[String],
+      scope: Option[Set[String]] = None)
+      : Option[Map[String, java.util.BitSet]] = {
+    val maxBytes = dvIndexMaxBytes(spark)
+    dvEntries(spark, dvs).filter(_.map(_.records).sum <= maxBytes / 8)
+      .flatMap { es =>
+        val pos = positionsOf(es).filter { case (f, _) =>
+          scope.forall(_.contains(Dfs.canonical(f))) }
+        val mx = pos.map { case (f, ps) => f -> ps.max }
+        if (mx.valuesIterator.map(_ / 8 + 64).sum > maxBytes ||
+            mx.valuesIterator.exists(_ >= Int.MaxValue)) None
+        else Some(pos.map { case (f, ps) =>
+          val bs = new java.util.BitSet(mx(f).toInt + 1)
+          ps.foreach(p => bs.set(p.toInt))
+          f -> bs
+        })
+      }
+  }
+
+  /** `dv_contains(__file, __pos)` over `bits` (raw spellings): the
+    * codegen'd membership probe — one bit test per row, no join, no
+    * shuffle. Negated it filters live rows ([[liveRead]]); positive it
+    * selects churned rows (the change feed). */
+  private def dvProbe(bits: Iterable[(String, java.util.BitSet)]): Column = {
+    val m = new java.util.HashMap[
+      org.apache.spark.unsafe.types.UTF8String, java.util.BitSet]
+    bits.foreach { case (f, bs) =>
+      m.put(org.apache.spark.unsafe.types.UTF8String.fromString(f), bs) }
+    import org.apache.spark.sql.graft.ColumnShim
+    ColumnShim.column(graft.functions.DvContains(
+      ColumnShim.expression(col("__file")),
+      ColumnShim.expression(col("__pos")),
+      new graft.functions.DvIndex(m)))
   }
 
   /** Both directions of a signed DV-churn diff (columns __file, __pos,
@@ -1979,7 +2047,7 @@ object Manifests {
     * the touched-file list (raw-path canonical, unsorted-set semantics,
     * returned sorted) and the bitmap membership probe under the same
     * per-direction byte budget and fallback contract as
-    * [[dvMembershipColumn]] (None = over budget, caller semi-joins).
+    * [[dvIndex]] (None = over budget, caller semi-joins).
     * Directions with no churned positions are absent from the map. */
   private[graft] def dvChurnIndex(spark: SparkSession, imb: DataFrame,
       local: Option[Map[(Int, String), Seq[Long]]] = None)
@@ -1999,18 +2067,17 @@ object Manifests {
         .toSeq
     }
     if (stats.isEmpty) return Map.empty
-    val maxBytes = spark.conf.getOption("graft.dv.indexMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
+    val maxBytes = dvIndexMaxBytes(spark)
     val byDir = stats.groupBy(_._1)
-    // same two-cost budget as dvMembershipColumn, per direction
+    // same two-cost budget as dvIndex, per direction
     val inBudget = byDir.map { case (dir, rows) =>
       dir -> !(rows.map(_._3 / 8 + 64).sum > maxBytes ||
         rows.map(_._4).sum > maxBytes / 8 ||
         rows.exists(_._3 >= Int.MaxValue))
     }
     val okDirs = inBudget.filter(_._2).keys.toSeq
-    val bitmaps = scala.collection.mutable.Map.empty[Int, java.util.HashMap[
-      org.apache.spark.unsafe.types.UTF8String, java.util.BitSet]]
+    val bitmaps = scala.collection.mutable.Map.empty[Int,
+      scala.collection.mutable.Map[String, java.util.BitSet]]
     if (okDirs.nonEmpty) {
       val posRows: Iterable[(Int, String, Seq[Long])] = local match {
         case Some(m) =>
@@ -2025,20 +2092,15 @@ object Manifests {
       posRows.foreach { case (dir, f, ps) =>
         val bs = new java.util.BitSet()
         ps.foreach(p => bs.set(p.toInt))
-        bitmaps.getOrElseUpdate(dir, new java.util.HashMap)
-          .put(org.apache.spark.unsafe.types.UTF8String.fromString(f), bs)
+        bitmaps.getOrElseUpdate(dir, scala.collection.mutable.Map.empty)
+          .put(f, bs)
       }
     }
-    import org.apache.spark.sql.graft.ColumnShim
     byDir.map { case (dir, rows) =>
       val touched = rows.map(t => Dfs.canonical(t._2)).distinct.sorted.toSeq
       val probe =
         if (!inBudget(dir)) None
-        else Some(ColumnShim.column(graft.functions.DvContains(
-          ColumnShim.expression(col("__file")),
-          ColumnShim.expression(col("__pos")),
-          new graft.functions.DvIndex(bitmaps.getOrElse(dir,
-            new java.util.HashMap)))))
+        else Some(dvProbe(bitmaps.getOrElse(dir, Map.empty)))
       dir -> ((touched, probe))
     }
   }
@@ -2063,71 +2125,19 @@ object Manifests {
     liveRead(spark, files(spark, base, v), dvFiles(spark, base, v),
       schemaOf(spark, base, v), renamesOf(spark, base, v), keepPos = true)
 
-  private val dvPosCache = graft.AppCache
-    .namespace[String, Map[String, Array[Long]]]("manifests.dv_positions",
-      bound = 16)
-
-  /** Sidecar-recorded file spelling → recorded positions for an
-    * (immutable) sidecar SET — same build-once-per-session rationale
-    * as [[dvScanIndexCache]] below, but keeping the RAW `__file`
-    * spellings the change feed's probe matches against. Callers
-    * certify smallness (footer record counts) before asking. */
-  private def dvPositions(spark: SparkSession, dvs: Seq[String])
-      : Map[String, Array[Long]] = {
-    dvPosCache(spark, dvs.map(Dfs.canonical).sorted.mkString("\n")) {
-      val buf = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
-      spark.read.schema("__file STRING, __pos BIGINT").parquet(dvs: _*)
-        .collect().foreach { r =>
-          buf.getOrElseUpdate(r.getString(0),
-            new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(1)
-        }
-      buf.iterator.map { case (f, b) => (f, b.result()) }.toMap
-    }
-  }
-
-  private val dvScanIndexCache = graft.AppCache
-    .namespace[String, Option[Map[String, Array[Long]]]](
-      "manifests.dv_scan_index", bound = 16)
-
-  /** The whole-version deletion-vector bitmap index for the COLUMNAR
-    * catalog scan: canonical data-file path → deleted-position bitmap
-    * words, built driver-side from the version's sidecar parquet under
-    * the same byte budget as [[dvMembershipColumn]] (`graft.dv.
-    * indexMaxBytes`) — `None` past it, and the caller falls back to
-    * the V1 anti-join detour, which is always correct. Cached per
-    * sidecar path SET: sidecars are immutable (UUID-named, never
-    * rewritten), so a version's index builds once per session however
-    * many queries read it. Distinct raw spellings canonicalizing to
-    * one file OR-merge. */
+  /** The whole-version deletion-vector index for the COLUMNAR catalog
+    * scan: [[dvIndex]] keyed by canonical data-file path (raw
+    * spellings canonicalizing to one file OR-merge), as bitmap words.
+    * None past the budget, and the caller falls back to the V1
+    * anti-join detour, which is always correct. */
   private[graft] def dvScanIndex(spark: SparkSession,
-      dvs: Seq[String]): Option[Map[String, Array[Long]]] = {
-    if (dvs.isEmpty) return Some(Map.empty)
-    dvScanIndexCache(spark, dvs.map(Dfs.canonical).sorted.mkString("\n")) {
-      val dv = spark.read.parquet(dvs: _*)
-      val perFile = dv.groupBy("__file")
-        .agg(max(col("__pos")).as("mx"), count(lit(1)).as("n")).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val estBytes = perFile.map(_._2 / 8 + 64).sum
-      val maxBytes = spark.conf.getOption("graft.dv.indexMaxBytes")
-        .map(_.toLong).getOrElse(64L << 20)
-      // same two-cost budget as dvMembershipColumn: shipped bitmap
-      // bytes AND the driver-side collect of boxed positions
-      if (estBytes > maxBytes || perFile.map(_._3).sum > maxBytes / 8 ||
-          perFile.exists(_._2 >= Int.MaxValue)) None
-      else {
-        val m = scala.collection.mutable.HashMap
-          .empty[String, java.util.BitSet]
-        dv.groupBy("__file").agg(collect_list(col("__pos")).as("ps"))
-          .collect().foreach { r =>
-            val bs = m.getOrElseUpdate(Dfs.canonical(r.getString(0)),
-              new java.util.BitSet())
-            r.getSeq[Long](1).foreach(p => bs.set(p.toInt))
-          }
-        Some(m.iterator.map { case (k, bs) => (k, bs.toLongArray) }.toMap)
-      }
-    }
-  }
+      dvs: Seq[String]): Option[Map[String, Array[Long]]] =
+    dvIndex(spark, dvs).map(_.groupBy(e => Dfs.canonical(e._1)).map {
+      case (f, bs) =>
+        val all = new java.util.BitSet()
+        bs.valuesIterator.foreach(all.or)
+        f -> all.toLongArray
+    })
 
   def readLatest(spark: SparkSession, base: String): DataFrame =
     readAt(spark, base, latestVersion(spark, base)
@@ -2388,27 +2398,7 @@ object Manifests {
       val keep = fullSet.min
       fullSet -= keep; partialSet += keep
     }
-    val vecFiles = cur.filter(f => partialSet.contains(Dfs.canonical(f)))
-    val written: Seq[String] =
-      if (vecFiles.isEmpty) Seq.empty
-      else {
-        val vecLive = liveOf(vecFiles)
-        val dvRows = vecLive.filter(coalesce(pred, lit(false)))
-          .select(col("__file"), col("__pos"))
-        val touched = partialSet.toArray.sorted
-        val index = spark.sparkContext.broadcast(touched.zipWithIndex.toMap)
-        val shaped = dvRows.rdd
-          .map(r => (index.value(Dfs.canonical(r.getString(0))), r))
-          .partitionBy(new org.apache.spark.Partitioner {
-            override def numPartitions: Int = touched.length
-            override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-          })
-          .map(_._2)
-        val dir = s"$base/dv_${java.util.UUID.randomUUID().toString.take(8)}"
-        spark.createDataFrame(shaped, dvRows.schema)
-          .write.mode("errorifexists").parquet(dir)
-        Dfs.dataFiles(spark, dir).map(_.getPath.toString)
-      }
+    val written = lr.writeVectors(partialSet)(_.filter(coalesce(pred, lit(false))))
     // surviving data files carry verbatim with their schema and stats
     // (zones stay conservatively wide over the vectored rows); on
     // rebase the winners' appended files and their metadata carry from
@@ -2431,8 +2421,10 @@ object Manifests {
   /** Per-version live-read scaffolding shared by the whole MoR DML
     * tier ([[deleteWhereMor]], [[updateWhereMor]], [[mergeMor]],
     * [[commitDeltaWrite]]): `rd` reads files under the version's eras
-    * and recorded schema, `liveOf` additionally anti-joins the
-    * version's deletion vectors, and `liveTotals` is the per-file live
+    * and recorded schema, `liveOf` additionally drops the rows the
+    * version's deletion vectors mark — through the [[dvIndex]] probe
+    * (built once per reader), or past its budget the `(__file, __pos)`
+    * anti-join — and `liveTotals` is the per-file live
     * count — the accounting pass that splits retire-vs-vector (the
     * full-file elision invariant). ONE definition, four callers: a fix
     * to the live arithmetic cannot silently miss a copy. */
@@ -2443,16 +2435,42 @@ object Manifests {
     val sch: Option[org.apache.spark.sql.types.StructType] = m.schema
     def rd(fs: Seq[String], pos: Boolean = false): DataFrame =
       eraRead(spark, m.renames, fs, sch, withPositions = pos)
+    private lazy val dvBits =
+      dvIndex(spark, m.dv, Some(cur.map(Dfs.canonical).toSet))
     def liveOf(fs: Seq[String]): DataFrame = {
       val r = rd(fs, pos = true)
       if (m.dv.isEmpty) r
-      else r.join(spark.read.parquet(m.dv: _*),
-        Seq("__file", "__pos"), "left_anti")
+      else dvBits match {
+        case Some(bits) => r.filter(!dvProbe(bits))
+        case None => antiJoin(r, spark.read.schema(DvSchema).parquet(m.dv: _*))
+      }
     }
     /** The record a commit derived from `parent` starts from — the
       * snapshot's own, already read, unless a rebase moved past it. */
     def carriedAt(parent: Int): VersionMeta =
       (if (parent == v) m else meta(spark, base, parent)).carried
+    /** The sidecars vectoring out the live rows `hit` keeps from the
+      * `partial` files (canonical paths): exactly ONE sidecar file per
+      * touched data file, the layout [[deleteWhereMor]] documents. */
+    def writeVectors(partial: Set[String])(hit: DataFrame => DataFrame)
+        : Seq[String] = {
+      val vecFiles = cur.filter(f => partial.contains(Dfs.canonical(f)))
+      if (vecFiles.isEmpty) return Seq.empty
+      val dvRows = hit(liveOf(vecFiles)).select(col("__file"), col("__pos"))
+      val touched = partial.toArray.sorted
+      val index = spark.sparkContext.broadcast(touched.zipWithIndex.toMap)
+      val shaped = dvRows.rdd
+        .map(r => (index.value(Dfs.canonical(r.getString(0))), r))
+        .partitionBy(new org.apache.spark.Partitioner {
+          override def numPartitions: Int = touched.length
+          override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+        })
+        .map(_._2)
+      val dir = s"$base/dv_${java.util.UUID.randomUUID().toString.take(8)}"
+      spark.createDataFrame(shaped, dvRows.schema)
+        .write.mode("errorifexists").parquet(dir)
+      Dfs.dataFiles(spark, dir).map(_.getPath.toString)
+    }
     def liveTotals(fs: Seq[String]): Map[String, Long] =
       if (fs.isEmpty) Map.empty
       else liveOf(fs).groupBy("__file").count()
@@ -2529,26 +2547,7 @@ object Manifests {
     // SET expressions can mint violating values — validate the images
     enforceConstraints(spark, base, Some(v), newFiles, sch)
     // vectors for the boundary files only (file-pruned third pass)
-    val vecFiles = cur.filter(f => partialSet.contains(Dfs.canonical(f)))
-    val written: Seq[String] =
-      if (vecFiles.isEmpty) Seq.empty
-      else {
-        val dvRows = liveOf(vecFiles).filter(hit)
-          .select(col("__file"), col("__pos"))
-        val touched = partialSet.toArray.sorted
-        val index = spark.sparkContext.broadcast(touched.zipWithIndex.toMap)
-        val shaped = dvRows.rdd
-          .map(r => (index.value(Dfs.canonical(r.getString(0))), r))
-          .partitionBy(new org.apache.spark.Partitioner {
-            override def numPartitions: Int = touched.length
-            override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-          })
-          .map(_._2)
-        val dir = s"$base/dv_${java.util.UUID.randomUUID().toString.take(8)}"
-        spark.createDataFrame(shaped, dvRows.schema)
-          .write.mode("errorifexists").parquet(dir)
-        Dfs.dataFiles(spark, dir).map(_.getPath.toString)
-      }
+    val written = lr.writeVectors(partialSet)(_.filter(hit))
     // commit: survivors + the new images, old vectors + this one's;
     // the appended images extend the sidecars exactly like an append
     // (stats/partition tuples/blooms derive for the new files only)
@@ -2629,26 +2628,7 @@ object Manifests {
       .write.mode("errorifexists").parquet(dataDir)
     val newFiles = Dfs.dataFiles(spark, dataDir).map(_.getPath.toString)
     enforceConstraints(spark, base, Some(v), newFiles, sch)
-    val vecFiles = cur.filter(f => partialSet.contains(Dfs.canonical(f)))
-    val written: Seq[String] =
-      if (vecFiles.isEmpty) Seq.empty
-      else {
-        val dvRows = liveOf(vecFiles).join(keys, keyCols, "left_semi")
-          .select(col("__file"), col("__pos"))
-        val touched = partialSet.toArray.sorted
-        val index = spark.sparkContext.broadcast(touched.zipWithIndex.toMap)
-        val shaped = dvRows.rdd
-          .map(r => (index.value(Dfs.canonical(r.getString(0))), r))
-          .partitionBy(new org.apache.spark.Partitioner {
-            override def numPartitions: Int = touched.length
-            override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-          })
-          .map(_._2)
-        val dir = s"$base/dv_${java.util.UUID.randomUUID().toString.take(8)}"
-        spark.createDataFrame(shaped, dvRows.schema)
-          .write.mode("errorifexists").parquet(dir)
-        Dfs.dataFiles(spark, dir).map(_.getPath.toString)
-      }
+    val written = lr.writeVectors(partialSet)(_.join(keys, keyCols, "left_semi"))
     val nv = rebaseLoop(spark, base, v,
       added => rd(added)
         .select(keyCols.map(col): _*)
@@ -3866,13 +3846,11 @@ object Manifests {
     // resolved by reading ONLY the churned files at the churned
     // positions (a merge-on-read delete changes no data file, so the
     // file diff above cannot see it)
-    // sidecar schema is fixed by the write path — stating it skips a
-    // per-composition footer read for schema inference
     def dvOf(dvs: Seq[String]) =
       if (dvs.isEmpty)
         spark.range(0).select(col("id").cast("string").as("__file"),
           col("id").as("__pos"))
-      else spark.read.schema("__file STRING, __pos BIGINT").parquet(dvs: _*)
+      else spark.read.schema(DvSchema).parquet(dvs: _*)
     // a sidecar file listed by BOTH endpoints contributes the identical
     // (file, pos) multiset to both sides of the diff — it cancels
     // EXACTLY, so only each side's UNIQUE sidecars are read at all.
@@ -3897,30 +3875,28 @@ object Manifests {
         // entirely (bitmap set() is idempotent, the semi-join is a set
         // probe); only the genuinely two-sided shape cancels.
         val oneSided = dvAu.isEmpty || dvBu.isEmpty
-        // SMALL churn — total delta-sidecar positions certified by
-        // parquet footer metadata (exact row counts, no data read) to
-        // fit 1/64th of the index budget — builds the index DRIVER-side
-        // off ONE narrow scan-only collect: no shuffle, no persist, no
-        // stats/bitmap job pair. At-scale churn keeps the distributed
-        // shape below. Budget conf zero (the fallback-forcing tests'
-        // spelling) disables the small path too.
-        val maxIdxBytes = spark.conf.getOption("graft.dv.indexMaxBytes")
-          .map(_.toLong).getOrElse(64L << 20)
-        val dvRecs: Option[Long] =
-          (dvAu ++ dvBu).foldLeft(Option(0L)) { (acc, p) =>
-            acc.flatMap(a => Dfs.parquetRecords(spark, p).map(a + _))
-          }
+        // SMALL churn — total delta-sidecar positions certified by the
+        // per-sidecar entries' footer counts (no data read) to fit
+        // 1/64th of the index budget — builds the index DRIVER-side
+        // from the cached entries ([[dvEntries]]): no Spark job. At-scale
+        // churn keeps the distributed shape below. Budget conf zero
+        // (the fallback-forcing tests' spelling) disables the small
+        // path too.
+        val maxIdxBytes = dvIndexMaxBytes(spark)
         val localNet: Option[Map[(Int, String), Seq[Long]]] =
-          dvRecs.filter(r => r > 0L && r <= maxIdxBytes / 64).map { _ =>
+          dvEntries(spark, dvAu ++ dvBu).filter { es =>
+            val r = es.map(_.records).sum
+            r > 0L && r <= maxIdxBytes / 64
+          }.map { es =>
             if (oneSided) {
               val dir = if (dvAu.isEmpty) 1 else -1
-              dvPositions(spark, if (dvAu.isEmpty) dvBu else dvAu)
-                .map { case (f, ps) => (dir, f) -> ps.toSeq }
+              positionsOf(es).map { case (f, ps) => (dir, f) -> ps.toSeq }
             } else {
               // multiset-net the two per-side (cached) position maps
               // driver-side, per sidecar-recorded file spelling
-              val a = dvPositions(spark, dvAu)
-              val b = dvPositions(spark, dvBu)
+              val (ea, eb) = es.splitAt(dvAu.size)
+              val a = positionsOf(ea)
+              val b = positionsOf(eb)
               val out = scala.collection.mutable.HashMap
                 .empty[(Int, String), scala.collection.mutable.ArrayBuilder.ofLong]
               (a.keySet ++ b.keySet).foreach { f =>
@@ -3962,7 +3938,7 @@ object Manifests {
         try {
           // one stats pass + one collect build BOTH directions'
           // touched-file lists and bitmap probes (vs a per-direction
-          // distinct collect plus dvMembershipColumn's two collects);
+          // distinct collect plus two index collects);
           // ZERO jobs when the driver-side cancellation ran
           val churn = dvChurnIndex(spark, imb, local = localNet)
           def rowsAt(dir: Int): DataFrame = churn.get(dir) match {
@@ -4809,16 +4785,21 @@ object Manifests {
     }.reduce(_.unionByName(_))
   }
 
-  /** `m` with the zone-stat and bloom KEY LISTS narrowed by `retired`:
-    * a dropped, renamed or widened column's per-file sidecar columns
-    * were recorded under the old name or type, so skipping on it pauses
-    * until the next ANALYZE; a tier left with no key is dropped whole. */
+  /** `m` with the zone-stat and bloom KEY LISTS, the histograms and
+    * the KMV sketches narrowed by `retired`: a dropped, renamed or
+    * widened column's entries were recorded under the old name or type,
+    * so skipping and the append-time folds on it pause until the next
+    * ANALYZE; a tier left with no key is dropped whole (`histRows`
+    * with the last histogram). */
   private def withoutKey(m: VersionMeta,
       retired: String => Boolean): VersionMeta = {
     def narrow(t: Option[(Seq[String], Seq[String])]) =
       t.map { case (keys, segs) => (keys.filterNot(retired), segs) }
         .filter(_._1.nonEmpty)
-    m.copy(stats = narrow(m.stats), blooms = narrow(m.blooms))
+    val hist = m.hist.filterNot(e => retired(e._1))
+    m.copy(stats = narrow(m.stats), blooms = narrow(m.blooms), hist = hist,
+      histRows = m.histRows.filter(_ => hist.nonEmpty),
+      ndvKmv = m.ndvKmv.filterNot(e => retired(e._1)))
   }
 
   /** ALTER TABLE ... DROP COLUMN — METADATA-ONLY: the next version

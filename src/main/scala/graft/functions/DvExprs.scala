@@ -6,8 +6,13 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A deletion-vector INDEX: per-file bitmaps of deleted row positions,
-  * built driver-side from the sidecar parquet (bounded by the delete
-  * footprint, never by the table) and shipped to tasks inside the scan
+  * keyed by the sidecars' raw `__file` spelling. The manifest read path
+  * builds it from `Manifests.dvIndex` — per-sidecar entries read on the
+  * driver with parquet-hadoop and cached, so no Spark job runs — and
+  * the change feed from its churned positions; past the
+  * `graft.dv.indexMaxBytes` budget or on an unreadable sidecar footer
+  * no index is built and callers take the `(__file, __pos)` join. It
+  * ships to tasks inside the scan
   * stage's serialized plan — the Delta/Iceberg shape, where a DV is a
   * bitmap the SCAN consults, not a join the query pays. Lookup is one
   * hash probe + one bit test; the last file's bitmap is cached because

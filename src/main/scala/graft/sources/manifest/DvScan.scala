@@ -46,10 +46,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * `SupportsDelta` write path keys deletion vectors on, and a user's
   * `SELECT _file, _pos FROM t` rides the identical machinery.
   *
-  * The bitmap index is built once per version from the sidecar parquet
-  * ([[graft.ext.Manifests.dvScanIndex]], cached — sidecars are
-  * immutable) and broadcast; past the byte budget the caller falls
-  * back to the V1 anti-join detour, which is always correct. */
+  * The bitmap index ([[graft.ext.Manifests.dvScanIndex]]) is the
+  * version's shared DV index: the OR-merge of per-sidecar entries read
+  * on the driver and cached (sidecars are immutable), so building it
+  * runs no Spark job; it is broadcast with the scan. Past the
+  * `graft.dv.indexMaxBytes` budget, or with an unreadable sidecar
+  * footer, the caller falls back to the V1 anti-join detour, which is
+  * always correct. */
 private[manifest] class GraftScanBuilder(sp: SparkSession,
     idx: ManifestScanIndex, sch: StructType,
     opts: CaseInsensitiveStringMap, base: String, pinned: Option[Int],

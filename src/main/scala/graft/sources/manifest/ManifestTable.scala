@@ -156,9 +156,12 @@ class ManifestTable(spark: SparkSession, val base: String,
     // zone pruning and whole-stage codegen for every file. Only two
     // shapes still take the V1 detour over the DV/era-aware readAt:
     // live RENAME COLUMN events (pre-rename files hold the old
-    // physical name — a raw scan would null-fill the column) and a DV
-    // frame past the bitmap byte budget (the anti-join fallback is
-    // always correct, never memory-bound).
+    // physical name — a raw scan would null-fill the column) and a
+    // version whose DV index cannot be built: past the bitmap byte
+    // budget, or a sidecar footer unreadable (the anti-join fallback
+    // is always correct, never memory-bound). The index itself is the
+    // version's shared one (`Manifests.dvScanIndex`): cached
+    // per-sidecar entries read on the driver, no Spark job.
     if (v.exists(w => Manifests.hasLiveRenames(spark, base, w)))
       new MorScanBuilder(spark, base, v.get, sch, options, pinned)
     else {

@@ -32,7 +32,7 @@ class AppCacheSpec extends AnyFunSuite {
       "dim_product", "pq_codes", "skipping_scan")
       .foreach(q => SparkEntry.queries(q)(spark, TestSpark.sf).collect())
     // one manifest read of a table carrying DV sidecars, plus the change
-    // feed across the delete (the DV-index and DV-position memos)
+    // feed across the delete (the per-sidecar DV entries)
     val wh = java.nio.file.Files.createTempDirectory("graft_appcache_wh").toString
     ext.CatalogTestSupport.registerFreshCatalog(spark, wh)
     import spark.implicits._
@@ -50,8 +50,7 @@ class AppCacheSpec extends AnyFunSuite {
 
     val populated = AppCache.sizes(spark).filter(_._2 > 0)
     Seq("warehouse", "memo", "keys.ranked", "similarity.ivf_centroids",
-      "skipping.fixtures", "manifests.files", "manifests.dv_scan_index",
-      "manifests.dv_positions")
+      "skipping.fixtures", "manifests.files", "manifests.dv_sidecars")
       .foreach(n => assert(populated.contains(n), s"$n was never populated"))
     assert(persistedIds.diff(before).nonEmpty)
 
@@ -60,6 +59,43 @@ class AppCacheSpec extends AnyFunSuite {
     assert(left.isEmpty, s"entries survive evictAll: $left")
     assert(persistedIds === before,
       s"persisted RDDs survive evictAll: ${persistedIds.diff(before)}")
+  }
+
+  test("DV reads stay exact while another thread evicts every namespace") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_appcache_conc").toString
+    ext.CatalogTestSupport.registerFreshCatalog(spark, wh)
+    import spark.implicits._
+    (1 to 300).map(i => (i.toLong, i % 7)).toDF("id", "grp")
+      .createOrReplaceTempView("appcache_conc_src")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.appcache_conc")
+    spark.sql("CREATE TABLE graft.appcache_conc.t AS SELECT * FROM appcache_conc_src")
+    spark.sql("CALL graft.system.delete_mor('appcache_conc.t', 'id % 10 = 3')")
+    val base = s"$wh/appcache_conc/t"
+    val live = 270L
+    assert(ext.Manifests.readLatest(spark, base).count() === live)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val evictions = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(5)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val evictor = Future {
+        while (!stop.get()) {
+          AppCache.evictAll(spark); evictions.incrementAndGet(); Thread.sleep(2)
+        }
+      }
+      val readers = (1 to 4).map(t => Future {
+        (1 to 6).map { i =>
+          if ((t + i) % 2 == 0) ext.Manifests.readLatest(spark, base).count()
+          else spark.sql("SELECT * FROM graft.appcache_conc.t").count()
+        }
+      })
+      val counts =
+        try readers.flatMap(Await.result(_, Duration(120, TimeUnit.SECONDS)))
+        finally stop.set(true)
+      Await.result(evictor, Duration(60, TimeUnit.SECONDS))
+      assert(counts.size === 24 && counts.forall(_ == live), s"counts: $counts")
+      assert(evictions.get > 0)
+    } finally pool.shutdownNow()
   }
 
   test("8 threads on one cold key run the build once") {

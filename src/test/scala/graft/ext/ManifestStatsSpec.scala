@@ -394,6 +394,30 @@ class ManifestStatsSpec extends AnyFunSuite {
     assert(h3("k")._2.last._2 === 99.0, s"bins ${h3("k")._2}")
   }
 
+  test("an append after RENAME COLUMN and DROP COLUMN of analyzed columns folds only the live ones") {
+    import spark.implicits._
+    val b = java.nio.file.Files
+      .createTempDirectory("graft_hist_ddl").toString + "/t"
+    Manifests.commitData((1 to 400).map(i =>
+      (i.toLong, i % 10, i % 7, i % 5)).toDF("id", "k", "r", "d"), b)
+    Manifests.analyze(spark, b, Seq("k", "r", "d"))
+    Manifests.analyzeHistograms(spark, b, Seq("k", "r", "d"), numBins = 4)
+    Manifests.renameColumn(spark, b, "r", "r2")
+    Manifests.dropColumn(spark, b, "d")
+    val v = Manifests.latestVersion(spark, b).get
+    assert(Manifests.histOf(spark, b, v).keySet === Set("k"))
+    assert(Manifests.ndvKmvOf(spark, b, v).keySet === Set("k"))
+    Manifests.append((401 to 450).map(i =>
+      (i.toLong, i % 10, i % 7)).toDF("id", "k", "r2"), b)
+    val w = Manifests.latestVersion(spark, b).get
+    assert(Manifests.histOf(spark, b, w).keySet === Set("k"))
+    assert(Manifests.histRowsOf(spark, b, w) === Some(450L))
+    val back = Manifests.readLatest(spark, b)
+    assert(back.columns.toSeq === Seq("id", "k", "r2"))
+    assert(back.count() === 450)
+    assert(back.filter(col("r2").isNull).count() === 0)
+  }
+
   test("stale histogram damps toward 1: appends that outgrow the ANALYZE anchor stop pricing old frequencies (fold off)") {
     import spark.implicits._
     registerCatalog()

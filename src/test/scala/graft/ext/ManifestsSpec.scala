@@ -43,6 +43,9 @@ class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
     // a DATA file open — the cost a metadata-only answer must avoid
     if (s.contains("/data_") && !p.getName.startsWith("_"))
       dataReads.incrementAndGet()
+    // a deletion-vector SIDECAR open — the cost a cached DV index avoids
+    if (s.contains("/dv_") && !p.getName.startsWith("_"))
+      dvReads.incrementAndGet()
     super.open(p, bufferSize)
   }
   override def create(p: org.apache.hadoop.fs.Path, permission: org.apache.hadoop.fs.permission.FsPermission,
@@ -73,6 +76,7 @@ object CountingFileSystem {
   val manifestReads = new java.util.concurrent.atomic.AtomicLong(0)
   val sidecarReads = new java.util.concurrent.atomic.AtomicLong(0)
   val dataReads = new java.util.concurrent.atomic.AtomicLong(0)
+  val dvReads = new java.util.concurrent.atomic.AtomicLong(0)
   val inListing: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 }
@@ -418,20 +422,84 @@ class ManifestsSpec extends AnyFunSuite {
 
   test("DV reads: the bitmap-index scan path and the anti-join fallback agree row-for-row") {
     import spark.implicits._
-    val b = base("graft_man_dvpaths")
-    Manifests.commitData(
-      (1 to 120).map(i => (i.toLong, i % 3, s"s$i")).toDF("id", "k", "s")
-        .repartitionByRange(3, col("id")), b)
-    Manifests.deleteWhereMor(spark, b, col("k") === 1) // partial everywhere
-    def snap() = Manifests.readLatest(spark, b).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq
-    val viaBitmap = snap()
-    assert(viaBitmap.size === 80 && viaBitmap.forall(_._2 != 1))
+    val wh = java.nio.file.Files.createTempDirectory("graft_man_dvpaths").toString
+    CatalogTestSupport.registerFreshCatalog(spark, wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.dvp")
+    (1 to 120).map(i => (i.toLong, i % 3, s"s$i")).toDF("id", "k", "s")
+      .createOrReplaceTempView("dvp_src")
+    val upserts = Seq(2L, 5L, 200L).map(i => (i, 9, s"m$i")).toDF("id", "k", "s")
+    // two identical tables, so each path runs its own second delete
+    val Seq(b, twin) = Seq("t", "u").map { t =>
+      spark.sql(s"CREATE TABLE graft.dvp.$t AS SELECT * FROM dvp_src")
+      val b = s"$wh/dvp/$t"
+      Manifests.deleteWhereMor(spark, b, col("k") === 1) // partial everywhere
+      Manifests.mergeMor(spark, b, upserts, Seq("id"))
+      b
+    }
+    val v = Manifests.latestVersion(spark, b).get
+    val dvs = Manifests.dvFiles(spark, b, v)
+    assert(dvs.size >= 2, "the version must carry the delete's and the merge's vectors")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def reads() = Seq(
+      rows(Manifests.readLatest(spark, b)),
+      rows(Manifests.readAtWithPos(spark, b, v)),
+      rows(spark.sql("SELECT * FROM graft.dvp.t")),
+      rows(Manifests.changesBetween(spark, b, 0, v)))
+    def deleteAgain(t: String) = {
+      val (n, _) = Manifests.deleteWhereMor(spark, t, col("id") % 4 === 0)
+      (n, rows(Manifests.readLatest(spark, t)))
+    }
+    assert(Manifests.dvIndex(spark, dvs).isDefined)
+    val viaBitmap = reads()
+    assert(viaBitmap.head.size === 81 &&
+      viaBitmap.head.forall(r => !r.split('|')(1).equals("1")))
+    val secondViaBitmap = deleteAgain(b)
     // zero budget forces the distributed anti-join — same rows exactly
     spark.conf.set("graft.dv.indexMaxBytes", "0")
-    try assert(snap() === viaBitmap,
-      "fallback anti-join must produce the bitmap path's rows verbatim")
-    finally spark.conf.unset("graft.dv.indexMaxBytes")
+    try {
+      assert(Manifests.dvIndex(spark, dvs).isEmpty)
+      val viaJoin = Seq(
+        rows(Manifests.readAt(spark, b, v)),
+        rows(Manifests.readAtWithPos(spark, b, v)),
+        rows(spark.sql(s"SELECT * FROM graft.dvp.t VERSION AS OF $v")),
+        rows(Manifests.changesBetween(spark, b, 0, v)))
+      viaJoin.zip(viaBitmap).zipWithIndex.foreach { case ((j, i), n) =>
+        assert(j === i, s"read $n: the fallback must produce the bitmap path's rows verbatim") }
+      val secondViaJoin = deleteAgain(twin)
+      assert(secondViaJoin === secondViaBitmap)
+    } finally spark.conf.unset("graft.dv.indexMaxBytes")
+    // a read of an already-read version runs only its scan job and
+    // opens no sidecar: the index comes from the cached entries
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcnt.impl", classOf[CountingFileSystem].getName)
+    val c = "graftcnt:" +
+      java.nio.file.Files.createTempDirectory("graft_man_dvcnt").toString + "/t"
+    Manifests.commitData(spark.table("dvp_src").repartition(3), c)
+    Manifests.deleteWhereMor(spark, c, col("k") === 1)
+    Manifests.mergeMor(spark, c, upserts, Seq("id"))
+    assert(Manifests.readLatest(spark, c).count() === 81)
+    val sc = spark.sparkContext
+    def jobsOf(f: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.graft.ListenerShim.drain(sc)
+      sc.addSparkListener(listener)
+      try { f; org.apache.spark.graft.ListenerShim.drain(sc) }
+      finally sc.removeSparkListener(listener)
+      jobs.get
+    }
+    val dv0 = CountingFileSystem.dvReads.get()
+    // collect() is one scan job; count() adds AQE's shuffle-map job on
+    // any table, so it must cost what the clean version 0's count does
+    assert(jobsOf(assert(Manifests.readLatest(spark, c).collect().length === 81)) === 1)
+    assert(jobsOf(assert(Manifests.readLatest(spark, c).count() === 81)) ===
+      jobsOf(assert(Manifests.readAt(spark, c, 0).count() === 120)))
+    assert(CountingFileSystem.dvReads.get() === dv0,
+      "a cached DV read must open no sidecar")
   }
 
   test("deleteWhereMor: null predicate rows survive; compact materializes vectors away") {
