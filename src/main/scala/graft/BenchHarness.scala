@@ -4,23 +4,40 @@ import org.apache.spark.sql.SparkSession
 
 /** The one scaffold every decade-bench main runs on: the session
   * recipe (`local[SPARK_GRAFT_CPUS]`, matching shuffle partitions,
-  * UTC, no UI), the temp work root, the run-scoped manifest catalog
-  * and the wall-clock timer. A harness change — a new required conf,
-  * a timer fix — lands HERE once, so no bench can quietly measure a
-  * differently-configured session. */
+  * UTC, no UI, a generated-code cache that holds the working set), the
+  * temp work root, the run-scoped manifest catalog and the wall-clock
+  * timer. Every session the project builds — the test suite's, Verify's,
+  * Bench's, the pipeline mains' — comes from this recipe, so a harness
+  * change (a new required conf, a timer fix) lands HERE once, and no
+  * bench can quietly measure a differently-configured session. */
 object BenchHarness {
+
+  /** Spark's generated-class cache, `spark.sql.codegen.cache.maxEntries`
+    * (Spark's default: 100 LRU entries), sized to hold the working set:
+    * one full Verify pass compiles 2,263 distinct classes (the warehouse
+    * build and the 12 BI queries about 300), and this is the next power
+    * of two above that. At 100, every warm round of the BI queries
+    * recompiled about 165 classes. A static conf: it takes effect only
+    * when the session is built. */
+  val CodegenCacheEntries = 4096
 
   /** `local[cpus]` session; `defaultCpus` only seeds the env fallback
     * (the streaming relay runs on 4 threads by default, the batch
     * benches on 32). */
-  def session(defaultCpus: String = "32"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val s = SparkSession.builder()
+  def session(defaultCpus: String = "32"): SparkSession =
+    onCores(sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus))
+
+  /** The recipe on exactly `cpus` local cores, plus the caller's own
+    * session-build confs. */
+  def onCores(cpus: String, conf: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

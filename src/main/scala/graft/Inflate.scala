@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: inflate a fixture directory N-fold on disk so Bench can be
@@ -34,13 +34,7 @@ object Inflate {
     val outDir = args(1)
     val n = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchHarness.onCores(cpus)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$inDir/$t.parquet")

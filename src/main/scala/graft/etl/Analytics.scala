@@ -257,17 +257,22 @@ object Analytics {
   /** Referential-integrity audit: fact keys with no dimension row, per
     * dim. Constructively zero here (the dims derive from the same cleaned
     * lineage) — the point is the operator: three broadcast LEFT ANTI
-    * probes, no fact shuffle, one scan each. */
+    * probes, no fact shuffle, one scan each. The probes' orphans are
+    * tagged, unioned and counted in ONE aggregate: three separately
+    * aggregated probes ran three shuffle stages whose (empty) results AQE
+    * re-planned in whichever order they finished, so a repeat run could
+    * generate differently numbered code and recompile it. */
   def fkOrphans(spark: SparkSession, dir: String): DataFrame = {
     val wh = Warehouse(spark, dir)
-    def orphans(dim: DataFrame, key: String) =
+    val probes = Seq(wh.dimProduct -> "product_key",
+      wh.dimCustomer -> "customer_key", wh.dimDate -> "date_key")
+    val orphans = probes.zipWithIndex.map { case ((dim, key), i) =>
       wh.fact.join(broadcast(dim.select(key)), Seq(key), "left_anti")
-        .agg(count(lit(1)).as("n"))
-    orphans(wh.dimProduct, "product_key")
-      .crossJoin(orphans(wh.dimCustomer, "customer_key").withColumnRenamed("n", "nc"))
-      .crossJoin(orphans(wh.dimDate, "date_key").withColumnRenamed("n", "nd"))
-      .select(col("n").as("orphan_products"), col("nc").as("orphan_customers"),
-        col("nd").as("orphan_dates"))
+        .select(lit(i).as("dim"))
+    }.reduce(_ unionByName _)
+    def of(i: Int) = count(when(col("dim") === i, 1))
+    orphans.agg(of(0).as("orphan_products"), of(1).as("orphan_customers"),
+      of(2).as("orphan_dates"))
   }
 
   def fkOrphansOracleSql: String =

@@ -11,11 +11,27 @@ import org.apache.spark.storage.StorageLevel
   * parquet inside EVERY quality query; at 100 TB that is re-running the
   * whole ETL dozens of times per verification pass. This layer builds each
   * stage once per (session, sf-dir), persists it (MEMORY_AND_DISK — spills
-  * instead of OOMing when the cleaned table outgrows executor memory), and
-  * every downstream query reuses the cached stage. On a real cluster the
-  * same role is played by the parquet warehouse [[Transform.writeWarehouse]]
-  * writes (and [[Pipeline]] runs); for the in-session query surface the
-  * cache avoids the write-read cycle while keeping one-pass semantics.
+  * instead of OOMing when the cleaned table outgrows executor memory),
+  * materializes it, and every downstream query reuses the cached stage. On
+  * a real cluster the same role is played by the parquet warehouse
+  * [[Transform.writeWarehouse]] writes (and [[Pipeline]] runs); for the
+  * in-session query surface the cache avoids the write-read cycle while
+  * keeping one-pass semantics.
+  *
+  * Every frame handed out is a LEAF: a one-node plan over its persisted
+  * stage's cached rows ([[org.apache.spark.sql.graft.SessionShim.leaf]]),
+  * and each next stage is built on the leaves of the ones before it. A
+  * persisted frame's plan embeds its whole lineage — the fact's was
+  * 4,514 lines, the staging 5-way join once per dim through
+  * [[graft.functions.Keys.withRank]]'s persisted intermediates — and Spark
+  * formats that plan for the SQL listener on every execution start and
+  * every adaptive re-plan, UI or not: a BI query spent about half its
+  * driver time printing the ETL. A leaf prints as one `Scan ExistingRDD`
+  * line and still carries the stage's partitioning, ordering and cached
+  * size, so joins plan as before. The data is the one compressed columnar
+  * copy; the leaf reads its blocks, and a lost or released block
+  * recomputes through the RDD's lineage (the stage's own plan, down to
+  * the dims' still-persisted rank intermediates).
   */
 final case class Warehouse(
     staging: DataFrame,
@@ -27,22 +43,21 @@ final case class Warehouse(
 
 object Warehouse {
 
-  /** Keyed by sf-dir; released stages are unpersisted (the
-    * [[graft.AppCache]] evict precondition applies). */
-  private val cache = graft.AppCache.namespace[String, Warehouse]("warehouse",
-    release = wh => Seq(wh.fact, wh.dimDate, wh.dimCustomer, wh.dimProduct,
-      wh.cleaned, wh.staging).foreach(_.unpersist(blocking = false)))
+  /** Keyed by sf-dir: the leaves, and the persisted stages behind them,
+    * which release unpersists (the [[graft.AppCache]] evict precondition
+    * applies). */
+  private val cache = graft.AppCache.namespace[String, (Warehouse, Seq[DataFrame])](
+    "warehouse", release = _._2.foreach(_.unpersist(blocking = false)))
 
   def apply(spark: SparkSession, dir: String): Warehouse = {
     // single-flight: N warm-up workers hitting a cold memo must not each
     // run the whole ETL build
-    val wh = cache(spark, dir)(build(spark, dir))
+    val wh = cache(spark, dir)(build(spark, dir))._1
     // The memo is APP-scoped but a DataFrame is bound to the session that
     // analyzed it: hand a sibling session (bench warm-up workers) frames
     // re-rooted onto ITS session, or temp views / SQL-function
     // registrations made by the caller would land on the wrong catalog
-    // (SessionShim.rebind; the shared cache manager matches the rebound
-    // plan by canonicalization, so the persisted stages are still hit).
+    // (SessionShim.rebind; a rebound leaf reads the same RDD).
     def rb(df: DataFrame): DataFrame =
       org.apache.spark.sql.graft.SessionShim.rebind(spark, df)
     if (wh.staging.sparkSession eq spark) wh
@@ -50,8 +65,15 @@ object Warehouse {
       rb(wh.dimCustomer), rb(wh.dimDate), rb(wh.fact))
   }
 
-  private def build(spark: SparkSession, dir: String): Warehouse = {
-    def p(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
+  private def build(spark: SparkSession, dir: String): (Warehouse, Seq[DataFrame]) = {
+    // persist, materialize, and hand on the leaf over the cached rows
+    val persisted = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+    def stage(df: DataFrame): DataFrame = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      persisted.add(p)
+      p.count()
+      org.apache.spark.sql.graft.SessionShim.leaf(p)
+    }
     // Cache-parallelism guard (opt guide §2, r19): the staging join and
     // the dedup inside `cleaned` each end in an exchange that AQE
     // coalesces by COMPRESSED shuffle bytes — ~2 partitions at fixture
@@ -70,33 +92,29 @@ object Warehouse {
     val probe = graft.Tables.lineitem(spark, dir)
     def spread(df: DataFrame, key: String) =
       graft.Tables.spreadToCores(df, org.apache.spark.sql.functions.col(key), probe)
-    val staging = p(spread(Staging.staging(spark, dir), "stock_code"))
-    val cleaned = p(spread(Clean.cleaned(staging), "invoice_no"))
-    // The dim builds are EAGER (surrogate-key ranking runs a range-sample
-    // job + a partition-counts job each — Keys.withRank), and construction
-    // used to run them back-to-back: 3 × (2 small jobs + a persist), each
-    // leaving most of the cluster idle. Materialize `cleaned` once so the
-    // dims never race to fill its cache, then build the three dims from a
-    // thread pool so their jobs back-fill each other's stragglers
-    // (opt guide §2.6 — overlap independent jobs; actions are sequential
-    // only because driver code calls them sequentially).
-    cleaned.count()
+    val staging = stage(spread(Staging.staging(spark, dir), "stock_code"))
+    val cleaned = stage(spread(Clean.cleaned(staging), "invoice_no"))
     import scala.concurrent.{blocking, Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // blocking{}: each dim build runs eager Spark actions (Keys.withRank
-    // sample + counts). On the global fork-join pool that would pin a
-    // worker thread for the job's full wall time — with up to 8 bench
+    // The dim builds are EAGER (surrogate-key ranking runs a range-sample
+    // job + a partition-counts job each — Keys.withRank), so build the
+    // three from a thread pool: their jobs back-fill each other's
+    // stragglers (opt guide §2.6 — overlap independent jobs; actions are
+    // sequential only because driver code calls them sequentially).
+    // blocking{}: on the global fork-join pool each build would pin a
+    // worker thread for its jobs' full wall time — with up to 8 bench
     // warm-up workers also entering build paths, a low-core driver can
     // starve the pool (r18 ADVICE). blocking{} lets it grow a
     // compensation thread instead.
-    val fP = Future(blocking { p(Transform.dimProduct(cleaned)) })
-    val fC = Future(blocking { p(Transform.dimCustomer(cleaned)) })
-    val fD = Future(blocking { p(Transform.dimDate(cleaned)) })
+    val fP = Future(blocking { stage(Transform.dimProduct(cleaned)) })
+    val fC = Future(blocking { stage(Transform.dimCustomer(cleaned)) })
+    val fD = Future(blocking { stage(Transform.dimDate(cleaned)) })
     val dimP = Await.result(fP, Duration.Inf)
     val dimC = Await.result(fC, Duration.Inf)
     val dimD = Await.result(fD, Duration.Inf)
-    val fact = p(Transform.factSales(cleaned, dimP, dimC, dimD))
-    Warehouse(staging, cleaned, dimP, dimC, dimD, fact)
+    val fact = stage(Transform.factSales(cleaned, dimP, dimC, dimD))
+    import scala.jdk.CollectionConverters._
+    (Warehouse(staging, cleaned, dimP, dimC, dimD, fact), persisted.asScala.toSeq)
   }
 }

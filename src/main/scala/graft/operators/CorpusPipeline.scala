@@ -308,14 +308,7 @@ object CorpusPipeline {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_corpus").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.BenchHarness.session(defaultCpus = "4")
     val status = run(spark, dir, out)
     println(s"""{"corpus_status":"$status","out":"$out"}""")
     spark.stop()

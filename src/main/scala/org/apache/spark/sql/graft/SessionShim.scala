@@ -16,6 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frame's logical plan onto the caller's session; the cache manager is
   * application-shared and matches by canonicalized plan, so a rebound
   * frame still reads the memoized InMemoryRelation instead of recomputing.
+  * A rebound [[leaf]] shares the same RDD: the leaf is its whole plan, so
+  * the caller's session reads the same persisted blocks, with no cache
+  * lookup at all.
   */
 object SessionShim {
   /** Re-roots on the ANALYZED plan, not the raw logical one: rebinding
@@ -32,4 +35,20 @@ object SessionShim {
     else org.apache.spark.sql.classic.Dataset.ofRows(
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.analyzed)
+
+  /** A one-node frame over `df`'s executed rows: a `LogicalRDD` over
+    * `df.queryExecution.toRdd`, carrying `df`'s output partitioning, its
+    * ordering and its optimized plan's statistics (for a persisted,
+    * materialized frame: the cached relation's real size), so planners
+    * size joins on it exactly as on `df`. Nothing of `df`'s lineage is in
+    * the leaf's plan, so no query over it re-plans, re-canonicalizes or
+    * re-prints that lineage. The rows are not copied: for a persisted
+    * `df` the RDD reads its cached blocks, and a lost block recomputes
+    * through the RDD's lineage. */
+  def leaf(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(
+        ds.queryExecution.toRdd, ds, isStreaming = false))
+  }
 }

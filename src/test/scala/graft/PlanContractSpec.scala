@@ -31,12 +31,11 @@ class PlanContractSpec extends AnyFunSuite {
   }
 
   test("fact build joins all three dims via broadcast hash join") {
-    val plan = planOf(Warehouse(spark, sf).fact)
-    // cached plan string may summarize; fall back to the uncached build
-    val effective = if (plan.contains("InMemory")) {
-      val wh = Warehouse(spark, sf)
+    // the warehouse hands out leaves over its built stages, so inspect
+    // the fact build itself over them
+    val wh = Warehouse(spark, sf)
+    val effective =
       planOf(etl.Transform.factSales(wh.cleaned, wh.dimProduct, wh.dimCustomer, wh.dimDate))
-    } else plan
     assert(effective.contains("BroadcastHashJoin"), s"dim joins not broadcast:\n$effective")
     assert(!effective.contains("SortMergeJoin"), "no shuffle join expected in the fact build")
   }
@@ -298,8 +297,8 @@ class PlanContractSpec extends AnyFunSuite {
     val frame = etl.Mv.refreshFrame(spark, mv0, batches(1))
     // positive containment, not a blacklist: EVERY leaf must be a file
     // scan of the MV or the batch — a refresh that unioned in the cached
-    // warehouse lineage would surface as an InMemoryTableScan leaf (whose
-    // inner file scans this traversal can't see), so any non-file-scan
+    // warehouse would surface as a `Scan ExistingRDD` leaf over a cached
+    // stage (whose file scans this traversal can't see), so any non-file-scan
     // leaf fails the contract too
     val plan = frame.queryExecution.sparkPlan
     val leaves = plan.collectLeaves()

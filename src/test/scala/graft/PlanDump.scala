@@ -12,15 +12,9 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, qlist) = args.take(4)
-    // mirror Bench's session exactly (master/shuffle partitions from env)
-    // so timings and plans are the ones the driver's bench would see
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session recipe, so timings and plans are the ones the
+    // bench would see
+    val spark = BenchHarness.session()
     Files.createDirectories(Paths.get(outDir))
     val names =
       if (qlist == "all") SparkEntry.queries.keys.toSeq.sorted

@@ -6,17 +6,8 @@ import org.apache.spark.sql.SparkSession
   * [[graft.etl.Warehouse]] cache also makes every spec after the first
   * reuse the built lineage). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_test_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = BenchHarness.onCores("4",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_test_wh").toString)
   val sf = "/root/testdata/sf0.001"
 }
