@@ -85,6 +85,12 @@ object AppCache {
       cells.keys.filter(k => k._1 == a && p(k._2)).foreach(drop)
     }
 
+    /** This application's built values. */
+    def values(spark: SparkSession): Iterator[V] = {
+      val a = app(spark)
+      cells.iterator.collect { case (k, c) if k._1 == a && c.ready => c.value }
+    }
+
     /** This application's entry count. */
     def size(spark: SparkSession): Int = {
       val a = app(spark)

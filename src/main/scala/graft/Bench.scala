@@ -198,16 +198,6 @@ object Bench {
       } finally pool.shutdown()
     }
     val warmupSec = (System.nanoTime() - w0) / 1e9
-    if (sys.env.contains("SPARK_GRAFT_ARM")) {
-      spark.conf.set("spark.sql.catalog.graft",
-        "graft.sources.manifest.ManifestCatalog")
-      org.apache.spark.sql.graft.ManifestInsertStrategy.install(spark)
-      // touching the catalog instantiates it, which installs
-      // ManifestCountRule — the exact state a full run reaches
-      try spark.sql("SHOW NAMESPACES IN graft").count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] ARM catalog touch: ${e.getMessage}") }
-    }
     // attribution diagnostics (stderr — never part of the JSON contract):
     // resident cached blocks and cumulative JVM GC time bracket the timed
     // pass, separating "plans got slower" from "the session pays GC rent"

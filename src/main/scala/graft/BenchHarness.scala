@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one scaffold every decade-bench main runs on: the session
   * recipe (`local[SPARK_GRAFT_CPUS]`, matching shuffle partitions,
-  * UTC, no UI, a generated-code cache that holds the working set), the
+  * UTC, no UI, a generated-code cache that holds the working set, the
+  * engine's session extensions — [[GraftExtensions]]), the
   * temp work root, the run-scoped manifest catalog and the wall-clock
   * timer. Every session the project builds — the test suite's, Verify's,
   * Bench's, the pipeline mains' — comes from this recipe, so a harness
@@ -36,6 +37,7 @@ object BenchHarness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .withExtensions(new GraftExtensions)
     conf.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

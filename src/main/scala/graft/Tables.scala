@@ -14,8 +14,16 @@ import org.apache.spark.sql.functions._
   * driver-bound.
   */
 object Tables {
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Reads with the table's schema, inferred once per path: parquet
+    * schema inference runs a Spark job, which every read paid again
+    * (two in `q_region_sales`, one per raw table in the staging build). */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemas(spark, path)(spark.read.parquet(path).schema)).parquet(path)
+  }
+
+  private val schemas = AppCache.namespace[String, org.apache.spark.sql.types.StructType](
+    "tables.schemas")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")

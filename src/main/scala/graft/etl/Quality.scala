@@ -265,7 +265,7 @@ object Quality {
     *    same plan shape — only the hash expression differs. */
   def analyzeStatsKmv(spark: SparkSession, dir: String,
       k: Int = analyzeKmvK): DataFrame = {
-    graft.functions.TopKAggExprs.registerMinK(spark)
+    graft.functions.TopKAggExprs.register(spark)
     val portable = spark.conf.getOption("graft.kmv.portableHash")
       .exists(_.toBoolean)
     // xxhash64(null-free input) >>> 4 is uniform on [0, 2^60) — the same

@@ -43,16 +43,27 @@ final case class Warehouse(
 
 object Warehouse {
 
-  /** Keyed by sf-dir: the leaves, and the persisted stages behind them,
-    * which release unpersists (the [[graft.AppCache]] evict precondition
-    * applies). */
-  private val cache = graft.AppCache.namespace[String, (Warehouse, Seq[DataFrame])](
-    "warehouse", release = _._2.foreach(_.unpersist(blocking = false)))
+  /** One built warehouse: its leaves, the persisted stages behind them,
+    * and the leaves' RDD ids. */
+  private final case class Built(wh: Warehouse, persisted: Seq[DataFrame], leafRdds: Set[Int])
+
+  /** Keyed by sf-dir. Release unpersists the stages and destroys the
+    * dimension broadcasts built over the leaves (the [[graft.AppCache]]
+    * evict precondition applies). */
+  private val cache = graft.AppCache.namespace[String, Built]("warehouse", release = b => {
+    b.persisted.foreach(_.unpersist(blocking = false))
+    org.apache.spark.sql.graft.ReuseWarehouseBroadcasts.release(b.wh.fact.sparkSession, b.leafRdds)
+  })
+
+  /** Whether `rddId` is the RDD under a leaf of one of this
+    * application's built warehouses. */
+  def isLeaf(spark: SparkSession, rddId: Int): Boolean =
+    cache.values(spark).exists(_.leafRdds(rddId))
 
   def apply(spark: SparkSession, dir: String): Warehouse = {
     // single-flight: N warm-up workers hitting a cold memo must not each
     // run the whole ETL build
-    val wh = cache(spark, dir)(build(spark, dir))._1
+    val wh = cache(spark, dir)(build(spark, dir)).wh
     // The memo is APP-scoped but a DataFrame is bound to the session that
     // analyzed it: hand a sibling session (bench warm-up workers) frames
     // re-rooted onto ITS session, or temp views / SQL-function
@@ -65,7 +76,7 @@ object Warehouse {
       rb(wh.dimCustomer), rb(wh.dimDate), rb(wh.fact))
   }
 
-  private def build(spark: SparkSession, dir: String): (Warehouse, Seq[DataFrame]) = {
+  private def build(spark: SparkSession, dir: String): Built = {
     // persist, materialize, and hand on the leaf over the cached rows
     val persisted = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
     def stage(df: DataFrame): DataFrame = {
@@ -115,6 +126,9 @@ object Warehouse {
     val dimD = Await.result(fD, Duration.Inf)
     val fact = stage(Transform.factSales(cleaned, dimP, dimC, dimD))
     import scala.jdk.CollectionConverters._
-    (Warehouse(staging, cleaned, dimP, dimC, dimD, fact), persisted.asScala.toSeq)
+    val stages = persisted.asScala.toSeq
+    // each leaf scans its stage's `toRdd` (one RDD per query execution)
+    Built(Warehouse(staging, cleaned, dimP, dimC, dimD, fact), stages,
+      stages.map(_.queryExecution.toRdd.id).toSet)
   }
 }

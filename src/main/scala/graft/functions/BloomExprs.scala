@@ -28,22 +28,22 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * join, no shuffle, and no per-row driver involvement. */
 object BloomExprs {
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      exprs => {
-        require(exprs.length == 3,
-          s"bloom_agg expects (hash, est_items, num_bits), got ${exprs.length} args")
-        new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => {
-        require(exprs.length == 2,
-          s"bloom_might_contain expects (bloom, hash), got ${exprs.length} args")
-        BloomFilterMightContain(exprs(0), exprs(1))
-      },
-      "built-in")
-  }
+  /** `bloom_agg` and `bloom_might_contain`, injected into every session
+    * by [[graft.GraftExtensions]]. */
+  val functions: Seq[graft.GraftExtensions.Function] = Seq(
+    graft.GraftExtensions.function[BloomFilterAggregate]("bloom_agg") { exprs =>
+      require(exprs.length == 3,
+        s"bloom_agg expects (hash, est_items, num_bits), got ${exprs.length} args")
+      new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
+    },
+    graft.GraftExtensions.function[BloomFilterMightContain]("bloom_might_contain") { exprs =>
+      require(exprs.length == 2,
+        s"bloom_might_contain expects (bloom, hash), got ${exprs.length} args")
+      BloomFilterMightContain(exprs(0), exprs(1))
+    })
+
+  /** Registers both in a session built without the extension; a no-op
+    * where they are already registered. */
+  def register(spark: SparkSession): Unit =
+    graft.GraftExtensions.registerAbsent(spark, functions)
 }

@@ -60,13 +60,17 @@ case class Md5Prefix60(child: Expression) extends UnaryExpression {
 }
 
 object HashExprs {
-  /** Registers `md5_prefix60` in the session function registry (same
-    * pattern as [[VectorExprs.register]]). Idempotent. */
+  /** `md5_prefix60`, injected into every session by
+    * [[graft.GraftExtensions]]. */
+  val functions: Seq[graft.GraftExtensions.Function] = Seq(
+    graft.GraftExtensions.function[Md5Prefix60]("md5_prefix60") { exprs =>
+      require(exprs.length == 1,
+        s"md5_prefix60 expects exactly 1 argument, got ${exprs.length}")
+      Md5Prefix60(exprs.head)
+    })
+
+  /** Registers `md5_prefix60` in a session built without the extension;
+    * a no-op where it is already registered. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_prefix60", exprs => {
-        require(exprs.length == 1,
-          s"md5_prefix60 expects exactly 1 argument, got ${exprs.length}")
-        Md5Prefix60(exprs.head)
-      }, "built-in")
+    graft.GraftExtensions.registerAbsent(spark, functions)
 }

@@ -120,25 +120,23 @@ case class TopKAgg(
 }
 
 object TopKAggExprs {
-  /** Registers `topk_agg(value, k)` with an arity-checked builder. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_agg",
-      exprs => {
-        require(exprs.length == 2, s"topk_agg expects 2 arguments, got ${exprs.length}")
-        TopKAgg(exprs.head, exprs(1))
-      },
-      "built-in")
+  /** `topk_agg(value, k)` and `mink_agg(hash, k)` (k smallest LONGs — the
+    * KMV state), with arity-checked builders, injected into every session
+    * by [[graft.GraftExtensions]]. */
+  val functions: Seq[graft.GraftExtensions.Function] = Seq(
+    graft.GraftExtensions.function[TopKAgg]("topk_agg") { exprs =>
+      require(exprs.length == 2, s"topk_agg expects 2 arguments, got ${exprs.length}")
+      TopKAgg(exprs.head, exprs(1))
+    },
+    graft.GraftExtensions.function[MinKAgg]("mink_agg") { exprs =>
+      require(exprs.length == 2, s"mink_agg expects 2 arguments, got ${exprs.length}")
+      MinKAgg(exprs.head, exprs(1))
+    })
 
-  /** Registers `mink_agg(hash, k)` (k smallest LONGs — the KMV state). */
-  def registerMinK(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mink_agg",
-      exprs => {
-        require(exprs.length == 2, s"mink_agg expects 2 arguments, got ${exprs.length}")
-        MinKAgg(exprs.head, exprs(1))
-      },
-      "built-in")
+  /** Registers both in a session built without the extension; a no-op
+    * where they are already registered. */
+  def register(spark: SparkSession): Unit =
+    graft.GraftExtensions.registerAbsent(spark, functions)
 }
 
 import org.apache.spark.sql.types.LongType

@@ -171,16 +171,16 @@ case class VecArgmin(vec: Expression, centroids: Expression,
 }
 
 object VectorExprs {
-  /** Registers `vec_dot` in the session function registry (the
-    * lightweight runtime face of a `SparkSessionExtensions.injectFunction`
-    * — same builder, registered on first use instead of at session
-    * construction so driver-owned sessions pick it up too). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_argmin",
-      exprs => VecArgmin(exprs.head, exprs(1), exprs(2), exprs(3)),
-      "built-in")
-  }
+  /** `vec_dot` and `vec_argmin`, injected into every session by
+    * [[graft.GraftExtensions]]. */
+  val functions: Seq[graft.GraftExtensions.Function] = Seq(
+    graft.GraftExtensions.function[VecDot]("vec_dot")(exprs =>
+      VecDot(exprs.head, exprs(1))),
+    graft.GraftExtensions.function[VecArgmin]("vec_argmin")(exprs =>
+      VecArgmin(exprs.head, exprs(1), exprs(2), exprs(3))))
+
+  /** Registers both in a session built without the extension; a no-op
+    * where they are already registered. */
+  def register(spark: SparkSession): Unit =
+    graft.GraftExtensions.registerAbsent(spark, functions)
 }

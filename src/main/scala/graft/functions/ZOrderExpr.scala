@@ -90,13 +90,16 @@ object ZOrder2 {
 }
 
 object ZOrderExprs {
-  /** Registers `z_order2(x, y)` with an arity-checked builder. Idempotent. */
+  /** `z_order2(x, y)` with an arity-checked builder, injected into every
+    * session by [[graft.GraftExtensions]]. */
+  val functions: Seq[graft.GraftExtensions.Function] = Seq(
+    graft.GraftExtensions.function[ZOrder2]("z_order2") { exprs =>
+      require(exprs.length == 2, s"z_order2 expects 2 arguments, got ${exprs.length}")
+      ZOrder2(exprs.head, exprs(1))
+    })
+
+  /** Registers it in a session built without the extension; a no-op
+    * where it is already registered. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "z_order2",
-      exprs => {
-        require(exprs.length == 2, s"z_order2 expects 2 arguments, got ${exprs.length}")
-        ZOrder2(exprs.head, exprs(1))
-      },
-      "built-in")
+    graft.GraftExtensions.registerAbsent(spark, functions)
 }

@@ -151,7 +151,7 @@ object Events {
     * the accuracy contract (spec asserts relative error, and at sf the
     * estimator is genuinely engaged: daily actives exceed k). */
   def dailyDistinctKmv(spark: SparkSession, dir: String, k: Int = kmvK): DataFrame = {
-    graft.functions.TopKAggExprs.registerMinK(spark)
+    graft.functions.TopKAggExprs.register(spark)
     val ev = Tables.events(spark, dir)
     ev.select(to_date(col("ts")).as("day"), col("user_id"),
         Dedup.fastHash60(spark,

@@ -92,11 +92,6 @@ class DefaultSource extends StreamSourceProvider with StreamSinkProvider
     // exist — without it, SQL INSERT INTO would write bare parquet into
     // the table root that no manifest version lists (silent data loss)
     org.apache.spark.sql.graft.ManifestInsertStrategy.install(spark)
-    // ...and the metadata-only COUNT(*) rewrite with it: an unfiltered
-    // count over this relation answers from the stats sidecar when the
-    // version's coverage proves it exact (CountShim)
-    org.apache.spark.sql.graft.ManifestCountRule.install(spark)
-    org.apache.spark.sql.graft.ManifestV1StatsRule.install(spark)
     val (base, atSuffix) = splitVersionSuffix(basePath(parameters))
     val v = (parameters.get("versionAsOf").map(_.toInt).orElse(atSuffix),
         parameters.get("timestampAsOf")) match {

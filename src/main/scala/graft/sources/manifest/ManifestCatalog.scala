@@ -54,11 +54,6 @@ class ManifestCatalog extends TableCatalog with SupportsNamespaces
     catalogName = name
     warehouse = Option(options.get("warehouse")).getOrElse(
       s"${Dfs.scratchBase}/graft_catalog_$name")
-    // catalogs instantiate lazily on first reference — that reference
-    // is also the right moment to arm the metadata-only aggregate
-    // rewrite for the DSv2 scans this catalog will produce
-    org.apache.spark.sql.graft.ManifestCountRule.install(spark)
-    org.apache.spark.sql.graft.ManifestV1StatsRule.install(spark)
   }
 
   override def name(): String = catalogName

@@ -52,10 +52,10 @@ import org.apache.spark.sql.types.LongType
   * contract). A table never ANALYZEd, or an aggregate over a
   * non-indexed column, simply keeps its normal scan.
   *
-  * Installed into `spark.experimental.extraOptimizations` alongside
-  * [[ManifestInsertStrategy]] the first time a manifest relation is
-  * created; the batch runs after Catalyst's own optimization, exactly
-  * where an eligible plan has settled into
+  * Installed into `spark.experimental.extraOptimizations` by
+  * [[graft.GraftExtensions]] before a session's first query; the batch
+  * runs after Catalyst's own optimization, exactly where an eligible
+  * plan has settled into
   * `Aggregate(Nil, aggs, [Project/Filter,] LogicalRelation)`. */
 object ManifestCountRule extends Rule[LogicalPlan] {
 
@@ -222,10 +222,9 @@ object ManifestCountRule extends Rule[LogicalPlan] {
         }
     }
 
-  /** Idempotent runtime installation — `extraOptimizations` is the
-    * optimizer-side twin of `experimental.extraStrategies`, the same
-    * registration `SparkSessionExtensions.injectOptimizerRule` gives a
-    * session built with extensions. */
+  /** Idempotent installation into the session's user-provided batch,
+    * which runs after the DSv2 scan push-down (an injected optimizer
+    * rule would run before it). */
   def install(spark: SparkSession): Unit = {
     val exp = spark.experimental
     if (!exp.extraOptimizations.contains(ManifestCountRule))

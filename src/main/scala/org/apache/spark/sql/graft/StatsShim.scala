@@ -26,8 +26,8 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, Data
   * the scan's own `estimateStatistics()` through the standard
   * `transformV2Stats` conversion — exactly what
   * `DataSourceV2ScanRelation` would have done without the wrapper.
-  * Installed into `extraOptimizations` next to [[ManifestCountRule]],
-  * so the estimates are in place when `JoinSelection` sizes the join
+  * Installed into `extraOptimizations` next to [[ManifestCountRule]]
+  * (by [[graft.GraftExtensions]]), so the estimates are in place when `JoinSelection` sizes the join
   * sides. Marker-trait-guarded: no other connector's V1 scans are
   * touched. */
 class ReportingV1ScanRelation(

@@ -23,14 +23,35 @@ class AppCacheSpec extends AnyFunSuite {
   private def persistedIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** `q`'s rows, and the ids of the broadcasts its executed plan reused
+    * from earlier queries. */
+  private def reusing(s: org.apache.spark.sql.SparkSession, q: String): (Seq[org.apache.spark.sql.Row], Set[Long]) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    val df = SparkEntry.queries(q)(s, TestSpark.sf)
+    val rows = df.collect().toSeq
+    def ids(p: SparkPlan): Seq[Long] = p.flatMap {
+      case a: AdaptiveSparkPlanExec => ids(a.executedPlan)
+      case st: QueryStageExec => ids(st.plan)
+      case ReusedExchangeExec(_, b: BroadcastExchangeExec) => Seq(b.relationFuture.get().id)
+      case _ => Nil
+    }
+    (rows, ids(df.queryExecution.executedPlan).toSet)
+  }
+
   test("evictAll empties every namespace and releases every persisted frame") {
     // start from a quiescent, empty cache: earlier suites' frames are
     // collected, and their entries are not this test's to count
     AppCache.evictAll(spark)
     val before = persistedIds
     Seq("similarity_topk", "ann_topk", "ivf_topk", "dup_clusters", "cleaned",
-      "dim_product", "pq_codes", "skipping_scan")
+      "dim_product", "pq_codes", "skipping_scan", "q_country_sales")
       .foreach(q => SparkEntry.queries(q)(spark, TestSpark.sf).collect())
+    // a warm BI query: its dimension broadcast is held on the driver
+    val broadcasts = reusing(spark, "q_country_sales")._2
+    assert(broadcasts.nonEmpty, "the warm query reused no dimension broadcast")
+    assert(broadcasts.subsetOf(org.apache.spark.graft.BlockShim.broadcastIds(spark.sparkContext)))
     // one manifest read of a table carrying DV sidecars, plus the change
     // feed across the delete (the per-sidecar DV entries)
     val wh = java.nio.file.Files.createTempDirectory("graft_appcache_wh").toString
@@ -49,8 +70,9 @@ class AppCacheSpec extends AnyFunSuite {
     assert(ext.Manifests.changesBetween(spark, base, 0, v).count() === 20)
 
     val populated = AppCache.sizes(spark).filter(_._2 > 0)
-    Seq("warehouse", "memo", "keys.ranked", "similarity.ivf_centroids",
-      "skipping.fixtures", "manifests.files", "manifests.dv_sidecars")
+    Seq("warehouse", "warehouse.broadcasts", "tables.schemas", "memo", "keys.ranked",
+      "similarity.ivf_centroids", "skipping.fixtures", "manifests.files",
+      "manifests.dv_sidecars")
       .foreach(n => assert(populated.contains(n), s"$n was never populated"))
     assert(persistedIds.diff(before).nonEmpty)
 
@@ -59,6 +81,44 @@ class AppCacheSpec extends AnyFunSuite {
     assert(left.isEmpty, s"entries survive evictAll: $left")
     assert(persistedIds === before,
       s"persisted RDDs survive evictAll: ${persistedIds.diff(before)}")
+    val blocks = org.apache.spark.graft.BlockShim.broadcastIds(spark.sparkContext)
+    assert(broadcasts.intersect(blocks).isEmpty,
+      s"broadcast blocks survive evictAll: ${broadcasts.intersect(blocks)}")
+  }
+
+  test("a rebuilt warehouse never reuses a released broadcast, and answers as a session without reuse does") {
+    val q = "q_quarter_pivot"
+    reusing(spark, q)
+    val old = reusing(spark, q)._2
+    assert(old.nonEmpty)
+    AppCache.evictAll(spark)
+    val (rebuiltRows, firstReuse) = reusing(spark, q)
+    assert(firstReuse.isEmpty, s"the rebuilt warehouse's first query reused $firstReuse")
+    val (warmRows, reused) = reusing(spark, q)
+    assert(reused.nonEmpty && reused.intersect(old).isEmpty)
+    val plain = spark.newSession()
+    plain.conf.set("spark.sql.exchange.reuse", "false")
+    plain.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val (expected, none) = reusing(plain, q)
+    assert(none.isEmpty)
+    assert(rebuiltRows === expected && warmRows === expected)
+  }
+
+  test("a dimension broadcast whose build fails leaves no entry and is rebuilt next time") {
+    import org.apache.spark.sql.functions.{broadcast, col, udf}
+    val wh = etl.Warehouse(spark, TestSpark.sf)
+    val boom = udf((k: Long) => { if (k >= 0) throw new IllegalStateException("boom"); k })
+    def failing() = wh.fact
+      .join(broadcast(wh.dimCustomer.select(boom(col("customer_key")).as("customer_key"),
+        col("country"))), Seq("customer_key"))
+      .groupBy("country").count().collect()
+    def entries = AppCache.sizes(spark)("warehouse.broadcasts")
+    val before = entries
+    (1 to 2).foreach { _ =>
+      val (_, jobs) = JobLog.of(spark)(intercept[Exception](failing()))
+      assert(jobs.exists(_.isBroadcast), "the failed build was not attempted again")
+      assert(entries === before, "a failed broadcast build left an entry")
+    }
   }
 
   test("DV reads stay exact while another thread evicts every namespace") {
