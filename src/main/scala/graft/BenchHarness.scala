@@ -4,13 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** The one scaffold every decade-bench main runs on: the session
   * recipe (`local[SPARK_GRAFT_CPUS]`, matching shuffle partitions,
-  * UTC, no UI, a generated-code cache that holds the working set, the
-  * engine's session extensions — [[GraftExtensions]]), the
-  * temp work root, the run-scoped manifest catalog and the wall-clock
-  * timer. Every session the project builds — the test suite's, Verify's,
-  * Bench's, the pipeline mains' — comes from this recipe, so a harness
-  * change (a new required conf, a timer fix) lands HERE once, and no
-  * bench can quietly measure a differently-configured session. */
+  * UTC, no UI, a generated-code cache that holds the working set and is
+  * keyed by code alone, the engine's session extensions —
+  * [[GraftExtensions]]), the temp work root, the run-scoped manifest
+  * catalog and the wall-clock timer. Every session the project builds —
+  * the test suite's, Verify's, Bench's, the pipeline mains', the dev
+  * probes' — comes from this recipe, so a harness change (a new
+  * required conf, a timer fix) lands HERE once, and no bench can
+  * quietly measure a differently-configured session. */
 object BenchHarness {
 
   /** Spark's generated-class cache, `spark.sql.codegen.cache.maxEntries`
@@ -21,6 +22,14 @@ object BenchHarness {
     * recompiled about 165 classes. A static conf: it takes effect only
     * when the session is built. */
   val CodegenCacheEntries = 4096
+
+  /** Generated classes named without their whole-stage-codegen stage id
+    * (`spark.sql.codegen.useIdInClassName`, on by default), so the class
+    * cache above is keyed by the code alone. A warm BI query that reuses
+    * a dimension broadcast its first execution built has one stage
+    * fewer, and its stages are numbered one lower; with the id in the
+    * name every class of those stages missed the cache once more. */
+  val CodegenIdInClassName = false
 
   /** `local[cpus]` session; `defaultCpus` only seeds the env fallback
     * (the streaming relay runs on 4 threads by default, the batch
@@ -37,6 +46,7 @@ object BenchHarness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", CodegenIdInClassName.toString)
       .withExtensions(new GraftExtensions)
     conf.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()

@@ -1,18 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev micro-benchmark: isolate fixed per-exchange / per-task costs
   * (opt guide §1 — measure before blaming the plan). */
 object MicroBench {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    for (kv <- sys.env.get("SPARK_GRAFT_CONF"); pair <- kv.split(";");
-         Array(k, v) <- Option(pair.split("=", 2)))
-      b.config(k, v)
-    val spark = b.getOrCreate()
+    val conf = for (kv <- sys.env.get("SPARK_GRAFT_CONF").toSeq; pair <- kv.split(";");
+         Array(k, v) <- Option(pair.split("=", 2))) yield k -> v
+    val spark = BenchHarness.onCores(cpus, conf: _*)
     spark.sparkContext.setLogLevel("ERROR")
     def t(name: String, reps: Int = 5)(body: => Unit): Unit = {
       body // warm

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev measurement main (opt guide §1): for each named query, prints
   * compose time, first-run time (fills memos/fixtures), and three
@@ -11,10 +10,7 @@ object QProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val holdSec = sys.env.get("SPARK_GRAFT_UIHOLD").map(_.toInt)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", holdSec.isDefined.toString).getOrCreate()
+    val spark = BenchHarness.onCores(cpus, "spark.ui.enabled" -> holdSec.isDefined.toString)
     spark.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.get("SPARK_GRAFT_PLANDIR")

@@ -47,13 +47,10 @@ object Warehouse {
     * and the leaves' RDD ids. */
   private final case class Built(wh: Warehouse, persisted: Seq[DataFrame], leafRdds: Set[Int])
 
-  /** Keyed by sf-dir. Release unpersists the stages and destroys the
-    * dimension broadcasts built over the leaves (the [[graft.AppCache]]
-    * evict precondition applies). */
-  private val cache = graft.AppCache.namespace[String, Built]("warehouse", release = b => {
-    b.persisted.foreach(_.unpersist(blocking = false))
-    org.apache.spark.sql.graft.ReuseWarehouseBroadcasts.release(b.wh.fact.sparkSession, b.leafRdds)
-  })
+  /** Keyed by sf-dir: release unpersists the stages (the
+    * [[graft.AppCache]] evict precondition applies). */
+  private val cache = graft.AppCache.namespace[String, Built](
+    "warehouse", release = _.persisted.foreach(_.unpersist(blocking = false)))
 
   /** Whether `rddId` is the RDD under a leaf of one of this
     * application's built warehouses. */

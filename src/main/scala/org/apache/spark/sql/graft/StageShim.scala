@@ -1,12 +1,15 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.PlanExpression
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BoundReference, Cast, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.{IdentityBroadcastMode, RangePartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{CoalesceExec, RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{BroadcastQueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.{CoalesceExec, FilterExec, InputAdapter, ProjectExec, RDDScanExec, SortExec, SparkPlan, UnionExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, BroadcastQueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, BroadcastExchangeLike, ENSURE_REQUIREMENTS, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Dimension broadcasts built once per warehouse, not once per query.
@@ -16,19 +19,22 @@ import org.apache.spark.sql.internal.SQLConf
   * the same few thousand dimension rows and rebuilt the same hashed
   * relation, one Spark job each (11 of a warm round's 57 jobs). This
   * query-stage-preparation rule keeps the first materialized broadcast
-  * whose build side reads only [[graft.etl.Warehouse]] leaves, keyed by
-  * the exchange's canonical plan, and turns every later exchange with
-  * that plan into a `ReusedExchangeExec` over it.
+  * of a whole [[graft.etl.Warehouse]] leaf, keyed by the exchange's
+  * canonical plan, and turns every later exchange with that plan into a
+  * `ReusedExchangeExec` over it.
   *
-  * The gate: every leaf of the build side is a `Warehouse` leaf (an RDD
-  * scan whose RDD id the warehouse registered — never any other RDD
-  * scan, whose rows may change between queries), and every expression
-  * is deterministic and subquery-free. Those inputs are immutable until
-  * the warehouse is released, and the release destroys the broadcasts
-  * over them ([[release]]); a rebuilt warehouse has new RDD ids, so new
-  * keys. An exchange is recorded only once its stage has materialized,
-  * which AQE's re-planning after every stage shows this rule; a failed
-  * build never materializes and leaves nothing behind. */
+  * The gate: the build side is one `Warehouse` leaf (an RDD scan whose
+  * RDD id the warehouse registered — never any other RDD scan, whose
+  * rows may change between queries) under projections that only pick
+  * or rename its columns, and the broadcast keys are columns. No filter
+  * and no computed value passes, so the held broadcasts are bounded by
+  * the leaves' schemas, never by the literals of a parameterized query.
+  * Those inputs are immutable until the warehouse is released; a
+  * rebuilt warehouse has new RDD ids, so new keys, and `evictAll`
+  * destroys what this namespace holds. An exchange is recorded only
+  * once its stage has materialized, which AQE's re-planning after every
+  * stage shows this rule; a failed build never materializes and leaves
+  * nothing behind. */
 final case class ReuseWarehouseBroadcasts(spark: SparkSession) extends Rule[SparkPlan] {
   import ReuseWarehouseBroadcasts._
 
@@ -36,13 +42,14 @@ final case class ReuseWarehouseBroadcasts(spark: SparkSession) extends Rule[Spar
     if (!conf.exchangeReuseEnabled) plan
     else {
       plan.foreach {
-        case s: BroadcastQueryStageExec
-            if s.isMaterialized && readsOnlyWarehouse(spark, s.broadcast.child) =>
-          built(spark, s.canonicalized)(s.broadcast)
+        case s: BroadcastQueryStageExec if s.isMaterialized => s.broadcast match {
+          case b: BroadcastExchangeExec if wholeLeaf(spark, b) => built(spark, s.canonicalized)(b)
+          case _ =>
+        }
         case _ =>
       }
       plan.transformUp {
-        case e: BroadcastExchangeExec if readsOnlyWarehouse(spark, e.child) =>
+        case e: BroadcastExchangeExec if wholeLeaf(spark, e) =>
           built.peek(spark, e.canonicalized).fold[SparkPlan](e)(ReusedExchangeExec(e.output, _))
       }
     }
@@ -56,21 +63,29 @@ object ReuseWarehouseBroadcasts {
   private val built = graft.AppCache.namespace[SparkPlan, BroadcastExchangeLike](
     "warehouse.broadcasts", release = _.relationFuture.get().destroy(true))
 
-  private def scannedRdds(p: SparkPlan): Seq[Int] =
-    p.collectLeaves().collect { case s: RDDScanExec => s.rdd.id }
-
-  private def readsOnlyWarehouse(spark: SparkSession, p: SparkPlan): Boolean = {
-    val leaves = p.collectLeaves()
-    leaves.forall {
-      case s: RDDScanExec => graft.etl.Warehouse.isLeaf(spark, s.rdd.id)
+  /** Whether `e` broadcasts one whole `Warehouse` leaf by its columns. */
+  private def wholeLeaf(spark: SparkSession, e: BroadcastExchangeExec): Boolean = {
+    def columns(x: Expression): Boolean = x match {
+      case _: Attribute | _: BoundReference => true
+      case Alias(c, _) => columns(c)
+      case c: Cast => columns(c.child)
       case _ => false
-    } && p.find(_.expressions.exists(e =>
-      !e.deterministic || e.exists(_.isInstanceOf[PlanExpression[_]]))).isEmpty
+    }
+    // a materialized stage's build side is already collapsed into codegen
+    def projected(p: SparkPlan): Boolean = p match {
+      case s: RDDScanExec => graft.etl.Warehouse.isLeaf(spark, s.rdd.id)
+      case ProjectExec(list, child) => list.forall(columns) && projected(child)
+      case w: WholeStageCodegenExec => projected(w.child)
+      case i: InputAdapter => projected(i.child)
+      case _ => false
+    }
+    val keyed = e.mode match {
+      case m: HashedRelationBroadcastMode => m.key.forall(columns)
+      case IdentityBroadcastMode => true
+      case _ => false
+    }
+    keyed && projected(e.child)
   }
-
-  /** Drop, and destroy, every broadcast built over any of `rdds`. */
-  def release(spark: SparkSession, rdds: Set[Int]): Unit =
-    built.evict(spark, k => scannedRdds(k).exists(rdds))
 }
 
 /** A presentation sort over a tiny input, in one task without a range
@@ -87,10 +102,11 @@ object ReuseWarehouseBroadcasts {
   * the sort's ordered distribution). That size is
   * `coalescePartitions.minPartitionSize` under the default
   * `parallelismFirst`, else the advisory partition size; with coalescing
-  * off the rule never fires. A user `repartitionByRange` is not an
-  * `ENSURE_REQUIREMENTS` shuffle and is left alone, and so is an input
-  * that has not run yet: AQE re-plans after each stage, and the rule
-  * looks again then. */
+  * off the rule never fires. Only operators that cannot add rows may
+  * sit between the shuffle and those stages. A user
+  * `repartitionByRange` is not an `ENSURE_REQUIREMENTS` shuffle and is
+  * left alone, and so is an input that has not run yet: AQE re-plans
+  * after each stage, and the rule looks again then. */
 object OneTaskPresentationSort extends Rule[SparkPlan] {
 
   override def apply(plan: SparkPlan): SparkPlan =
@@ -101,16 +117,19 @@ object OneTaskPresentationSort extends Rule[SparkPlan] {
         CoalesceExec(1, child)
     }
 
-  /** The summed size of `p`'s inputs when all are materialized stages. */
-  private def inputBytes(p: SparkPlan): Option[Long] = {
-    val sizes = p.collectLeaves().map {
-      case s: ShuffleQueryStageExec if s.isMaterialized =>
-        Some(s.mapStats.fold(0L)(_.bytesByPartitionId.sum))
-      case b: BroadcastQueryStageExec if b.isMaterialized =>
-        Some(b.getRuntimeStatistics.sizeInBytes.toLong)
-      case _ => None
-    }
-    if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None
+  /** The summed map output of the stages under `p`, when every one is
+    * materialized and no operator between them and `p` can add rows: so
+    * the shuffle would receive no more rows than they hold, and AQE's
+    * coalescing, which reads their size, sees the same bytes. A join, an
+    * `Expand` or a `Generate` on the way declines. */
+  private def inputBytes(p: SparkPlan): Option[Long] = p match {
+    case s: ShuffleQueryStageExec =>
+      if (s.isMaterialized) Some(s.mapStats.fold(0L)(_.bytesByPartitionId.sum)) else None
+    case _: BaseAggregateExec | _: ProjectExec | _: FilterExec | _: SortExec |
+        _: WindowExec | _: WindowGroupLimitExec | _: AQEShuffleReadExec | _: UnionExec =>
+      val sizes = p.children.map(inputBytes)
+      if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None
+    case _ => None
   }
 
   private def oneTaskBytes: Long =

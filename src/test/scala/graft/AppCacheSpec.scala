@@ -105,20 +105,26 @@ class AppCacheSpec extends AnyFunSuite {
   }
 
   test("a dimension broadcast whose build fails leaves no entry and is rebuilt next time") {
-    import org.apache.spark.sql.functions.{broadcast, col, udf}
-    val wh = etl.Warehouse(spark, TestSpark.sf)
-    val boom = udf((k: Long) => { if (k >= 0) throw new IllegalStateException("boom"); k })
-    def failing() = wh.fact
-      .join(broadcast(wh.dimCustomer.select(boom(col("customer_key")).as("customer_key"),
-        col("country"))), Seq("customer_key"))
-      .groupBy("country").count().collect()
+    import org.apache.spark.sql.functions.broadcast
+    // a shape no other query broadcasts, built in a session whose
+    // broadcast size limit fails every build after its collect job
+    def byId(s: org.apache.spark.sql.SparkSession) = {
+      val wh = etl.Warehouse(s, TestSpark.sf)
+      wh.fact.join(broadcast(wh.dimCustomer.select("customer_key", "customer_id")), Seq("customer_key"))
+        .groupBy("customer_id").count().collect()
+    }
+    val capped = spark.newSession()
+    capped.conf.set("spark.sql.maxBroadcastTableSize", "1b")
     def entries = AppCache.sizes(spark)("warehouse.broadcasts")
     val before = entries
     (1 to 2).foreach { _ =>
-      val (_, jobs) = JobLog.of(spark)(intercept[Exception](failing()))
+      val (_, jobs) = JobLog.of(spark)(intercept[Exception](byId(capped)))
       assert(jobs.exists(_.isBroadcast), "the failed build was not attempted again")
       assert(entries === before, "a failed broadcast build left an entry")
     }
+    val (_, jobs) = JobLog.of(spark)(byId(spark))
+    assert(jobs.exists(_.isBroadcast) && entries === before + 1,
+      "a build that succeeds after a failed one was not held")
   }
 
   test("DV reads stay exact while another thread evicts every namespace") {

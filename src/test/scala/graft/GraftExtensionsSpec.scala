@@ -84,6 +84,22 @@ class GraftExtensionsSpec extends AnyFunSuite {
       s"a broadcast over a plain RDD scan was reused:\n${onRdd.queryExecution.executedPlan}")
   }
 
+  test("broadcast reuse holds whole leaves only: a dimension filtered by a literal is built by every query and never held") {
+    val wh = Warehouse(spark, sf)
+    val countries = wh.dimCustomer.select("country").distinct().collect().map(_.getString(0)).take(3)
+    def held = AppCache.sizes(spark)("warehouse.broadcasts")
+    val before = held
+    countries.foreach { c =>
+      val dim = wh.dimCustomer.filter(col("country") === c).select("customer_key", "country")
+      def byCountry() = wh.fact.join(broadcast(dim), Seq("customer_key")).groupBy("country").count()
+      val expected = byCountry().collect().toSet
+      val (rows, jobs) = JobLog.of(spark)(byCountry().collect().toSet)
+      assert(rows === expected)
+      assert(jobs.count(_.isBroadcast) === 1, s"the dimension filtered on '$c' was not built again")
+    }
+    assert(held === before, "a filtered dimension's broadcast was held")
+  }
+
   test("sort rule: one task for a tiny input; the range shuffle stays over the threshold, before its input runs, and for repartitionByRange") {
     val tiny = SparkEntry.queries("q_monthly_sales")(spark, sf)
     val initial = tiny.queryExecution.executedPlan match {
@@ -109,6 +125,20 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(user.collect().length > 0)
     assert(rangeShuffles(user) === 1, "a user repartitionByRange lost its range shuffle")
     assert(user.rdd.getNumPartitions === 3)
+  }
+
+  test("sort rule: the range shuffle stays when a join or an explode between it and its tiny inputs can add rows") {
+    // 40 aggregated rows on one key each side: the join emits 40 x 40
+    import spark.implicits._
+    def tiny(v: String) =
+      (0L until 40L).map(i => (i / 100, i)).toDF("k", v).groupBy("k", v).count().drop("count")
+    val joined = tiny("v").join(tiny("w"), "k").orderBy("v", "w")
+    val exploded = tiny("v").select(col("v"), explode(sequence(lit(1), lit(40))).as("e")).orderBy("v", "e")
+    Seq("join" -> joined, "explode" -> exploded).foreach { case (what, df) =>
+      assert(df.collect().length === 1600)
+      assert(rangeShuffles(df) === 1 && !nodes(df).exists(_.isInstanceOf[CoalesceExec]),
+        s"a sort over a $what became one task:\n${nodes(df).mkString("\n")}")
+    }
   }
 
   test("a fresh session plans a manifest COUNT(*) the same before and after the catalog is first touched") {

@@ -53,11 +53,6 @@ class WarehouseLeafSpec extends AnyFunSuite {
 
   test("a second round of the 12 BI queries compiles no class") {
     def round(): Unit = biQueries.foreach(n => SparkEntry.queries(n)(spark, sf).collect())
-    // the second execution of a query reuses the dimension broadcasts the
-    // first one built, so its plan has no broadcast stage and its
-    // whole-stage-codegen stages are numbered (and their classes named)
-    // one lower: it compiles once more, and from then on nothing
-    round()
     round()
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     round()
