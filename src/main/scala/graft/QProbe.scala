@@ -2,10 +2,11 @@ package graft
 
 /** Dev measurement main (opt guide §1): for each named query, prints
   * compose time, first-run time (fills memos/fixtures), and three
-  * steady-state runs — each run a fresh composition + count(), exactly
-  * the bench's timed methodology — then dumps the WARM-state formatted
-  * plan (memos materialized → InMemoryTableScan boundaries, the shape
-  * the timed pass actually executes) to SPARK_GRAFT_PLANDIR when set. */
+  * steady-state runs — each run a fresh composition + collect(), the
+  * action the bench and Verify run (a count() would plan a different,
+  * column-pruned query) — then runs one warm composition and dumps its
+  * FINAL adaptive plan (as executed: materialized stages, reused
+  * exchanges, coalesced sorts) to SPARK_GRAFT_PLANDIR when set. */
 object QProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -19,11 +20,11 @@ object QProbe {
       val t0 = System.nanoTime()
       val df0 = SparkEntry.queries(name)(spark, d)
       val t1 = System.nanoTime()
-      df0.count()
+      df0.collect()
       val t2 = System.nanoTime()
       val times = (1 to 3).map { _ =>
         val s = System.nanoTime()
-        SparkEntry.queries(name)(spark, d).count()
+        SparkEntry.queries(name)(spark, d).collect()
         (System.nanoTime() - s) / 1e9
       }
       // stage attribution for one steady run (opt guide §1/§7): per-stage
@@ -63,7 +64,7 @@ object QProbe {
           }
         }
         spark.sparkContext.addSparkListener(listener)
-        SparkEntry.queries(name)(spark, d).count()
+        SparkEntry.queries(name)(spark, d).collect()
         Thread.sleep(500) // let the listener bus drain
         spark.sparkContext.removeSparkListener(listener)
         stages.sortBy(-_._2).take(12).foreach { case (id, wall, run, in, sr, sw) =>
@@ -83,17 +84,19 @@ object QProbe {
         qe.assertAnalyzed(); val s2 = System.nanoTime()
         qe.optimizedPlan; val s3 = System.nanoTime()
         qe.executedPlan; val s4 = System.nanoTime()
-        df.count(); val s5 = System.nanoTime()
+        df.collect(); val s5 = System.nanoTime()
         val ph = qe.tracker.phases.map { case (k, v) =>
           f"$k=${(v.endTimeMs - v.startTimeMs) / 1e3}%.2f" }.mkString(" ")
         println(f"[qprobe]   phases compose ${(s1 - s0) / 1e9}%5.2f analyze ${(s2 - s1) / 1e9}%5.2f " +
           f"optimize ${(s3 - s2) / 1e9}%5.2f plan ${(s4 - s3) / 1e9}%5.2f exec ${(s5 - s4) / 1e9}%5.2f  [$ph]")
       }
+      // one executed warm run: its final adaptive plan and metrics are
+      // what the timed pass ran
       val warm = SparkEntry.queries(name)(spark, d)
-      // per-operator metrics of one executed run (the SQL-tab view):
-      // operator class + its slowest time-ish metrics, largest first
+      warm.collect()
+      // per-operator metrics of that run (the SQL-tab view): operator
+      // class + its slowest time-ish metrics, largest first
       if (sys.env.contains("SPARK_GRAFT_OPMETRICS")) {
-        warm.count()
         def walk(p: org.apache.spark.sql.execution.SparkPlan)
             : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
           case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

@@ -38,7 +38,8 @@ import org.apache.spark.sql.types.StructType
   * every file, and files the stats table does not cover are always
   * planned. All-null zones (null min/max) fail range/equality conjuncts
   * naturally — same null semantics as [[Skipping.candidateFiles]]. */
-final class ManifestFileIndex(spark: SparkSession, base: String, version: Int)
+final class ManifestFileIndex(spark: SparkSession, base: String, version: Int,
+    known: Option[VersionMeta] = None)
     extends FileIndex {
 
   private val files: Seq[String] =
@@ -53,20 +54,21 @@ final class ManifestFileIndex(spark: SparkSession, base: String, version: Int)
     * `PartitioningAwareFileIndex`. */
   private[graft] def fileStatuses: Seq[FileStatus] = files.map(statuses)
 
+  // `known`: the version's record, when the caller already read it
   private val stats: Option[(Seq[String], Seq[String])] =
-    Manifests.statsOf(spark, base, version)
+    known.fold(Manifests.statsOf(spark, base, version))(_.stats)
 
   private val partMeta: Option[(Seq[String], Seq[String])] =
-    Manifests.partitionedBy(spark, base, version)
+    known.fold(Manifests.partitionedBy(spark, base, version))(_.partValues)
 
   /** Legacy spec groups after a partition evolution (oldest first) —
     * files written under an earlier spec prune through THEIR recorded
     * tuples; empty on never-evolved tables. */
   private val partLegacy: Seq[(Seq[String], Seq[String])] =
-    Manifests.partitionHistory(spark, base, version)
+    known.fold(Manifests.partitionHistory(spark, base, version))(_.partHistory)
 
   private val blooms: Option[(Seq[String], Seq[String])] =
-    Manifests.bloomOf(spark, base, version)
+    known.fold(Manifests.bloomOf(spark, base, version))(_.blooms)
 
   /** False when the version's tuples predate UTC time-transform
     * semantics ([[Manifests.partSemOf]]): TZ-sensitive fields then
@@ -74,7 +76,8 @@ final class ManifestFileIndex(spark: SparkSession, base: String, version: Int)
     * proof, because a session-TZ month tuple near a boundary can name
     * a different granule than the UTC lowering computes. */
   private lazy val tzTrusted: Boolean =
-    Manifests.partSemOf(spark, base, version) >= Manifests.PartSemCurrent
+    known.fold(Manifests.partSemOf(spark, base, version))(_.partSem) >=
+      Manifests.PartSemCurrent
 
   /** [[tzTrusted]] refined per spec group: a below-current version is
     * still fully trustworthy when NO field is TZ-sensitive (identity /
@@ -85,11 +88,11 @@ final class ManifestFileIndex(spark: SparkSession, base: String, version: Int)
 
   /** The table's EXACT row count from metadata alone, when provable:
     * the zone-stats sidecar records `n_rows` per file
-    * ([[Skipping.buildStats]]), and a batch relation carries no
-    * deletion vectors by contract (the provider refuses them), so when
-    * every manifest file is covered by a stats row the version's
-    * cardinality is a metadata-sized sum — no data file is opened, no
-    * job runs. `None` whenever the proof does not hold (no ANALYZE
+    * ([[Skipping.buildStats]]), so when every manifest file is covered
+    * by a stats row the version's RAW cardinality is a metadata-sized
+    * sum — no data file is opened, no job runs. A vectored version's
+    * live count subtracts its bitmap cardinalities
+    * ([[liveRowCountWhere]]). `None` whenever the proof does not hold (no ANALYZE
     * yet, or a file the stats miss): callers fall back to the real
     * scan, which stays exactly as correct.
     *

@@ -1878,15 +1878,15 @@ object Manifests {
     df.select(col("*"), col("_metadata.file_path").as("__file"),
       col("_metadata.row_index").as("__pos"))
 
-  /** Read `data` with deletion vectors `dvs` applied — file-pruned:
-    * only files a vector actually touches pay the filter; every other
-    * file streams through scan-only, exactly as if no delete had
-    * happened. The touched-file list and the membership probe both
-    * come from the version's [[dvIndex]] (cached per sidecar, read on
-    * the driver: no Spark job). Past the index budget, or with an
-    * unreadable sidecar footer, the distributed fallback runs: one
-    * collect of the distinct touched files, then a `(__file, __pos)`
-    * anti-join, always correct and never memory-bound. */
+  /** Read `data` with deletion vectors `dvs` applied: one file scan
+    * whose parquet reader drops the deleted positions
+    * ([[graft.sources.manifest.DvParquetFileFormat]] over [[dvIndex]]).
+    * `keepPos` adds each live row's `__file`/`__pos`. Live column
+    * renames (the era read aliases pre-rename files' physical names)
+    * and an index past its budget or over an unreadable footer take
+    * the distributed anti-join instead, always correct and never
+    * memory-bound: one collect of the distinct touched files, then a
+    * `(__file, __pos)` anti-join of only those files' rows. */
   private def liveRead(spark: SparkSession, data: Seq[String],
       dvs: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType] = None,
@@ -1896,34 +1896,31 @@ object Manifests {
     def rd(fs: Seq[String], pos: Boolean = keepPos) =
       eraRead(spark, renames, fs, schema, withPositions = pos)
     if (dvs.isEmpty) return rd(data)
-    def shed(df: DataFrame) =
-      if (keepPos) df else df.drop("__file", "__pos")
-    // index only the files THIS scan carries: sidecars legitimately
-    // hold rows for retired or pruned-away files, and paying bitmap
-    // bytes for files the scan never opens would be footprint the
-    // query didn't ask for
-    val (touched, applyTo): (Set[String], Seq[String] => DataFrame) =
-      dvIndex(spark, dvs, Some(data.map(Dfs.canonical).toSet)) match {
-        case Some(bits) => (bits.keySet.map(Dfs.canonical),
-          hit => rd(hit, pos = true).filter(!dvProbe(bits)))
-        case None =>
-          val dv = spark.read.schema(DvSchema).parquet(dvs: _*)
-          val dvRawFiles = dv.select("__file").distinct().collect()
-            .map(_.getString(0))
-          (dvRawFiles.map(Dfs.canonical).toSet, { hit =>
-            val hitCanon = hit.map(Dfs.canonical).toSet
-            val dvHitRaw = dvRawFiles.filter(r => hitCanon.contains(Dfs.canonical(r)))
-            val dvHit =
-              if (dvHitRaw.length == dvRawFiles.length) dv
-              else dv.filter(col("__file").isin(dvHitRaw.toIndexedSeq: _*))
-            antiJoin(rd(hit, pos = true), dvHit)
-          })
-      }
-    val (hit, clean) = data.partition(f => touched.contains(Dfs.canonical(f)))
-    if (hit.isEmpty) rd(data)
-    else {
-      val applied = shed(applyTo(hit))
-      if (clean.isEmpty) applied else applied.unionByName(rd(clean))
+    val index =
+      if (renames.exists(_.preFiles.nonEmpty)) None
+      else dvIndex(spark, dvs, Some(data.map(Dfs.canonical).toSet))
+    index match {
+      case Some(dv) =>
+        val df = spark.baseRelationToDataFrame(
+          graft.sources.manifest.DefaultSource.filesRelation(spark, data, schema, dv))
+        if (keepPos) withPos(df) else df
+      case None =>
+        val dv = spark.read.schema(DvSchema).parquet(dvs: _*)
+        val dvRawFiles = dv.select("__file").distinct().collect()
+          .map(_.getString(0))
+        val touched = dvRawFiles.map(Dfs.canonical).toSet
+        val (hit, clean) = data.partition(f => touched.contains(Dfs.canonical(f)))
+        if (hit.isEmpty) rd(data)
+        else {
+          val hitCanon = hit.map(Dfs.canonical).toSet
+          val dvHitRaw = dvRawFiles.filter(r => hitCanon.contains(Dfs.canonical(r)))
+          val dvHit =
+            if (dvHitRaw.length == dvRawFiles.length) dv
+            else dv.filter(col("__file").isin(dvHitRaw.toIndexedSeq: _*))
+          val applied = antiJoin(rd(hit, pos = true), dvHit)
+          val shed = if (keepPos) applied else applied.drop("__file", "__pos")
+          if (clean.isEmpty) shed else shed.unionByName(rd(clean))
+        }
     }
   }
 
@@ -1996,39 +1993,40 @@ object Manifests {
     spark.conf.getOption("graft.dv.indexMaxBytes")
       .map(_.toLong).getOrElse(64L << 20)
 
-  /** The deletion-vector index of a sidecar set: raw `__file` spelling
-    * → deleted-position bitmap, the OR-merge of the per-sidecar
-    * entries, restricted to `scope`'s files (canonical paths) when
-    * given. None past the `graft.dv.indexMaxBytes` budget (default
-    * 64 MB) or when a footer is unreadable, and the caller takes its
-    * distributed fallback. The budget bounds both costs: the driver
-    * build (8 bytes a position, every sidecar's footer count, checked
-    * before any position is read) and the shipped bitmap bytes (the
-    * max-position span of each kept file); a position past 2³¹ also
-    * falls back. */
+  /** The deletion-vector index of a sidecar set, the one the parquet
+    * readers apply: canonical data-file path → deleted-position bitmap
+    * words, the OR-merge of the per-sidecar entries (raw `__file`
+    * spellings of one file merge), restricted to `scope`'s files
+    * (canonical paths) when given. None past the `graft.dv.indexMaxBytes`
+    * budget (default 64 MB) or when a footer is unreadable, and the
+    * caller takes its anti-join fallback. The budget bounds both costs:
+    * the driver build (8 bytes a position, every sidecar's footer
+    * count, checked before any position is read) and the shipped
+    * bitmap bytes (the max-position span of each kept file); a
+    * position past 2³¹ also falls back. */
   private[graft] def dvIndex(spark: SparkSession, dvs: Seq[String],
       scope: Option[Set[String]] = None)
-      : Option[Map[String, java.util.BitSet]] = {
+      : Option[Map[String, Array[Long]]] = {
     val maxBytes = dvIndexMaxBytes(spark)
     dvEntries(spark, dvs).filter(_.map(_.records).sum <= maxBytes / 8)
       .flatMap { es =>
-        val pos = positionsOf(es).filter { case (f, _) =>
-          scope.forall(_.contains(Dfs.canonical(f))) }
+        val pos = positionsOf(es).toSeq.groupBy(e => Dfs.canonical(e._1))
+          .collect { case (f, ps) if scope.forall(_.contains(f)) =>
+            f -> ps.flatMap(_._2) }
         val mx = pos.map { case (f, ps) => f -> ps.max }
         if (mx.valuesIterator.map(_ / 8 + 64).sum > maxBytes ||
             mx.valuesIterator.exists(_ >= Int.MaxValue)) None
         else Some(pos.map { case (f, ps) =>
           val bs = new java.util.BitSet(mx(f).toInt + 1)
           ps.foreach(p => bs.set(p.toInt))
-          f -> bs
+          f -> bs.toLongArray
         })
       }
   }
 
   /** `dv_contains(__file, __pos)` over `bits` (raw spellings): the
     * codegen'd membership probe — one bit test per row, no join, no
-    * shuffle. Negated it filters live rows ([[liveRead]]); positive it
-    * selects churned rows (the change feed). */
+    * shuffle — that selects the change feed's churned rows. */
   private def dvProbe(bits: Iterable[(String, java.util.BitSet)]): Column = {
     val m = new java.util.HashMap[
       org.apache.spark.unsafe.types.UTF8String, java.util.BitSet]
@@ -2105,14 +2103,27 @@ object Manifests {
     }
   }
 
+  /** The live rows of version `v`: the version's batch relation
+    * ([[graft.sources.manifest.DefaultSource.relationAt]], the one
+    * `spark.read.format("manifest")` serves), one parquet file scan
+    * whose reader drops the deleted positions of a vectored version
+    * and whose listing prunes files by partition, zone map and bloom
+    * on pushed filters. A version with live column renames or a DV
+    * index past its budget reads through [[liveRead]]'s era read or
+    * anti-join instead. */
   def readAt(spark: SparkSession, base: String, v: Int): DataFrame =
-    liveRead(spark, files(spark, base, v), dvFiles(spark, base, v),
-      schemaOf(spark, base, v), renamesOf(spark, base, v))
+    readAt(spark, base, v, meta(spark, base, v))
 
   /** [[readAt]] through `v`'s already-read record `m`. */
   private def readAt(spark: SparkSession, base: String, v: Int,
-      m: VersionMeta): DataFrame =
-    liveRead(spark, files(spark, base, v), m.dv, m.schema, m.renames)
+      m: VersionMeta, keepPos: Boolean = false): DataFrame =
+    graft.sources.manifest.DefaultSource.relationAt(spark, base, v, m) match {
+      case Some(r) =>
+        val df = spark.baseRelationToDataFrame(r)
+        if (keepPos) withPos(df) else df
+      case None => liveRead(spark, files(spark, base, v), m.dv, m.schema,
+        m.renames, keepPos)
+    }
 
   /** [[readAt]] with the row-identity columns kept: every live row
     * carries `__file` (the data file's `_metadata.file_path` spelling)
@@ -2122,22 +2133,7 @@ object Manifests {
     * ride the columnar DV scan (live renames, blown bitmap budget). */
   private[graft] def readAtWithPos(spark: SparkSession, base: String,
       v: Int): DataFrame =
-    liveRead(spark, files(spark, base, v), dvFiles(spark, base, v),
-      schemaOf(spark, base, v), renamesOf(spark, base, v), keepPos = true)
-
-  /** The whole-version deletion-vector index for the COLUMNAR catalog
-    * scan: [[dvIndex]] keyed by canonical data-file path (raw
-    * spellings canonicalizing to one file OR-merge), as bitmap words.
-    * None past the budget, and the caller falls back to the V1
-    * anti-join detour, which is always correct. */
-  private[graft] def dvScanIndex(spark: SparkSession,
-      dvs: Seq[String]): Option[Map[String, Array[Long]]] =
-    dvIndex(spark, dvs).map(_.groupBy(e => Dfs.canonical(e._1)).map {
-      case (f, bs) =>
-        val all = new java.util.BitSet()
-        bs.valuesIterator.foreach(all.or)
-        f -> all.toLongArray
-    })
+    readAt(spark, base, v, meta(spark, base, v), keepPos = true)
 
   def readLatest(spark: SparkSession, base: String): DataFrame =
     readAt(spark, base, latestVersion(spark, base)
@@ -2421,10 +2417,9 @@ object Manifests {
   /** Per-version live-read scaffolding shared by the whole MoR DML
     * tier ([[deleteWhereMor]], [[updateWhereMor]], [[mergeMor]],
     * [[commitDeltaWrite]]): `rd` reads files under the version's eras
-    * and recorded schema, `liveOf` additionally drops the rows the
-    * version's deletion vectors mark — through the [[dvIndex]] probe
-    * (built once per reader), or past its budget the `(__file, __pos)`
-    * anti-join — and `liveTotals` is the per-file live
+    * and recorded schema, `liveOf` reads the live rows with their
+    * `__file`/`__pos` the way [[readAtWithPos]] does — and
+    * `liveTotals` is the per-file live
     * count — the accounting pass that splits retire-vs-vector (the
     * full-file elision invariant). ONE definition, four callers: a fix
     * to the live arithmetic cannot silently miss a copy. */
@@ -2435,16 +2430,9 @@ object Manifests {
     val sch: Option[org.apache.spark.sql.types.StructType] = m.schema
     def rd(fs: Seq[String], pos: Boolean = false): DataFrame =
       eraRead(spark, m.renames, fs, sch, withPositions = pos)
-    private lazy val dvBits =
-      dvIndex(spark, m.dv, Some(cur.map(Dfs.canonical).toSet))
-    def liveOf(fs: Seq[String]): DataFrame = {
-      val r = rd(fs, pos = true)
-      if (m.dv.isEmpty) r
-      else dvBits match {
-        case Some(bits) => r.filter(!dvProbe(bits))
-        case None => antiJoin(r, spark.read.schema(DvSchema).parquet(m.dv: _*))
-      }
-    }
+    def liveOf(fs: Seq[String]): DataFrame =
+      if (fs == cur) readAt(spark, base, v, m, keepPos = true)
+      else liveRead(spark, fs, m.dv, sch, m.renames, keepPos = true)
     /** The record a commit derived from `parent` starts from — the
       * snapshot's own, already read, unless a rebase moved past it. */
     def carriedAt(parent: Int): VersionMeta =
@@ -2595,21 +2583,20 @@ object Manifests {
     import lr.{cur, sch, rd, liveOf}
     val keys = updates.select(keyCols.map(col): _*)
     val live = liveOf(cur)
-    // discovery: matched rows per file via a semi-join against the
-    // (dup-checked) key batch — column-pruned to the keys by Catalyst,
-    // broadcast when the batch is small (null update keys never match
-    // — SQL join equality); live TOTALS, needed only to split
-    // retire-vs-vector, come from a second file-pruned pass
-    val matchedPerFile = live.join(keys, keyCols, "left_semi")
-      .groupBy("__file").count()
-      .collect().map(r => (Dfs.canonical(r.getString(0)), r.getLong(1)))
-      .sortBy(_._1)
-    val affectedCanon = matchedPerFile.map(_._1).toSet
-    val affFiles = cur.filter(f => affectedCanon.contains(Dfs.canonical(f)))
-    val totals = lr.liveTotals(affFiles)
-    val matchedMap = matchedPerFile.toMap
-    val fullSet = affectedCanon.filter(f => totals.get(f).contains(matchedMap(f)))
-    val partialSet = affectedCanon -- fullSet
+    // discovery in ONE pass, [[deleteWhereMor]]'s per-file accounting:
+    // live rows per file and how many of them a key of the batch
+    // matches, through an outer join against the (dup-checked, so
+    // row-preserving) key batch — column-pruned to the keys by
+    // Catalyst, broadcast when the batch is small; null update keys
+    // never match (SQL join equality)
+    val perFile = live.join(keys.withColumn("__hit", lit(true)), keyCols, "left_outer")
+      .groupBy("__file")
+      .agg(count(lit(1)).as("__total"), count(col("__hit")).as("__matched"))
+      .filter(col("__matched") > 0)
+      .collect()
+      .map(r => (Dfs.canonical(r.getString(0)), r.getLong(1), r.getLong(2)))
+    val fullSet = perFile.collect { case (f, t, m) if m == t => f }.toSet
+    val partialSet = perFile.collect { case (f, t, m) if m < t => f }.toSet
     // the whole update batch lands as new files, aligned to the
     // RECORDED schema (order and types) — a missing column throws
     // rather than null-filling silently

@@ -1,9 +1,8 @@
 package graft.sources.manifest
 
-import graft.ext.{Dfs, ManifestFileIndex, Manifests}
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
+import graft.ext.{Dfs, ManifestFileIndex, Manifests, VersionMeta}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
@@ -71,8 +70,8 @@ class DefaultSource extends StreamSourceProvider with StreamSinkProvider
   /** BATCH read of a manifest table through Catalyst's own scan
     * planning: `spark.read.format("graft.sources.manifest").load(base)`
     * resolves one committed version and hands its file list to a
-    * [[graft.ext.ManifestFileIndex]] inside a plain
-    * `HadoopFsRelation(ParquetFileFormat)` — so the query gets
+    * [[graft.ext.ManifestFileIndex]] inside a `HadoopFsRelation` over
+    * Spark's parquet format ([[DefaultSource.relationAt]]) — so the query gets
     * whole-stage codegen, parquet predicate pushdown, AND manifest-
     * stats file skipping on whatever filters the user writes, with no
     * engine-specific read API in sight. Time travel via options:
@@ -80,11 +79,13 @@ class DefaultSource extends StreamSourceProvider with StreamSinkProvider
     * (epoch millis, or an ISO-8601 instant — resolved against commit
     * times, [[Manifests.versionAsOf]]).
     *
-    * Versions carrying deletion vectors are REFUSED: a `BaseRelation`
-    * is a pure file scan and cannot express the position anti-join —
-    * run `Manifests.compact` to materialize the vectors (or read
-    * through `Manifests.readAt`, which applies them). Refusal, not a
-    * silent wrong answer: the same stance `merge`/`updateWhere` take. */
+    * A version carrying deletion vectors reads through the same scan:
+    * its parquet format drops each file's deleted positions inside the
+    * reader ([[DvParquetFileFormat]]). Two shapes are REFUSED, because
+    * a pure file scan cannot serve them: live column renames, and a
+    * deletion-vector index past `graft.dv.indexMaxBytes` (or over an
+    * unreadable sidecar footer). `Manifests.readAt` reads both (its
+    * era read and its anti-join), and `compact()` materializes them. */
   override def createRelation(sqlContext: SQLContext,
       parameters: Map[String, String]): BaseRelation = {
     val spark = sqlContext.sparkSession
@@ -107,31 +108,17 @@ class DefaultSource extends StreamSourceProvider with StreamSinkProvider
       case (None, None) => Manifests.latestVersion(spark, base).getOrElse(
         sys.error(s"no committed version under $base"))
     }
-    require(Manifests.dvFiles(spark, base, v).isEmpty,
-      s"version $v of $base carries deletion vectors — a batch relation " +
-        "is a pure file scan; compact() to materialize them, or read " +
-        "via Manifests.readAt")
-    require(!Manifests.hasLiveRenames(spark, base, v),
+    val m = Manifests.meta(spark, base, v)
+    require(!m.renames.exists(_.preFiles.nonEmpty),
       s"version $v of $base carries live column renames — a pure file " +
         "scan cannot re-map pre-rename files' physical names; read " +
         "through the catalog or Manifests.readAt (era-aware), or " +
         "compact() to materialize the rename")
-    val schema = Manifests.schemaOf(spark, base, v).getOrElse(
-      spark.read.parquet(Manifests.files(spark, base, v).head).schema)
-    // a version written by commitDataBucketed exposes its layout as a
-    // BucketSpec: the scan reports HashPartitioning(keys, n), so joins
-    // and aggregations on the bucket keys plan with zero exchange
-    val bucketSpec = Manifests.bucketSpecOf(spark, base, v).map {
-      case (n, keys, sortCols) =>
-        org.apache.spark.sql.catalyst.catalog.BucketSpec(n, keys, sortCols)
-    }
-    HadoopFsRelation(
-      location = new ManifestFileIndex(spark, base, v),
-      partitionSchema = new StructType(),
-      dataSchema = schema,
-      bucketSpec = bucketSpec,
-      fileFormat = new ParquetFileFormat(),
-      options = parameters)(spark)
+    DefaultSource.relationAt(spark, base, v, m, parameters).getOrElse(
+      throw new IllegalArgumentException(s"version $v of $base carries " +
+        "deletion vectors past the graft.dv.indexMaxBytes index budget " +
+        "(or with an unreadable sidecar footer) — read via " +
+        "Manifests.readAt, or compact() to materialize them"))
   }
 
   /** The WRITE half of the SQL surface —
@@ -185,8 +172,8 @@ class DefaultSource extends StreamSourceProvider with StreamSinkProvider
         else create(overwrite = false)
     }
     // the write COMMITTED; the returned handle must not re-refuse on a
-    // MoR table (appends carry deletion vectors forward, and the scan
-    // relation refuses DV versions) — save() only needs a schema handle
+    // version the scan relation cannot serve (live renames, a DV index
+    // past its budget) — save() only needs a schema handle
     try createRelation(sqlContext, parameters)
     catch {
       case scala.util.control.NonFatal(_) =>
@@ -255,6 +242,70 @@ class DefaultSource extends StreamSourceProvider with StreamSinkProvider
         "versions are immutable; write to the table base")
     new ManifestStreamSink(base,
       parameters.getOrElse("appId", "batch"))
+  }
+}
+
+object DefaultSource {
+
+  /** The batch relation over version `v` of `base`, whose record `m`
+    * the caller has read: a `HadoopFsRelation` whose listing is the
+    * version ([[ManifestFileIndex]]: partition, zone-map and bloom
+    * file pruning on pushed filters) and whose format drops the
+    * version's deleted positions inside the parquet reader
+    * ([[DvParquetFileFormat]] over [[Manifests.dvIndex]]), so a
+    * vectored version plans as ONE file scan. A version written by
+    * `commitDataBucketed` exposes its layout as a `BucketSpec`: the
+    * scan reports `HashPartitioning(keys, n)`, so joins and
+    * aggregations on the bucket keys plan with zero exchange.
+    *
+    * None where a pure file scan cannot serve the version: live column
+    * renames (pre-rename files hold the old physical names), or a DV
+    * index that cannot be built (past `graft.dv.indexMaxBytes`, or an
+    * unreadable sidecar footer). [[Manifests.readAt]] then takes its
+    * era read or its anti-join. */
+  private[graft] def relationAt(spark: SparkSession, base: String, v: Int,
+      m: VersionMeta, options: Map[String, String] = Map.empty)
+      : Option[HadoopFsRelation] = {
+    if (m.renames.exists(_.preFiles.nonEmpty)) return None
+    // index only the files this version lists: sidecars may hold rows
+    // of files a later commit retired
+    val dv =
+      if (m.dv.isEmpty) Some(Map.empty[String, Array[Long]])
+      else Manifests.dvIndex(spark, m.dv,
+        Some(Manifests.files(spark, base, v).map(Dfs.canonical).toSet))
+    dv.map { index =>
+      val location = new ManifestFileIndex(spark, base, v, Some(m))
+      HadoopFsRelation(
+        location = location,
+        partitionSchema = new StructType(),
+        dataSchema = m.schema.getOrElse(
+          spark.read.parquet(location.inputFiles.head).schema),
+        bucketSpec = m.bucketSpec.map { case (n, keys, sortCols) =>
+          org.apache.spark.sql.catalyst.catalog.BucketSpec(n, keys, sortCols)
+        },
+        fileFormat = new DvParquetFileFormat(index),
+        options = options)(spark)
+    }
+  }
+
+  /** `files` read under `schema` as `spark.read.parquet` lists them
+    * (so `_metadata.file_path` spells each file as every other read
+    * does), through [[DvParquetFileFormat]] with DV index `dv` — the
+    * [[relationAt]] read of a file subset (a filtered read, the change
+    * feed's sides, the MoR DML passes over affected files). */
+  private[graft] def filesRelation(spark: SparkSession, files: Seq[String],
+      schema: Option[StructType], dv: Map[String, Array[Long]])
+      : HadoopFsRelation = {
+    val plain = schema.fold(spark.read)(spark.read.schema(_)).parquet(files: _*)
+    plain.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation match {
+          case r: HadoopFsRelation =>
+            r.copy(fileFormat = new DvParquetFileFormat(dv))(r.sparkSession)
+          case r => sys.error(s"parquet read resolved to $r")
+        }
+      case p => sys.error(s"parquet read resolved to $p")
+    }
   }
 }
 

@@ -80,7 +80,7 @@ private[manifest] class ManifestDeltaOperation(spark: SparkSession,
       : ScanBuilder = {
     val dvs = snapshot.map(w => Manifests.dvFiles(spark, base, w))
       .getOrElse(Seq.empty)
-    Manifests.dvScanIndex(spark, dvs) match {
+    Manifests.dvIndex(spark, dvs) match {
       case Some(idx) =>
         val op = this
         new GraftScanBuilder(spark,

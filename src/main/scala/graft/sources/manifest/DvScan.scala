@@ -46,7 +46,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `SupportsDelta` write path keys deletion vectors on, and a user's
   * `SELECT _file, _pos FROM t` rides the identical machinery.
   *
-  * The bitmap index ([[graft.ext.Manifests.dvScanIndex]]) is the
+  * The bitmap index ([[graft.ext.Manifests.dvIndex]]) is the
   * version's shared DV index: the OR-merge of per-sidecar entries read
   * on the driver and cached (sidecars are immutable), so building it
   * runs no Spark job; it is broadcast with the scan. Past the
@@ -116,6 +116,47 @@ private[manifest] object DvScan {
   def filePathOf(file: PartitionedFile): String =
     new org.apache.hadoop.fs.Path(file.filePath.toPath.toString)
       .toUri.toString
+
+  /** Per-file deleted-row counts (bitmap popcount) of a DV index. Exact:
+    * bitmaps dedup duplicate delete actions by construction. */
+  def cardinalities(dvIndex: Map[String, Array[Long]]): Map[String, Long] =
+    dvIndex.map { case (f, words) =>
+      f -> words.iterator.map(w => java.lang.Long.bitCount(w).toLong).sum }
+
+  /** A V1 reader's output (batches or rows) with `live`'s deleted rows
+    * dropped and only the `keep` columns (of types `types`) left.
+    * Closing it closes the reader, so a task reading many files
+    * releases each one as it moves on. */
+  def liveIterator(rows: Iterator[InternalRow], live: LivePositions,
+      keep: Array[Int], types: Array[org.apache.spark.sql.types.DataType])
+      : Iterator[InternalRow] = {
+    lazy val proj = UnsafeProjection.create(keep.indices.map(k =>
+      BoundReference(keep(k), types(k), nullable = true)).toIndexedSeq)
+    // a vectorized reader hands batches through the row-typed iterator
+    val in = rows.asInstanceOf[Iterator[AnyRef]]
+    new Iterator[AnyRef] with java.io.Closeable {
+      private var pending: AnyRef = _
+      override def hasNext: Boolean = {
+        while (pending == null && in.hasNext) in.next() match {
+          case b: ColumnarBatch =>
+            val kept = live.select(b)
+            pending = new ColumnarBatch(keep.map(live.column(b, _)), kept)
+          case r: InternalRow => if (live.isLive(r)) pending = proj(r)
+        }
+        pending != null
+      }
+      override def next(): AnyRef = {
+        if (!hasNext) throw new NoSuchElementException
+        val out = pending
+        pending = null
+        out
+      }
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }.asInstanceOf[Iterator[InternalRow]]
+  }
 }
 
 class DvParquetScan(sp: SparkSession,
@@ -271,8 +312,7 @@ class DvParquetScan(sp: SparkSession,
     * the count answer can never drift apart. Exact: bitmaps dedup
     * duplicate delete actions by construction. */
   lazy val deletedCardinalities: Map[String, Long] =
-    dvIndex.map { case (f, words) =>
-      f -> words.iterator.map(w => java.lang.Long.bitCount(w).toLong).sum }
+    DvScan.cardinalities(dvIndex)
 
   private def hasRowIdx: Boolean = wantPos || dvIndex.nonEmpty
 
@@ -394,41 +434,18 @@ private[manifest] class DvReaderFactory(
       v.setUtf8String(UTF8String.fromString(spelled))
       v
     } else null
+    val live = new LivePositions(del, nData)
+    val nOut = nData + (if (wantFile) 1 else 0) + (if (wantPos) 1 else 0)
     new PartitionReader[ColumnarBatch] {
       private var out: ColumnarBatch = _
-      private var map: Array[Int] = Array.empty
 
       private def transform(batch: ColumnarBatch): ColumnarBatch = {
-        val n = batch.numRows()
-        val idxVec = if (hasRowIdx) batch.column(nData) else null
-        var kept = n
-        var identity = true
-        if (del != null) {
-          if (map.length < n) map = new Array[Int](n)
-          kept = 0
-          var i = 0
-          while (i < n) {
-            val p = idxVec.getLong(i)
-            if (p > Int.MaxValue || !del.get(p.toInt)) {
-              map(kept) = i; kept += 1
-            }
-            i += 1
-          }
-          identity = kept == n
-        }
-        val nOut = nData + (if (wantFile) 1 else 0) +
-          (if (wantPos) 1 else 0)
+        val kept = live.select(batch)
         val vecs = new Array[ColumnVector](nOut)
         var j = 0
-        while (j < nData) {
-          vecs(j) = if (identity) batch.column(j)
-            else new MappedColumnVector(batch.column(j), map)
-          j += 1
-        }
+        while (j < nData) { vecs(j) = live.column(batch, j); j += 1 }
         if (wantFile) { vecs(j) = fileVec; j += 1 }
-        if (wantPos)
-          vecs(j) = if (identity) idxVec
-            else new MappedColumnVector(idxVec, map)
+        if (wantPos) vecs(j) = live.column(batch, nData)
         new ColumnarBatch(vecs, kept)
       }
 
@@ -462,16 +479,13 @@ private[manifest] class DvReaderFactory(
         else Seq.empty)
       UnsafeProjection.create((dataRefs ++ metaExprs).toIndexedSeq)
     }
+    val live = new LivePositions(del, nData)
     new PartitionReader[InternalRow] {
       private var out: InternalRow = _
       override def next(): Boolean = {
         while (delegate.next()) {
           val row = delegate.get()
-          val live = del == null || {
-            val p = row.getLong(nData)
-            p > Int.MaxValue || !del.get(p.toInt)
-          }
-          if (live) { out = proj(row); return true }
+          if (live.isLive(row)) { out = proj(row); return true }
         }
         false
       }
@@ -484,6 +498,135 @@ private[manifest] class DvReaderFactory(
     * reconstructed from the parquet factory's read schema. */
   private lazy val readSchemaFields: Array[StructField] =
     inner.readDataSchema.fields
+}
+
+/** One file's deleted positions applied to its reader's output — the
+  * filter both read paths share (the catalog scan's
+  * [[DvReaderFactory]] and the V1 relation's [[DvParquetFileFormat]]).
+  * `idxCol` is the ordinal of the generated row-index column; `del`
+  * null means the file has no vector and every row is live. A batch
+  * is filtered by INDEX REMAPPING: [[select]] computes its live rows
+  * once, and [[column]] then serves each vector as a
+  * [[MappedColumnVector]] over them (the vector itself when nothing
+  * was deleted). One instance per file reader: the map buffer is
+  * reused across that reader's batches. */
+private[manifest] final class LivePositions(del: java.util.BitSet,
+    idxCol: Int) {
+  private var map: Array[Int] = Array.empty
+  private var identity = true
+
+  private def deleted(p: Long): Boolean =
+    p <= Int.MaxValue && del.get(p.toInt)
+
+  /** Whether a row (carrying the row index at `idxCol`) is live. */
+  def isLive(row: InternalRow): Boolean =
+    del == null || !deleted(row.getLong(idxCol))
+
+  /** Computes `batch`'s live rows; returns how many there are. */
+  def select(batch: ColumnarBatch): Int = {
+    val n = batch.numRows()
+    identity = true
+    if (del == null) return n
+    val idxVec = batch.column(idxCol)
+    if (map.length < n) map = new Array[Int](n)
+    var kept = 0
+    var i = 0
+    while (i < n) {
+      if (!deleted(idxVec.getLong(i))) { map(kept) = i; kept += 1 }
+      i += 1
+    }
+    identity = kept == n
+    kept
+  }
+
+  /** Column `j` of the batch last passed to [[select]], over its live
+    * rows. */
+  def column(batch: ColumnarBatch, j: Int): ColumnVector =
+    if (identity) batch.column(j) else new MappedColumnVector(batch.column(j), map)
+}
+
+/** The manifest's V1 parquet format: Spark's own `ParquetFileFormat`
+  * (vectorized reader, pushdown, whole-stage codegen) that drops each
+  * file's deleted positions inside the reader. It is the format of
+  * every batch relation over a manifest version
+  * ([[DefaultSource.relationAt]], so `spark.read.format("manifest")`
+  * and [[graft.ext.Manifests.readAt]]) and of the file-subset reads
+  * beside them.
+  *
+  * `dvIndex` is the version's deletion-vector index
+  * ([[graft.ext.Manifests.dvIndex]]: canonical data-file path →
+  * deleted-position bitmap words), broadcast with each scan. With an
+  * empty index this is the stock format, byte for byte. Otherwise the
+  * reader is asked for the generated row-index column as well (the one
+  * `_metadata.row_index` uses, so it is correct under skipped row
+  * groups and pushed filters); a file with a vector is filtered by
+  * [[LivePositions]], and the appended index column is dropped again
+  * before the batch leaves the reader. A query that asks for
+  * `_metadata.row_index` itself gets the surviving rows' original
+  * positions. */
+class DvParquetFileFormat(val dvIndex: Map[String, Array[Long]])
+    extends ParquetFileFormat {
+
+  /** Per-file deleted-row counts, the fold the metadata COUNT(*)
+    * subtracts ([[org.apache.spark.sql.graft.ManifestCountRule]]). */
+  lazy val deletedCardinalities: Map[String, Long] =
+    DvScan.cardinalities(dvIndex)
+
+  override def buildReaderWithPartitionValues(sparkSession: SparkSession,
+      dataSchema: StructType, partitionSchema: StructType,
+      requiredSchema: StructType,
+      filters: Seq[org.apache.spark.sql.sources.Filter],
+      options: Map[String, String],
+      hadoopConf: org.apache.hadoop.conf.Configuration)
+      : PartitionedFile => Iterator[InternalRow] = {
+    if (dvIndex.isEmpty)
+      return super.buildReaderWithPartitionValues(sparkSession, dataSchema,
+        partitionSchema, requiredSchema, filters, options, hadoopConf)
+    val asked = requiredSchema.fieldNames
+      .indexOf(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME)
+    val idxCol = if (asked >= 0) asked else requiredSchema.length
+    // nullable = true, as in the catalog scan: the reader fills a
+    // missing optional column from its row-index generator
+    val inner =
+      if (asked >= 0) requiredSchema
+      else requiredSchema.add(StructField(
+        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType,
+        nullable = true))
+    val read = super.buildReaderWithPartitionValues(sparkSession, dataSchema,
+      partitionSchema, inner, filters, options, hadoopConf)
+    // the reader emits `inner`'s columns, then the partition columns;
+    // what leaves here is that minus an index column nobody asked for
+    val fields = inner.fields ++ partitionSchema.fields
+    val keep = fields.indices.filter(i => asked >= 0 || i != idxCol).toArray
+    val types = keep.map(i => fields(i).dataType)
+    val bc = sparkSession.sparkContext.broadcast(dvIndex)
+    (file: PartitionedFile) => {
+      val del = bc.value.get(Dfs.canonical(DvScan.filePathOf(file)))
+        .map(java.util.BitSet.valueOf).orNull
+      val rows = read(file)
+      if (del == null && asked >= 0) rows
+      else DvScan.liveIterator(rows, new LivePositions(del, idxCol), keep, types)
+    }
+  }
+
+  // filtered batches hold remapped vectors beside the reader's own, so
+  // generated code must not cast them to the on-heap/off-heap classes
+  override def vectorTypes(requiredSchema: StructType,
+      partitionSchema: StructType,
+      sqlConf: org.apache.spark.sql.internal.SQLConf): Option[Seq[String]] =
+    if (dvIndex.isEmpty) super.vectorTypes(requiredSchema, partitionSchema, sqlConf)
+    else None
+
+  // two relations over one listing with different vectors are not
+  // interchangeable (a file listing compares by its paths, so exchange
+  // reuse and the cache manager would otherwise swap them)
+  override def equals(other: Any): Boolean = other match {
+    case o: DvParquetFileFormat => o.dvIndex.size == dvIndex.size &&
+      o.dvIndex.forall { case (f, w) =>
+        dvIndex.get(f).exists(java.util.Arrays.equals(_, w)) }
+    case _ => false
+  }
+  override def hashCode(): Int = 31 * super.hashCode() + dvIndex.size
 }
 
 /** A [[ColumnVector]] view that REMAPS row ids through a live-position

@@ -160,14 +160,14 @@ class ManifestTable(spark: SparkSession, val base: String,
     // version whose DV index cannot be built: past the bitmap byte
     // budget, or a sidecar footer unreadable (the anti-join fallback
     // is always correct, never memory-bound). The index itself is the
-    // version's shared one (`Manifests.dvScanIndex`): cached
+    // version's shared one (`Manifests.dvIndex`): cached
     // per-sidecar entries read on the driver, no Spark job.
     if (v.exists(w => Manifests.hasLiveRenames(spark, base, w)))
       new MorScanBuilder(spark, base, v.get, sch, options, pinned)
     else {
       val dvs = v.map(w => Manifests.dvFiles(spark, base, w))
         .getOrElse(Seq.empty)
-      Manifests.dvScanIndex(spark, dvs) match {
+      Manifests.dvIndex(spark, dvs) match {
         case Some(idx) => new GraftScanBuilder(spark,
           new ManifestScanIndex(spark, base, v), sch, options, base,
           pinned, idx)

@@ -47,9 +47,9 @@ import org.apache.spark.sql.types.LongType
   * and (partition-pure) filters below — and
   * [[graft.ext.ManifestFileIndex.coveredStats]] proves the stats cover
   * exactly the manifest's files (appends maintain the stats sidecar
-  * incrementally, so the proof survives appends without re-ANALYZE;
-  * batch manifest relations carry no deletion vectors by provider
-  * contract). A table never ANALYZEd, or an aggregate over a
+  * incrementally, so the proof survives appends without re-ANALYZE).
+  * Over a vectored version only `COUNT(*)` folds, minus the scan's
+  * bitmap cardinalities. A table never ANALYZEd, or an aggregate over a
   * non-indexed column, simply keeps its normal scan.
   *
   * Installed into `spark.experimental.extraOptimizations` by
@@ -78,9 +78,17 @@ object ManifestCountRule extends Rule[LogicalPlan] {
     case Filter(cond, child) =>
       manifestScan(child).map { case (i, cs, d) =>
         (i, conjuncts(cond) ++ cs, d) }
+    // the V1 relation ([[graft.sources.manifest.DefaultSource.relationAt]]):
+    // its format holds the version's DV index, whose cardinalities a
+    // vectored COUNT(*) subtracts as on the catalog scan below
     case l: LogicalRelation => l.relation match {
       case fs: HadoopFsRelation => fs.location match {
-        case m: graft.ext.ManifestFileIndex => Some((m, Seq.empty, Map.empty))
+        case m: graft.ext.ManifestFileIndex => Some((m, Seq.empty,
+          fs.fileFormat match {
+            case f: graft.sources.manifest.DvParquetFileFormat =>
+              f.deletedCardinalities
+            case _ => Map.empty[String, Long]
+          }))
         case _ => None
       }
       case _ => None

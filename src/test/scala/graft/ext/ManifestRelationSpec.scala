@@ -89,7 +89,7 @@ class ManifestRelationSpec extends AnyFunSuite {
     assert(rel(nb).filter(col("k") === 2).count() === 10)
   }
 
-  test("versionAsOf and timestampAsOf resolve history; DV versions refuse") {
+  test("versionAsOf and timestampAsOf resolve history; DV versions read their live rows") {
     import spark.implicits._
     val b = clustered()
     Manifests.deleteWhere(spark, b, col("k") === 3)
@@ -102,10 +102,15 @@ class ManifestRelationSpec extends AnyFunSuite {
     val asOf = spark.read.format("graft.sources.manifest")
       .option("timestampAsOf", ts.toString).load(b)
     assert(asOf.count() === 200)
-    // a deletion-vector version is not expressible as a pure file scan
+    // a deletion-vector version reads through the same file scan, its
+    // deleted positions dropped inside the parquet reader
+    val fives = latest.filter(col("k") === 5).count()
+    assert(fives > 0)
     Manifests.deleteWhereMor(spark, b, col("k") === 5)
-    val e = intercept[IllegalArgumentException](rel(b).count())
-    assert(e.getMessage.contains("deletion vectors"))
+    assert(Manifests.dvFiles(spark, b, Manifests.latestVersion(spark, b).get).nonEmpty)
+    assert(rel(b).count() === 180 - fives)
+    assert(rel(b).filter(col("k") === 5).count() === 0)
+    assert(rel(b).select("id").collect().length === 180 - fives)
   }
 
   test("bucketed tables: join and aggregation on the bucket keys plan with zero exchange") {
