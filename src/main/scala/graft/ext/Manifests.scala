@@ -1286,6 +1286,34 @@ object Manifests {
       (live.result(), dead.result())
     }
 
+  /** Stage new data files under a fresh `data_<uuid>` directory of
+    * `base` and list them, filesystem-qualified (the spelling every
+    * manifest's set arithmetic compares by). The caller shapes the
+    * frame — its partitioning decides the files; `split` = (specs, n)
+    * writes through [[writeSplitByTuple]] instead, one file per
+    * partition tuple. Nothing is published: files a writer stages and
+    * never commits are [[sweepOrphans]] residue. */
+  private def stageData(base: String, shaped: DataFrame,
+      split: Option[(Seq[String], Int)] = None): Seq[String] = {
+    val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
+    split match {
+      case Some((specs, n)) => writeSplitByTuple(shaped, dir, specs, n)
+      case None => shaped.write.mode("errorifexists").parquet(dir)
+    }
+    Dfs.dataFiles(shaped.sparkSession, dir).map(_.getPath.toString)
+  }
+
+  /** Stage ONE empty data file from version `v`'s recorded schema (its
+    * first file's footer when none is recorded) — the file an emptied
+    * table's manifest needs, built from metadata without a data scan. */
+  private def stageEmpty(spark: SparkSession, base: String,
+      v: Int): Seq[String] = {
+    val s = schemaOf(spark, base, v)
+      .getOrElse(spark.read.parquet(files(spark, base, v).head).schema)
+    stageData(base, spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s).coalesce(1))
+  }
+
   /** Bootstrap: write `df` as a fresh immutable data directory and
     * commit its part files as the next version. `recordSchema`
     * overrides the RECORDED schema (names and types must match the
@@ -1302,9 +1330,7 @@ object Manifests {
         df.schema.fields.map(f => (f.name, f.dataType)).toSeq,
         "recordSchema must match the data's names and types")
     }
-    val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-    df.write.mode("errorifexists").parquet(dir)
-    val fs = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
+    val fs = stageData(base, df)
     // an overwrite on a live table must still honor its constraints
     val latest = latestVersion(spark, base)
     enforceConstraints(spark, base, latest, fs, Some(df.schema),
@@ -1335,19 +1361,21 @@ object Manifests {
       keys: Seq[String], numBuckets: Int, sortBy: Seq[String] = Nil): Int = {
     require(keys.nonEmpty && numBuckets > 0)
     val spark = df.sparkSession
-    val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
     // sortBy makes the buckets SORTED buckets: each bucket is one file
     // (repartition -> one output partition per bucket) written in key
     // order, the spec records the ordering, and the scan reports it —
     // so a sort-merge join on the keys skips its SortExecs too: the
     // join runs exchange-free AND sort-free, a pure streamed merge
     val shaped = df.repartition(numBuckets, keys.map(col): _*)
-    (if (sortBy.isEmpty) shaped
-     else shaped.sortWithinPartitions(sortBy.map(col): _*))
-      .write.mode("errorifexists").parquet(dir)
+    val written = stageData(base,
+      if (sortBy.isEmpty) shaped
+      else shaped.sortWithinPartitions(sortBy.map(col): _*))
     import org.apache.spark.sql.execution.datasources.BucketingUtils
-    Dfs.dataFiles(spark, dir).foreach { st =>
-      val name = st.getPath.getName
+    // listing paths are filesystem-qualified, the spelling every other
+    // write path's set arithmetic compares by — and so are their renames
+    val renamed = written.map { f =>
+      val path = new org.apache.hadoop.fs.Path(f)
+      val name = path.getName
       // part-<partitionIdx>-<uuid>...: partition idx IS the bucket id
       val bucket = name.split("-")(1).toInt
       val dot = name.indexOf('.')
@@ -1360,11 +1388,10 @@ object Manifests {
         s"bucket-id rename drifted from Spark's parser: $name -> $withId")
       require(bucket < numBuckets,
         s"parsed bucket id $bucket out of range for $numBuckets buckets ($name)")
-      Dfs.rename(spark, st.getPath.toString, s"$dir/$withId")
+      val to = new org.apache.hadoop.fs.Path(path.getParent, withId).toString
+      Dfs.rename(spark, f, to)
+      to
     }
-    // re-list for the manifest: listing paths are filesystem-qualified,
-    // the spelling every other write path's set arithmetic compares by
-    val renamed = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
     val latest = latestVersion(spark, base)
     enforceConstraints(spark, base, latest, renamed, Some(df.schema),
       overwrite = true)
@@ -1842,21 +1869,18 @@ object Manifests {
           "appendBatch, which derives tuples for appended files under " +
           "the recorded spec.")
     }
-    val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
     val n = if (filesPerWrite > 0) filesPerWrite
       else spark.sessionState.conf.numShufflePartitions
-    if (splitByPartition(spark))
-      writeSplitByTuple(df, dir, partCols, n)
-    else {
-      // cluster by the TUPLE values so each file covers ~one tuple —
-      // under a transform spec that means month/bucket clustering, not
-      // raw source clustering (which for bucket would scatter)
-      val tuples = tupleColumns(df.schema, partCols)
-      df.repartitionByRange(n, tuples: _*)
-        .sortWithinPartitions(tuples: _*)
-        .write.mode("errorifexists").parquet(dir)
-    }
-    val files = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
+    val files =
+      if (splitByPartition(spark)) stageData(base, df, Some((partCols, n)))
+      else {
+        // cluster by the TUPLE values so each file covers ~one tuple —
+        // under a transform spec that means month/bucket clustering, not
+        // raw source clustering (which for bucket would scatter)
+        val tuples = tupleColumns(df.schema, partCols)
+        stageData(base, df.repartitionByRange(n, tuples: _*)
+          .sortWithinPartitions(tuples: _*))
+      }
     val latest = latestVersion(spark, base)
     enforceConstraints(spark, base, latest, files, Some(df.schema),
       overwrite = true)
@@ -2271,13 +2295,12 @@ object Manifests {
     val v = latestVersion(spark, base)
       .getOrElse(sys.error(s"no committed version under $base"))
     val cur = files(spark, base, v)
-    val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
     // reads through the version's deletion vectors, so compaction is
     // also the MATERIALIZE step: the rewritten files carry no deleted
     // rows and the new version carries no vectors
     val m = meta(spark, base, v).carried
     val live = readAt(spark, base, v, m)
-    (clusterBy, m.partValues.map(_._1)) match {
+    val rewritten = (clusterBy, m.partValues.map(_._1)) match {
       // a PARTITIONED table compacts at tuple boundaries by default
       // (Delta/Iceberg OPTIMIZE never merges across partitions): each
       // output file holds exactly one partition tuple, so compaction
@@ -2287,16 +2310,13 @@ object Manifests {
       // writes. `targetFiles` bounds the shuffle parallelism; the
       // split lands ~one file per live tuple.
       case (Nil, Some(specs)) =>
-        writeSplitByTuple(live, dir, specs, math.max(1, targetFiles))
+        stageData(base, live, Some((specs, math.max(1, targetFiles))))
       case (Nil, None) =>
-        live.repartition(targetFiles)
-          .write.mode("errorifexists").parquet(dir)
+        stageData(base, live.repartition(targetFiles))
       case (cols, _) =>
-        live.repartitionByRange(targetFiles, cols.map(col): _*)
-          .sortWithinPartitions(cols.map(col): _*)
-          .write.mode("errorifexists").parquet(dir)
+        stageData(base, live.repartitionByRange(targetFiles, cols.map(col): _*)
+          .sortWithinPartitions(cols.map(col): _*))
     }
-    val rewritten = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
     // tagged content-preserving (Delta's OPTIMIZE dataChange=false):
     // the live row multiset is unchanged by construction (vectors
     // materialize rows that were already logically deleted in earlier
@@ -2319,8 +2339,9 @@ object Manifests {
     * rewriting every file the predicate touches, write a DELETION
     * VECTOR — a tiny parquet sidecar of `(file, position)` pairs — and
     * publish a version whose manifest carries the SAME data files plus
-    * the vector. Zero data bytes move; a reader anti-joins the vector
-    * against only the touched files ([[liveRead]]), untouched files
+    * the vector. Zero data bytes move; a reader drops the vectored
+    * positions inside its parquet scan ([[liveRead]] over
+    * [[graft.sources.manifest.DvParquetFileFormat]]), untouched files
     * stream through unchanged. The Delta/Iceberg v2 position-delete
     * shape, rebuilt on plain parquet via `_metadata.row_index`.
     *
@@ -2334,16 +2355,17 @@ object Manifests {
     * vector covering the whole file is just a file drop paid at read
     * time forever. Only boundary files (some rows match, some
     * survive) get vectors, so a clustered whole-partition delete is
-    * manifest-shaped and the anti-join's footprint is the boundary,
-    * not the partition.
+    * manifest-shaped and the reader's position filtering covers the
+    * boundary, not the partition ([[commitMor]] owns the split).
     * The write-amplification trade: MoR makes deletes cheap and reads
-    * pay one bounded anti-join until the next compaction — the right
-    * side of the trade when deletes are frequent and small (CDC,
-    * right-to-be-forgotten) on a 100 TB table.
+    * of the vectored files pay a per-row position check until the
+    * next compaction — the right side of the trade when deletes are
+    * frequent and small (CDC, right-to-be-forgotten) on a 100 TB table.
     *
     * Sidecar LAYOUT is a table invariant, not a task-parallelism
     * accident: exactly ONE sidecar file per touched data file, rows
-    * grouped by the data file they address. Grouping uses an exact
+    * grouped by the data file they address ([[LiveReader.writeVectors]]).
+    * Grouping uses an exact
     * per-file partitioner over the collected touched-file list (DV
     * metadata, bounded by the delete footprint) — a hash
     * `repartition(col("__file"))` would make the count deterministic
@@ -2363,68 +2385,32 @@ object Manifests {
     val v = asOf.orElse(latestVersion(spark, base))
       .getOrElse(sys.error(s"no committed version under $base"))
     val lr = new LiveReader(spark, base, v)
-    import lr.{cur, rd, liveOf}
-    val live = liveOf(cur)
+    val hit = coalesce(pred, lit(false))
     // Per-file accounting in ONE map-side-combined pass: live rows per
     // file and how many of them the predicate matches (null predicate
-    // values SURVIVE — same contract as deleteWhere). A file whose
-    // EVERY live row matches is RETIRED from the manifest instead of
-    // vectored — Delta's invariant (a deletion vector covering the
-    // whole file IS a file drop): a clustered whole-partition delete
-    // stays manifest-shaped, where vectoring it would write data-sized
-    // sidecars that every later read pays an anti-join against. Only
-    // genuinely PARTIAL files get vectors, and only they are re-read
-    // to emit positions (file-pruned second pass over the boundary).
-    val perFile = live.withColumn("__del", coalesce(pred, lit(false)))
-      .groupBy("__file")
-      .agg(count(lit(1)).as("__total"),
-        sum(when(col("__del"), 1L).otherwise(0L)).as("__matched"))
-      .filter(col("__matched") > 0)
-      .collect()
-      .map(r => (Dfs.canonical(r.getString(0)), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    if (perFile.isEmpty) return (0L, v) // nothing matched: no version burned
-    val deleted = perFile.map(_._3).sum
-    var fullSet = perFile.collect { case (f, t, m) if m == t => f }.toSet
-    var partialSet = perFile.collect { case (f, t, m) if m < t => f }.toSet
-    // an empty manifest is unrepresentable (and an empty table should
-    // stay readable): if the delete kills every live row of every
-    // file, one fully-dead file stays behind fully-vectored
-    if (partialSet.isEmpty && fullSet.size == cur.size) {
-      val keep = fullSet.min
-      fullSet -= keep; partialSet += keep
-    }
-    val written = lr.writeVectors(partialSet)(_.filter(coalesce(pred, lit(false))))
-    // surviving data files carry verbatim with their schema and stats
-    // (zones stay conservatively wide over the vectored rows); on
-    // rebase the winners' appended files and their metadata carry from
-    // the new parent, with this delete's retirements and vectors
-    // applied on top — an appended file can never be in fullSet, so
-    // the subtraction commutes with the appends exactly like
-    // deleteWhere's
-    (deleted, rebaseLoop(spark, base, v,
-      added => rd(added)
-        .filter(coalesce(pred, lit(false))).limit(1).count() > 0) {
-      parent =>
-        val (retired, kept) = files(spark, base, parent)
-          .partition(f => fullSet.contains(Dfs.canonical(f)))
-        val m = lr.carriedAt(parent)
-        commit(spark, base, kept, m.copy(dv = m.dv ++ written),
-          parent = Some(parent), delta = Some((Seq.empty, retired)))
-    })
+    // values SURVIVE — same contract as deleteWhere). Only the
+    // genuinely PARTIAL files are re-read to emit positions
+    // (file-pruned second pass over the boundary).
+    val perFile = lr.accounting(lr.liveOf(lr.cur),
+      sum(when(hit, 1L).otherwise(0L)))
+    // an appended file can never be retired, so on rebase the
+    // subtraction commutes with the appends exactly like deleteWhere's
+    (perFile.map(_._3).sum, commitMor(lr, perFile, Right(Seq.empty),
+      Left(_.filter(hit)),
+      added => lr.rd(added).filter(hit).limit(1).count() > 0))
   }
 
   /** Per-version live-read scaffolding shared by the whole MoR DML
     * tier ([[deleteWhereMor]], [[updateWhereMor]], [[mergeMor]],
-    * [[commitDeltaWrite]]): `rd` reads files under the version's eras
-    * and recorded schema, `liveOf` reads the live rows with their
-    * `__file`/`__pos` the way [[readAtWithPos]] does — and
-    * `liveTotals` is the per-file live
-    * count — the accounting pass that splits retire-vs-vector (the
-    * full-file elision invariant). ONE definition, four callers: a fix
-    * to the live arithmetic cannot silently miss a copy. */
-  private final class LiveReader(spark: SparkSession, base: String,
-      v: Int) {
+    * [[commitDeltaWrite]]) and its commit core [[commitMor]]: `rd`
+    * reads files under the version's eras and recorded schema,
+    * `liveOf` reads the live rows with their `__file`/`__pos` the way
+    * [[readAtWithPos]] does, `accounting` and `withTotals` count per
+    * file the live and matched rows that split retire-vs-vector, and
+    * `writeVectors` writes the sidecars. One definition of the live
+    * arithmetic for every MoR writer. */
+  private final class LiveReader(val spark: SparkSession, val base: String,
+      val v: Int) {
     val cur: Seq[String] = files(spark, base, v)
     private val m = meta(spark, base, v)
     val sch: Option[org.apache.spark.sql.types.StructType] = m.schema
@@ -2433,6 +2419,9 @@ object Manifests {
     def liveOf(fs: Seq[String]): DataFrame =
       if (fs == cur) readAt(spark, base, v, m, keepPos = true)
       else liveRead(spark, fs, m.dv, sch, m.renames, keepPos = true)
+    /** The snapshot's files whose canonical path `keep` holds. */
+    def pick(keep: String => Boolean): Seq[String] =
+      cur.filter(f => keep(Dfs.canonical(f)))
     /** The record a commit derived from `parent` starts from — the
       * snapshot's own, already read, unless a rebase moved past it. */
     def carriedAt(parent: Int): VersionMeta =
@@ -2442,7 +2431,7 @@ object Manifests {
       * touched data file, the layout [[deleteWhereMor]] documents. */
     def writeVectors(partial: Set[String])(hit: DataFrame => DataFrame)
         : Seq[String] = {
-      val vecFiles = cur.filter(f => partial.contains(Dfs.canonical(f)))
+      val vecFiles = pick(partial)
       if (vecFiles.isEmpty) return Seq.empty
       val dvRows = hit(liveOf(vecFiles)).select(col("__file"), col("__pos"))
       val touched = partial.toArray.sorted
@@ -2459,11 +2448,99 @@ object Manifests {
         .write.mode("errorifexists").parquet(dir)
       Dfs.dataFiles(spark, dir).map(_.getPath.toString)
     }
-    def liveTotals(fs: Seq[String]): Map[String, Long] =
-      if (fs.isEmpty) Map.empty
-      else liveOf(fs).groupBy("__file").count()
-        .collect().map(r => (Dfs.canonical(r.getString(0)), r.getLong(1)))
-        .toMap
+    /** The per-file accounting [[commitMor]] takes, in ONE
+      * map-side-combined pass over `rows` (live rows with `__file`):
+      * (canonical file, live rows, `matched`) for every file `matched`
+      * counts a row of. */
+    def accounting(rows: DataFrame, matched: Column): Seq[(String, Long, Long)] =
+      rows.groupBy("__file")
+        .agg(count(lit(1)).as("__total"), matched.as("__matched"))
+        .filter(col("__matched") > 0)
+        .collect()
+        .map(r => (Dfs.canonical(r.getString(0)), r.getLong(1), r.getLong(2)))
+        .toSeq
+    /** `matched` (canonical file → matched live rows) as that accounting, with each file's live total from
+      * one file-pruned pass over the matched files only. A file with
+      * no live row left counts 0 live rows, so it vectors. */
+    def withTotals(matched: Map[String, Long]): Seq[(String, Long, Long)] = {
+      val fs = pick(matched.contains)
+      val totals =
+        if (fs.isEmpty) Map.empty[String, Long]
+        else liveOf(fs).groupBy("__file").count()
+          .collect().map(r => (Dfs.canonical(r.getString(0)), r.getLong(1)))
+          .toMap
+      matched.toSeq.sorted.map { case (f, n) => (f, totals.getOrElse(f, 0L), n) }
+    }
+  }
+
+  /** The merge-on-read commit core — [[commitRewrite]]'s twin, and the
+    * one publish path of the four MoR writers ([[deleteWhereMor]],
+    * [[updateWhereMor]], [[mergeMor]], [[commitDeltaWrite]]), each of
+    * which keeps only its discovery pass and its images. Given the
+    * per-file accounting `(canonical file, live rows, matched rows)`
+    * of the snapshot's touched files, it:
+    *
+    *  - stages the new row images: `Left((frame, rows))` writes under a
+    *    fresh data dir sized by ROWS, not touched-file count (≈1M rows
+    *    per output file, capped at the session's parallelism — a spread
+    *    update of a few rows in each of 1,000 files lands as one file, a
+    *    50M-row insert-heavy batch keeps cluster parallelism);
+    *    `Right(files)` adopts files the engine already wrote;
+    *  - splits RETIRE (every live row matched — FULL-FILE ELISION) from
+    *    VECTOR (some rows matched). An empty manifest is
+    *    unrepresentable (and an empty table should stay readable): when
+    *    the statement kills every live row of every file and appends
+    *    nothing, one fully-dead file stays behind fully-vectored;
+    *  - validates the images against CHECK constraints and NOT NULL;
+    *  - writes the vectors for the partial set (`Left(hit)`: the live
+    *    rows `hit` keeps, via [[LiveReader.writeVectors]]) or adopts the
+    *    engine's sidecars (`Right`), all of them or — when no file stays
+    *    partial — none;
+    *  - commits survivors + images with the snapshot's vectors plus
+    *    this statement's, rebasing across concurrent pure appends that
+    *    clear `conflictsWith` ([[rebaseLoop]]). The images extend the
+    *    sidecars like an append ([[withAppended]], derived per attempt
+    *    from that attempt's parent).
+    *
+    * Nothing matched and nothing appended burns no version: the
+    * snapshot's number returns. */
+  private def commitMor(lr: LiveReader, perFile: Seq[(String, Long, Long)],
+      images: Either[(DataFrame, Long), Seq[String]],
+      vectors: Either[DataFrame => DataFrame, Seq[String]],
+      conflictsWith: Seq[String] => Boolean,
+      tag: Option[String] = None, txn: Option[(String, Long)] = None,
+      cdcUpd: Option[Seq[String]] = None): Int = {
+    import lr.{spark, base, v, sch}
+    if (perFile.isEmpty && images.fold(_._2 == 0L, _.isEmpty)) return v
+    val newFiles = images match {
+      case Left((frame, rows)) =>
+        stageData(base, frame.repartition(math.max(1,
+          math.min(spark.sparkContext.defaultParallelism,
+            math.ceil(rows / 1000000.0).toInt))))
+      case Right(written) => written
+    }
+    val (fullE, partialE) = perFile.partition { case (_, t, n) => n == t }
+    var full = fullE.map(_._1).toSet
+    var partial = partialE.map(_._1).toSet
+    if (newFiles.isEmpty && partial.isEmpty && full.size == lr.cur.size) {
+      val keep = full.min
+      full -= keep; partial += keep
+    }
+    enforceConstraints(spark, base, Some(v), newFiles, sch)
+    val written = vectors match {
+      case Left(hit) => lr.writeVectors(partial)(hit)
+      case Right(sidecars) => if (partial.nonEmpty) sidecars else Seq.empty
+    }
+    rebaseLoop(spark, base, v, conflictsWith) { parent =>
+      val (retired, kept) = files(spark, base, parent)
+        .partition(f => full.contains(Dfs.canonical(f)))
+      val m = lr.carriedAt(parent)
+      commit(spark, base, kept ++ newFiles,
+        withAppended(spark, base, m, newFiles, sch)
+          .copy(dv = m.dv ++ written),
+        parent = Some(parent), tag = tag,
+        delta = Some((newFiles, retired)), txn = txn, cdcUpd = cdcUpd)
+    }
   }
 
   /** Merge-on-read UPDATE — [[updateWhere]]'s O(changed rows) twin and
@@ -2490,8 +2567,7 @@ object Manifests {
     val v = asOf.orElse(latestVersion(spark, base))
       .getOrElse(sys.error(s"no committed version under $base"))
     val lr = new LiveReader(spark, base, v)
-    import lr.{cur, sch, rd, liveOf}
-    val live = liveOf(cur)
+    val live = lr.liveOf(lr.cur)
     set.keys.foreach(k => require(
       live.columns.contains(k) && k != "__file" && k != "__pos",
       s"UPDATE sets unknown column '$k' — updates cannot add columns"))
@@ -2500,56 +2576,40 @@ object Manifests {
     // apply where the predicate translates), counting matches per
     // file; the live TOTALS — needed only to split retire-vs-vector —
     // come from a second, file-pruned pass over the affected files
-    val matchedPerFile = live.filter(hit).groupBy("__file").count()
+    val matched = live.filter(hit).groupBy("__file").count()
       .collect().map(r => (Dfs.canonical(r.getString(0)), r.getLong(1)))
-      .sortBy(_._1)
-    if (matchedPerFile.isEmpty) return (0, 0L, v) // no match: no version
-    val updated = matchedPerFile.map(_._2).sum
-    val affectedCanon = matchedPerFile.map(_._1).toSet
-    val affFiles = cur.filter(f => affectedCanon.contains(Dfs.canonical(f)))
-    val affLive = liveOf(affFiles)
-    val totals = lr.liveTotals(affFiles)
-    val matchedMap = matchedPerFile.toMap
-    val fullSet = affectedCanon.filter(f => totals.get(f).contains(matchedMap(f)))
-    val partialSet = affectedCanon -- fullSet
+      .toMap
+    if (matched.isEmpty) return (0, 0L, v) // no match: no version
+    val perFile = lr.withTotals(matched)
+    val updated = matched.values.sum
     // the NEW images: matched LIVE rows with the SET applied — read
     // from the AFFECTED files only (every match lives there), derived
     // from snapshot v before the commit loop, like every rewrite
     val fields = live.schema.fields
       .filterNot(f => f.name == "__file" || f.name == "__pos")
-    val images = affLive.filter(hit).select(fields.map { f =>
-      set.get(f.name)
-        .fold(col(s"`${f.name}`"))(_.cast(f.dataType))
-        .as(f.name)
-    }.toSeq: _*)
-    val dataDir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-    // size the image write by ROWS, not affected-file count: a spread
-    // update matching a few rows in each of 1,000 files must not write
-    // 1,000 near-empty image files (≈1M rows per output file, capped
-    // at the session's parallelism)
-    images.repartition(math.max(1,
-        math.min(spark.sparkContext.defaultParallelism,
-          math.ceil(updated / 1000000.0).toInt)))
-      .write.mode("errorifexists").parquet(dataDir)
-    val newFiles = Dfs.dataFiles(spark, dataDir).map(_.getPath.toString)
-    // SET expressions can mint violating values — validate the images
-    enforceConstraints(spark, base, Some(v), newFiles, sch)
-    // vectors for the boundary files only (file-pruned third pass)
-    val written = lr.writeVectors(partialSet)(_.filter(hit))
-    // commit: survivors + the new images, old vectors + this one's;
-    // the appended images extend the sidecars exactly like an append
-    // (stats/partition tuples/blooms derive for the new files only)
-    val nv = rebaseLoop(spark, base, v,
-      added => rd(added).filter(hit).limit(1).count() > 0) { parent =>
-      val (retired, kept) = files(spark, base, parent)
-        .partition(f => fullSet.contains(Dfs.canonical(f)))
-      val m = lr.carriedAt(parent)
-      commit(spark, base, kept ++ newFiles,
-        withAppended(spark, base, m, newFiles, sch)
-          .copy(dv = m.dv ++ written),
-        parent = Some(parent), delta = Some((newFiles, retired)))
-    }
-    (fullSet.size + partialSet.size, updated, nv)
+    val images = lr.liveOf(lr.pick(matched.contains)).filter(hit)
+      .select(fields.map { f =>
+        set.get(f.name)
+          .fold(col(s"`${f.name}`"))(_.cast(f.dataType))
+          .as(f.name)
+      }.toSeq: _*)
+    (perFile.size, updated, commitMor(lr, perFile, Left((images, updated)),
+      Left(_.filter(hit)),
+      added => lr.rd(added).filter(hit).limit(1).count() > 0))
+  }
+
+  /** The row count of a MERGE update batch, refusing duplicate keys —
+    * both from ONE aggregate over the batch (rows per key reduced to
+    * the largest group and the total). Null keys group together, as
+    * in SQL GROUP BY, so two null-key rows count as a duplicate. An
+    * empty batch counts 0 and passes. */
+  private def mergeBatchRows(updates: DataFrame, keyCols: Seq[String]): Long = {
+    val r = updates.groupBy(keyCols.map(col): _*).count()
+      .agg(max("count"), sum("count")).head()
+    require(r.isNullAt(0) || r.getLong(0) <= 1,
+      s"updates carry duplicate keys on (${keyCols.mkString(", ")}) — " +
+        "the merge result would depend on source row order")
+    if (r.isNullAt(1)) 0L else r.getLong(1)
   }
 
   /** Merge-on-read MERGE (upsert) — [[merge]]'s O(changed rows) twin
@@ -2572,72 +2632,40 @@ object Manifests {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val v = asOf.orElse(latestVersion(spark, base))
       .getOrElse(sys.error(s"no committed version under $base"))
-    if (updates.isEmpty) return (0, 0L, v)
-    val dupKeys = updates.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
-    require(dupKeys == 0,
-      s"updates carry duplicate keys on (${keyCols.mkString(", ")}) — " +
-        "the merge result would depend on source row order")
-    val batchRows = updates.count()
+    val batchRows = mergeBatchRows(updates, keyCols)
+    if (batchRows == 0L) return (0, 0L, v)
     val lr = new LiveReader(spark, base, v)
-    import lr.{cur, sch, rd, liveOf}
     val keys = updates.select(keyCols.map(col): _*)
-    val live = liveOf(cur)
     // discovery in ONE pass, [[deleteWhereMor]]'s per-file accounting:
     // live rows per file and how many of them a key of the batch
     // matches, through an outer join against the (dup-checked, so
     // row-preserving) key batch — column-pruned to the keys by
     // Catalyst, broadcast when the batch is small; null update keys
     // never match (SQL join equality)
-    val perFile = live.join(keys.withColumn("__hit", lit(true)), keyCols, "left_outer")
-      .groupBy("__file")
-      .agg(count(lit(1)).as("__total"), count(col("__hit")).as("__matched"))
-      .filter(col("__matched") > 0)
-      .collect()
-      .map(r => (Dfs.canonical(r.getString(0)), r.getLong(1), r.getLong(2)))
-    val fullSet = perFile.collect { case (f, t, m) if m == t => f }.toSet
-    val partialSet = perFile.collect { case (f, t, m) if m < t => f }.toSet
+    val perFile = lr.accounting(lr.liveOf(lr.cur)
+      .join(keys.withColumn("__hit", lit(true)), keyCols, "left_outer"),
+      count(col("__hit")))
     // the whole update batch lands as new files, aligned to the
     // RECORDED schema (order and types) — a missing column throws
     // rather than null-filling silently
-    val fields = sch.map(_.fields.toSeq)
+    val fields = lr.sch.map(_.fields.toSeq)
       .getOrElse(updates.schema.fields.toSeq)
     val images = updates.select(fields.map(f =>
       col(s"`${f.name}`").cast(f.dataType).as(f.name)): _*)
-    val dataDir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-    // size the batch write by its ROWS: a 600-row upsert lands as one
-    // file, a 50M-row insert-heavy batch keeps cluster parallelism
-    // instead of funneling through repartition(1)
-    images
-      .repartition(math.max(1,
-        math.min(spark.sparkContext.defaultParallelism,
-          math.ceil(batchRows / 1000000.0).toInt)))
-      .write.mode("errorifexists").parquet(dataDir)
-    val newFiles = Dfs.dataFiles(spark, dataDir).map(_.getPath.toString)
-    enforceConstraints(spark, base, Some(v), newFiles, sch)
-    val written = lr.writeVectors(partialSet)(_.join(keys, keyCols, "left_semi"))
-    val nv = rebaseLoop(spark, base, v,
-      added => rd(added)
+    (perFile.size, batchRows, commitMor(lr, perFile,
+      Left((images, batchRows)), Left(_.join(keys, keyCols, "left_semi")),
+      added => lr.rd(added)
         .select(keyCols.map(col): _*)
-        .join(keys, keyCols, "left_semi").limit(1).count() > 0) { parent =>
-      val (retired, kept) = files(spark, base, parent)
-        .partition(f => fullSet.contains(Dfs.canonical(f)))
-      val m = lr.carriedAt(parent)
-      commit(spark, base, kept ++ newFiles,
-        withAppended(spark, base, m, newFiles, sch)
-          .copy(dv = m.dv ++ written),
-        parent = Some(parent), tag = tag,
-        delta = Some((newFiles, retired)), txn = txn)
-    }
-    (fullSet.size + partialSet.size, batchRows, nv)
+        .join(keys, keyCols, "left_semi").limit(1).count() > 0,
+      tag = tag, txn = txn))
   }
 
   /** Publish a [[org.apache.spark.sql.connector.write.SupportsDelta]]
     * write — the commit half of native merge-on-read SQL DML: the
     * engine's tasks already streamed DELETE rowIds into `dvWritten`
     * sidecar parquet and INSERT/REINSERT images into `dataWritten`,
-    * and this turns them into ONE atomic manifest commit with the
-    * exact invariants of the procedural MoR tier:
+    * and [[commitMor]] turns them into ONE atomic manifest commit with
+    * the exact invariants of the procedural MoR tier:
     *
     *  - FULL-FILE ELISION (Delta's invariant): a file whose every
     *    live row is deleted RETIRES from the manifest instead of
@@ -2653,62 +2681,37 @@ object Manifests {
     *
     * Deletes are counted DISTINCT per (file, pos): the engine may
     * legally emit a duplicate action for the same row; the bitmap
-    * dedups and so must the elision arithmetic. Sidecar files whose
-    * every row points at retired files are dropped from the commit
-    * (their content is dead weight); callers' crashed residue is
-    * `sweepOrphans` fodder as usual. Returns (rows deleted, version). */
+    * dedups and so must the elision arithmetic. The statement's
+    * sidecars are adopted as written — all of them while some touched
+    * file stays partial, none when every touched file retires (their
+    * rows then address retired files only); callers' crashed residue
+    * is `sweepOrphans` fodder as usual. Returns (rows deleted,
+    * version). */
   private[graft] def commitDeltaWrite(spark: SparkSession, base: String,
       snapshot: Int, dvWritten: Seq[String], dataWritten: Seq[String],
       tag: Option[String], conflict: Option[Column],
       cdc: Option[(Seq[String], Seq[String])] = None): (Long, Int) = {
-    val v = snapshot
     if (dvWritten.isEmpty && dataWritten.isEmpty)
-      return (0L, v)
-    val lr = new LiveReader(spark, base, v)
-    import lr.{cur, sch, rd}
+      return (0L, snapshot)
+    val lr = new LiveReader(spark, base, snapshot)
     val delPerFile: Map[String, Long] =
       if (dvWritten.isEmpty) Map.empty
       else spark.read.parquet(dvWritten: _*)
         .groupBy("__file").agg(countDistinct(col("__pos")).as("n"))
         .collect()
         .map(r => (Dfs.canonical(r.getString(0)), r.getLong(1))).toMap
-    val affFiles = cur.filter(f => delPerFile.contains(Dfs.canonical(f)))
-    require(affFiles.map(Dfs.canonical).toSet == delPerFile.keySet,
-      s"delta write against $base@v$v references files outside the " +
-        "snapshot — the scan and the write disagree on the file set")
-    val totals = lr.liveTotals(affFiles)
-    var fullSet = delPerFile.keySet
-      .filter(f => totals.get(f).contains(delPerFile(f)))
-    var partialSet = delPerFile.keySet -- fullSet
-    // an empty manifest is unrepresentable: if the write deletes every
-    // live row of every file and appends nothing, one fully-dead file
-    // stays behind fully-vectored (deleteWhereMor's rule)
-    if (dataWritten.isEmpty && partialSet.isEmpty &&
-        fullSet.size == cur.size && fullSet.nonEmpty) {
-      val keep = fullSet.min
-      fullSet -= keep; partialSet += keep
-    }
-    if (dataWritten.nonEmpty)
-      enforceConstraints(spark, base, Some(v), dataWritten, sch)
-    val addDvs = if (partialSet.nonEmpty) dvWritten else Seq.empty
-    val deleted = delPerFile.values.sum
-    val nv = rebaseLoop(spark, base, v,
+    require(delPerFile.keySet.subsetOf(lr.cur.map(Dfs.canonical).toSet),
+      s"delta write against $base@v$snapshot references files outside " +
+        "the snapshot — the scan and the write disagree on the file set")
+    (delPerFile.values.sum, commitMor(lr, lr.withTotals(delPerFile),
+      Right(dataWritten), Right(dvWritten),
       added => conflict.map(c =>
-        rd(added).filter(coalesce(c, lit(false))).limit(1).count() > 0)
-        .getOrElse(true)) { parent =>
-      val (retired, kept) = files(spark, base, parent)
-        .partition(f => fullSet.contains(Dfs.canonical(f)))
-      val m = lr.carriedAt(parent)
-      commit(spark, base, kept ++ dataWritten,
-        withAppended(spark, base, m, dataWritten, sch)
-          .copy(dv = m.dv ++ addDvs),
-        parent = Some(parent), tag = tag,
-        delta = Some((dataWritten, retired)),
-        cdcUpd = cdc.map { case (post, updDv) =>
-          post.map(f => s"P\t${Dfs.canonical(f)}") ++
-            updDv.map(f => s"D\t${Dfs.canonical(f)}") })
-    }
-    (deleted, nv)
+        lr.rd(added).filter(coalesce(c, lit(false))).limit(1).count() > 0)
+        .getOrElse(true),
+      tag = tag,
+      cdcUpd = cdc.map { case (post, updDv) =>
+        post.map(f => s"P\t${Dfs.canonical(f)}") ++
+          updDv.map(f => s"D\t${Dfs.canonical(f)}") }))
   }
 
   /** GC — the companion every log-based format ships: [[deleteWhere]]
@@ -2948,23 +2951,13 @@ object Manifests {
       .filterNot(touched)
     val effRewritten =
       if (rewritten.nonEmpty || untouched.nonEmpty) rewritten
-      else {
-        // drop-everything edge: an empty manifest is unrepresentable, so
-        // materialize one empty file from the RECORDED schema (metadata
-        // only — same move as dropPartitions' drop-all branch)
-        val s = sch.getOrElse(
-          spark.read.parquet(files(spark, base, snapshot).head).schema)
-        val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-        spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-          .coalesce(1).write.mode("errorifexists").parquet(dir)
-        Dfs.dataFiles(spark, dir).map(_.getPath.toString)
-      }
+      // drop-everything edge: an empty manifest is unrepresentable
+      else stageEmpty(spark, base, snapshot)
     commitRewrite(spark, base, snapshot, touched, effRewritten, tag,
       conflictsWith)
   }
 
-  /** The retry skeleton under [[commitRewrite]] and the MoR delete:
+  /** The retry skeleton under [[commitRewrite]] and [[commitMor]]:
     * run `attempt(parent)` starting from `snapshot`; on losing the CAS,
     * advance `parent` to the latest version iff every winner was a pure
     * append whose files clear `conflictsWith` — each appended file is
@@ -3104,11 +3097,7 @@ object Manifests {
         "materialize them; merge's file arithmetic assumes every row " +
         "in a data file is live")
     val cur = files(spark, base, v).map(Dfs.canonical)
-    val dupKeys = updates.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
-    require(dupKeys == 0,
-      s"updates carry duplicate keys on (${keyCols.mkString(", ")}) — " +
-        "the merge result would depend on source row order")
+    val batchRows = mergeBatchRows(updates, keyCols)
     val keys = updates.select(keyCols.map(col): _*)
     val ren = renamesOf(spark, base, v)
     def rd(fs: Seq[String]) =
@@ -3126,11 +3115,8 @@ object Manifests {
       else rd(affected.toSeq)
         .join(keys, keyCols, "left_anti")
         .unionByName(updates)
-    val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-    survivors
-      .repartition(math.max(1, affected.size))
-      .write.mode("errorifexists").parquet(dir)
-    val rewritten = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
+    val rewritten = stageData(base,
+      survivors.repartition(math.max(1, affected.size)))
     // merged-in updates and inserts are new row images — validate them
     enforceConstraints(spark, base, Some(v), rewritten,
       schemaOf(spark, base, v))
@@ -3139,7 +3125,7 @@ object Manifests {
         .select(keyCols.map(col): _*)
         .join(keys, keyCols, "left_semi").limit(1).count() > 0,
       txn = txn)
-    (affected.size, updates.count(), nv)
+    (affected.size, batchRows, nv)
   }
 
   /** Exactly-once CDC apply — one upsert micro-batch against the table,
@@ -3564,7 +3550,6 @@ object Manifests {
             small.map(f => sized(Dfs.canonical(f))).sum.toDouble /
               targetBytes).toInt)
           val m = meta(spark, base, snap).carried
-          val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
           // a single-tuple group rewrites to single-tuple outputs, so
           // the SPJ purity proof survives the policy pass — and when
           // the proof does NOT hold (the table-wide group of a
@@ -3573,14 +3558,11 @@ object Manifests {
           // CREATES purity for every file it touches instead of
           // cementing the mixed layout
           val rd0 = eraRead(spark, m.renames, small, m.schema)
-          m.partValues.map(_._1) match {
+          val rewritten = m.partValues.map(_._1) match {
             case Some(specs) if groups.lengthCompare(1) == 0 =>
-              writeSplitByTuple(rd0, dir, specs, math.max(nOut, 1))
-            case _ =>
-              rd0.repartition(nOut)
-                .write.mode("errorifexists").parquet(dir)
+              stageData(base, rd0, Some((specs, math.max(nOut, 1))))
+            case _ => stageData(base, rd0.repartition(nOut))
           }
-          val rewritten = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
           val smallSet = small.map(Dfs.canonical).toSet
           val untouched = curFiles.filterNot(f =>
             smallSet.contains(Dfs.canonical(f)))
@@ -4258,12 +4240,9 @@ object Manifests {
     if (affected.isEmpty) return (0, cur.size, v)
     // null predicate values SURVIVE (same contract as Deletes)
     val survivorPred = !coalesce(pred, lit(false))
-    val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-    rd(affected.toSeq)
+    val rewritten = stageData(base, rd(affected.toSeq)
       .filter(survivorPred)
-      .repartition(math.max(1, affected.size))
-      .write.mode("errorifexists").parquet(dir)
-    val rewritten = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
+      .repartition(math.max(1, affected.size)))
     val nv = commitRewrite(spark, base, v, affected, rewritten, None,
       added => rd(added)
         .filter(coalesce(pred, lit(false))).limit(1).count() > 0)
@@ -4330,30 +4309,20 @@ object Manifests {
     def rd(fs: Seq[String]) =
       eraRead(spark, renamesOf(spark, base, v), fs,
         schemaOf(spark, base, v))
-    val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
     val rewritten =
       if (boundary.isEmpty && carried.nonEmpty) Seq.empty[String]
-      else if (boundary.isEmpty) {
-        // drop-EVERYTHING: no survivor can exist by classification, so
-        // honor the metadata-only contract in this edge too — the one
-        // empty file an empty table's manifest needs is constructed from
-        // the RECORDED schema, not by scanning every data file through a
-        // filter that provably keeps nothing
-        val sch = schemaOf(spark, base, v)
-          .getOrElse(spark.read.parquet(cur.head).schema)
-        spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-          .coalesce(1).write.mode("errorifexists").parquet(dir)
-        Dfs.dataFiles(spark, dir).map(_.getPath.toString)
-      } else {
-        // boundary survivors only — the predicate speaks the TUPLE
-        // domain, so transformed tuples derive from the data first
-        // (identity specs read the raw columns unchanged)
+      // drop-EVERYTHING: no survivor can exist by classification, so
+      // honor the metadata-only contract in this edge too — the one
+      // empty file an empty table's manifest needs is constructed from
+      // the RECORDED schema, not by scanning every data file through a
+      // filter that provably keeps nothing
+      else if (boundary.isEmpty) stageEmpty(spark, base, v)
+      // boundary survivors only — the predicate speaks the TUPLE
+      // domain, so transformed tuples derive from the data first
+      // (identity specs read the raw columns unchanged)
+      else stageData(base,
         tupleDomainFilter(rd(boundary), pvCols, hit, keep = false)
-          .repartition(math.max(1, boundary.size))
-          .write.mode("errorifexists").parquet(dir)
-        Dfs.dataFiles(spark, dir).map(_.getPath.toString)
-      }
+          .repartition(math.max(1, boundary.size)))
     val nv = commitRewrite(spark, base, v,
       dropped ++ boundary ++ (if (carried.isEmpty) cur.toSet else Set.empty),
       rewritten, None,
@@ -4408,9 +4377,7 @@ object Manifests {
     // loudly instead of committing unreadable files)
     val aligned = sch.fold(data)(s0 =>
       data.select(s0.fieldNames.toIndexedSeq.map(n => col(s"`$n`")): _*))
-    val dirNew = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-    aligned.write.mode("errorifexists").parquet(dirNew)
-    val added = Dfs.dataFiles(spark, dirNew).map(_.getPath.toString).toSeq
+    val added = stageData(base, aligned)
     // Delta replaceWhere containment, checked on the WRITTEN BYTES (not
     // the incoming query): the input runs once, and a non-deterministic
     // source cannot pass a pre-write check yet materialize out-of-region
@@ -4420,7 +4387,8 @@ object Manifests {
     if (added.nonEmpty &&
         sch.fold(spark.read)(spark.read.schema(_)).parquet(added: _*)
           .filter(!hit).limit(1).count() > 0) {
-      Dfs.delete(spark, dirNew, recursive = true)
+      Dfs.delete(spark, new org.apache.hadoop.fs.Path(added.head).getParent
+        .toString, recursive = true)
       sys.error(s"INSERT OVERWRITE into $base: the incoming data " +
         "contains rows outside the overwrite predicate — every inserted " +
         "row must match it (Delta replaceWhere contract), or rows would " +
@@ -4547,13 +4515,8 @@ object Manifests {
       tupleDomainFilter(df, pv._1, hit, keep)
     val survivors =
       if (boundary.isEmpty) Seq.empty[String]
-      else {
-        val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-        dataHit(rd(boundary), keep = false)
-          .repartition(math.max(1, boundary.size))
-          .write.mode("errorifexists").parquet(dir)
-        Dfs.dataFiles(spark, dir).map(_.getPath.toString).toSeq
-      }
+      else stageData(base, dataHit(rd(boundary), keep = false)
+        .repartition(math.max(1, boundary.size)))
     replaceFiles(spark, base, v, (dropped ++ boundary).toSet,
       survivors ++ added, tag = Some("sql:insert_overwrite"),
       conflictsWith = fresh =>
@@ -4606,16 +4569,13 @@ object Manifests {
     if (affected.isEmpty) return (0, 0L, v)
     val touched = rd(affected.toSeq)
     val updatedRows = touched.filter(hit).count()
-    val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-    touched.select(touched.schema.fields.map { f =>
+    val rewritten = stageData(base, touched.select(touched.schema.fields.map { f =>
       set.get(f.name)
         .fold(col(f.name))(e =>
           when(hit, e.cast(f.dataType)).otherwise(col(f.name)))
         .as(f.name)
     }.toSeq: _*)
-      .repartition(math.max(1, affected.size))
-      .write.mode("errorifexists").parquet(dir)
-    val rewritten = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
+      .repartition(math.max(1, affected.size)))
     // SET expressions can mint violating values — validate the
     // rewritten images (cost ∝ rewritten bytes, already paid as I/O)
     enforceConstraints(spark, base, Some(v), rewritten,
@@ -5230,6 +5190,7 @@ object Manifests {
       snapshot: Option[Int], newFiles: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
       overwrite: Boolean = false): Unit = {
+    if (newFiles.isEmpty) return
     val cs = snapshot.filter(_ >= 0)
       .map(constraintsOf(spark, base, _)).getOrElse(Seq.empty)
     // NOT NULL is table metadata like the CHECK set: fields the
@@ -5245,7 +5206,7 @@ object Manifests {
         .flatMap(schemaOf(spark, base, _))
         .map(_.fields.filterNot(_.nullable).map(_.name).toSeq)
         .getOrElse(Seq.empty)
-    if ((cs.isEmpty && nn.isEmpty) || newFiles.isEmpty) return
+    if (cs.isEmpty && nn.isEmpty) return
     val df = schema.fold(spark.read)(spark.read.schema(_))
       .parquet(newFiles: _*)
     val nnMissing = nn.filterNot(df.columns.contains)
@@ -5641,11 +5602,8 @@ object Manifests {
     val m = meta(spark, base, v).carried
     val nOut = math.max(1,
       math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
-    val dir = s"$base/data_${java.util.UUID.randomUUID().toString.take(8)}"
-    eraRead(spark, m.renames, small.map(_._1), m.schema)
-      .repartition(nOut)
-      .write.mode("errorifexists").parquet(dir)
-    val rewritten = Dfs.dataFiles(spark, dir).map(_.getPath.toString)
+    val rewritten = stageData(base,
+      eraRead(spark, m.renames, small.map(_._1), m.schema).repartition(nOut))
     val untouched = big.map(_._1)
     // content-preserving like compact(): same rows, fewer files
     val nv = commit(spark, base, untouched ++ rewritten,

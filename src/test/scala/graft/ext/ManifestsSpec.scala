@@ -884,6 +884,51 @@ class ManifestsSpec extends AnyFunSuite {
       Manifests.deleteWhereMor(spark, b, col("k") === 4, asOf = Some(2)))
   }
 
+  test("MoR update and merge rebase across disjoint appends; matching appended rows refuse") {
+    import spark.implicits._
+    val b = base("graft_man_morreb_um")
+    Manifests.commitData(
+      (1 to 100).map(i => (i.toLong, i % 10)).toDF("id", "k"), b)
+    assert(Manifests.appendBatch(
+      Seq((1000L, 99)).toDF("id", "k"), b, 0L) === Some(1))
+    // an update derived from snapshot 0, committed over the append at v1
+    val (_, updated, uv) = Manifests.updateWhereMor(spark, b,
+      col("k") === 3, Map("k" -> lit(30)), asOf = Some(0))
+    assert(updated === 10L && uv === 2)
+    val afterUpdate = Manifests.readLatest(spark, b)
+    assert(afterUpdate.count() === 101, "100 + 1 appended, updates in place")
+    assert(afterUpdate.filter(col("k") === 3).count() === 0)
+    assert(afterUpdate.filter(col("k") === 30).count() === 10)
+    assert(afterUpdate.filter(col("k") === 99).count() === 1, "append survives")
+    // a merge derived from v2, committed over an append at v3 whose
+    // keys the batch does not share
+    assert(Manifests.appendBatch(
+      Seq((2000L, 98)).toDF("id", "k"), b, 1L) === Some(3))
+    val (_, rows, mv) = Manifests.mergeMor(spark, b,
+      Seq((5L, 50), (3000L, 7)).toDF("id", "k"), Seq("id"), asOf = Some(2))
+    assert(rows === 2L && mv === 4)
+    val afterMerge = Manifests.readLatest(spark, b)
+    assert(afterMerge.count() === 103, "101 + 1 appended + 1 inserted")
+    assert(afterMerge.filter(col("id") === 5L).select("k").as[Int]
+      .collect().toSeq === Seq(50))
+    assert(afterMerge.filter(col("id") === 2000L).count() === 1,
+      "append survives")
+    // an appended row the update predicate matches → refuse
+    assert(Manifests.appendBatch(
+      Seq((4000L, 4)).toDF("id", "k"), b, 2L) === Some(5))
+    intercept[ConcurrentCommitException](Manifests.updateWhereMor(spark, b,
+      col("k") === 4, Map("k" -> lit(40)), asOf = Some(4)))
+    // an appended row sharing a merge key → refuse
+    assert(Manifests.appendBatch(
+      Seq((6000L, 6)).toDF("id", "k"), b, 3L) === Some(6))
+    intercept[ConcurrentCommitException](Manifests.mergeMor(spark, b,
+      Seq((6000L, 60)).toDF("id", "k"), Seq("id"), asOf = Some(5)))
+    assert(Manifests.latestVersion(spark, b) === Some(6),
+      "a refused commit burns no version")
+    assert(Manifests.updateWhereMor(spark, b, col("k") === -1,
+      Map("k" -> lit(0))) === ((0, 0L, 6)), "no match burns no version")
+  }
+
   test("history and timestamp time travel: versions resolve by commit time, version order wins on ties") {
     import spark.implicits._
     val b = base("graft_man_asof")
